@@ -3,7 +3,8 @@ package graft.api
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.Literal
 
 import graft.engine.{Codec, FossilEngine, FossilSchema, ParquetStore, SchemaViolationException}
 import graft.fql.Compiler
@@ -32,23 +33,14 @@ final class LocalClient(
   /** APPEND one datum (reference `db.Append`, `pkg/database/db.go:486-535`);
     * topic auto-creates with schema inheritance. Timestamp defaults to the
     * client clock like the reference's server-assigned time. */
-  def append(topic: String, value: Any, time: Timestamp = null): Unit = {
-    val at = if (time != null) time
-      else new Timestamp(Math.floorDiv(clock(), 1000000L))
-    val schema = store.catalog.ensure(topic)
-    appendBatch(Seq(Row(at, topic, value)), schema.ddl)
-  }
+  def append(topic: String, value: Any, time: Timestamp = null): Unit =
+    store.append(Seq(Row(timeOrNow(time), topic, value)), store.catalog.effective(topic))
 
-  /** Bulk APPEND of `(time, topic, value)` rows sharing one schema DDL. */
-  def appendBatch(rows: Seq[Row], ddl: String): Unit = {
-    val st = FossilSchema.parse(ddl)
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, math.max(1, rows.size / 10000)),
-      StructType(Seq(
-        StructField("time", TimestampType), StructField("topic", StringType),
-        StructField("value", st.sparkType))))
-    store.append(df, st)
-  }
+  /** Bulk APPEND of `(time, topic, value)` rows sharing one schema DDL,
+    * landed from the driver without a Spark job
+    * ([[graft.engine.ParquetStore.append]]). */
+  def appendBatch(rows: Seq[Row], ddl: String): Unit =
+    store.append(rows, FossilSchema.parse(ddl))
 
   /** Bulk APPEND of an entries DataFrame `(time, topic, value)` sharing one
     * schema DDL — the distributed ingest path (no rows through the driver);
@@ -60,26 +52,22 @@ final class LocalClient(
     * (`pkg/database/db.go:489-495` → `pkg/schema/objects.go:101-134`).
     * `bytes` must validate against the topic's catalog schema — rejected
     * with a typed [[SchemaViolationException]] otherwise — and good bytes
-    * are decoded through the [[FossilDecode]] wire codec into the typed
-    * store, so a later query returns the same value the bytes encoded. */
+    * are decoded on the driver through the [[FossilDecode]] wire codec
+    * into the typed store, so a later query returns the same value the
+    * bytes encoded. */
   def appendRaw(topic: String, bytes: Array[Byte], time: Timestamp = null): Unit = {
-    val schema = store.catalog.ensure(topic)
+    val schema = store.catalog.effective(topic)
     if (!Codec.validates(schema, bytes))
       throw new SchemaViolationException(
         s"append of ${bytes.length} bytes does not conform to topic $topic " +
           s"schema ${schema.ddl}")
-    val at = if (time != null) time
-      else new Timestamp(Math.floorDiv(clock(), 1000000L))
-    import org.apache.spark.sql.functions.col
-    val raw = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(Row(at, topic, bytes)), 1),
-      StructType(Seq(
-        StructField("time", TimestampType), StructField("topic", StringType),
-        StructField("value", BinaryType))))
-    val typed = raw.select(col("time"), col("topic"),
-      FossilDecode(schema.ddl, col("value")).as("value"))
-    store.append(typed, schema)
+    val value = CatalystTypeConverters.convertToScala(
+      FossilDecode(schema.ddl, Literal(bytes)).eval(), schema.sparkType)
+    store.append(Seq(Row(timeOrNow(time), topic, value)), schema)
   }
+
+  private def timeOrNow(time: Timestamp): Timestamp =
+    if (time != null) time else new Timestamp(Math.floorDiv(clock(), 1000000L))
 
   def createTopic(path: String, ddl: String = "string"): Unit =
     store.createTopic(path, ddl)

@@ -281,10 +281,12 @@ final class WireServer(
     * (`pkg/database/result.go:31-33`). Array schemas arrive with length 0
     * (Spark's ArrayType has no fixed length) and are resolved to the
     * actual per-row length here; null values (ambiguous-schema prefix
-    * scans surface opaque nulls) encode as empty data. */
+    * scans surface opaque nulls) encode as empty data. A null time (the
+    * synthetic entry a reduce emits) renders as Go's zero `time.Time`,
+    * which is what the reference's reduce entry carries. */
   private def entryLine(r: org.apache.spark.sql.Row, schema: FossilSchema.SType): String = {
     import FossilSchema.SArray
-    val t = r.getAs[Timestamp]("time").toInstant
+    val t = Option(r.getAs[Timestamp]("time")).fold(WireServer.ZeroTime)(_.toInstant)
     val topic = r.getAs[String]("topic")
     val v = r.get(r.fieldIndex("value"))
     val rowSchema = (schema, v) match {
@@ -313,6 +315,9 @@ object WireServer {
     Set("VERSION", "USE", "LIST", "STATS", "CREATE", "APPEND", "QUERY", "METRICS")
   /** 100 MiB, both directions (reference cap `pkg/proto/message.go:96-98`). */
   val MaxMessageBytes: Int = 100 * 1024 * 1024
+
+  /** Go's zero `time.Time`, `0001-01-01T00:00:00Z`. */
+  private[api] val ZeroTime: java.time.Instant = java.time.Instant.parse("0001-01-01T00:00:00Z")
 
   private[api] val EntryTimeFormat =
     DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")

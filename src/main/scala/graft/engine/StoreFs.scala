@@ -135,6 +135,23 @@ object StoreFs {
       throw new java.io.IOException(s"rename failed: $src -> $dst")
   }
 
+  /** Publish a data file written under a hidden temp name: one rename,
+    * destination must not exist. Unlike the control-plane calls this runs
+    * on the path's own filesystem, checksummed wrapper included: that is
+    * the filesystem Spark's Parquet writer wrote the file through, so a
+    * local `.crc` sidecar follows its file, as in Spark's committer. */
+  def publishFile(tmp: String, dst: String): Unit = {
+    if (!new Path(tmp).getFileSystem(conf()).rename(new Path(tmp), new Path(dst)))
+      throw new java.io.IOException(s"rename failed: $tmp -> $dst")
+  }
+
+  /** Best-effort delete of an unpublished data file and its checksum
+    * sidecar ([[publishFile]]'s filesystem); absent is fine. */
+  def discardFile(tmp: String): Unit = {
+    val hp = new Path(tmp)
+    hp.getFileSystem(conf()).delete(hp, false)
+  }
+
   def deleteRecursive(p: String): Unit = {
     val f = fs(p)
     val hp = new Path(p)

@@ -2,7 +2,7 @@ package graft.engine
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -44,8 +44,20 @@ final class ViewStore(df: DataFrame, val catalog: Catalog) extends TopicStore {
   *
   * The topic registry persists as a JSON sidecar `root/catalog.json`
   * (analog of fossil's serialized topic/schema tables,
-  * `pkg/database/db.go:243-410`); durability of data comes from Parquet's
-  * atomic commit protocol, replacing the reference WAL (`pkg/database/log.go`).
+  * `pkg/database/db.go:243-410`), rewritten only when an append or CREATE
+  * registers a topic, and always before that topic's data lands.
+  *
+  * Data lands on one of two paths, picked by the input type:
+  *   - rows already on the driver (`Seq[Row]`: single APPENDs, wire-import
+  *     pages) are written in-process by Spark's own Parquet writer, one
+  *     file per topic, with no Spark job ([[DriverLanding]]);
+  *   - a `DataFrame` (bulk and streaming ingest) is written by a Spark job
+  *     through Spark's file commit protocol.
+  * Both commit by rename: a file is written under a hidden name (a
+  * dot-prefixed temp file here, Spark's `_temporary` directory there) and
+  * renamed into its `topic=` directory, so a reader sees whole files only.
+  * Files are closed without fsync on both paths; this replaces the
+  * reference WAL (`pkg/database/log.go`).
   */
 final class ParquetStore(spark: SparkSession, root: String) extends TopicStore {
   // open = version check + migration chain BEFORE anything reads the
@@ -66,8 +78,28 @@ final class ParquetStore(spark: SparkSession, root: String) extends TopicStore {
     persistCatalog()
   }
 
-  /** Batch append: rows `(time TIMESTAMP, topic STRING, value T)` sharing one
-    * append-side schema. Auto-creates topics (inheritance rules apply).
+  /** Batch append of rows already on the driver: `(time, topic, value)`
+    * external values typed by `schema`, e.g. a `java.sql.Timestamp`, a
+    * `String` and a `Double`. Auto-creates topics (inheritance rules
+    * apply). Lands through [[DriverLanding]]: no Spark job, one file per
+    * topic, values cast to the topic's catalog schema (see the
+    * `DataFrame` overload for why). A value that fails to convert or cast,
+    * or a failed write, leaves no file and registers no topic. */
+  def append(rows: Seq[Row], schema: SType): Unit = synchronized {
+    val maxTopics = ParquetStore.maxTopicsPerAppend
+    val targets = targetsOf(
+      rows.iterator.map(_.getString(1)).distinct.take(maxTopics + 1).toSeq, schema)
+    val staged = DriverLanding.stage(spark,
+      DriverLanding.prepare(spark, rows, schema, targets), groupDir)
+    try register(targets.keys.toSeq)
+    catch { case e: Throwable => DriverLanding.discard(staged); throw e }
+    DriverLanding.publish(staged)
+  }
+
+  /** Batch append of a distributed frame: rows `(time TIMESTAMP, topic
+    * STRING, value T)` sharing one append-side schema, written by a Spark
+    * job through Spark's commit protocol. Auto-creates topics (inheritance
+    * rules apply).
     *
     * Data ALWAYS lands under each topic's CATALOG schema group (values cast
     * to the topic schema) — never the append-call schema's group: `entries`
@@ -87,29 +119,10 @@ final class ParquetStore(spark: SparkSession, root: String) extends TopicStore {
     // is fully recomputed per consumer
     val cached = rows.select(col("time"), col("topic"), col("value")).cache()
     try {
-      val topics = cached.select("topic").distinct().limit(maxTopics + 1)
-        .collect().map(_.getString(0))
-      if (topics.length > maxTopics)
-        throw new IllegalArgumentException(
-          s"append spans more than $maxTopics distinct topics — topic looks " +
-            "data-keyed, not namespace-keyed (cap: graft.store.maxTopicsPerAppend)")
-      // validate EVERY topic against its would-be schema BEFORE registering
-      // any: a rejected append must not leave phantom auto-created topics
-      // in the catalog (they would persist on the next successful write and
-      // permanently block creating the intended schema).
-      val topicSchema = topics.map { t =>
-        val target = catalog.effective(t)
-        // appends must fit LOSSLESSLY (FossilSchema.fits): `combine` ranks
-        // same-width signed/unsigned equal and would admit casts that throw
-        // under ANSI or change values — the reference rejects bytes that
-        // don't validate against the topic schema.
-        if (!FossilSchema.fits(schema, target))
-          throw new IllegalArgumentException(
-            s"append schema ${schema.ddl} does not fit topic $t schema ${target.ddl}")
-        t -> target
-      }.toMap
-      topics.foreach(catalog.ensure)
-      persistCatalog()
+      val topicSchema = targetsOf(
+        cached.select("topic").distinct().limit(maxTopics + 1)
+          .collect().map(_.getString(0)).toSeq, schema)
+      register(topicSchema.keys.toSeq)
       topicSchema.values.toSeq.distinct.foreach { target =>
         val forGroup = topicSchema.collect { case (t, s) if s == target => t }.toSeq
         cached.filter(col("topic").isInCollection(forGroup))
@@ -120,6 +133,42 @@ final class ParquetStore(spark: SparkSession, root: String) extends TopicStore {
           .parquet(groupDir(target))
       }
     } finally cached.unpersist()
+  }
+
+  /** Each appended topic's catalog schema (the one [[Catalog.ensure]]
+    * would assign), after the distinct-topic cap and the lossless-fit
+    * check. EVERY topic is validated BEFORE any is registered: a rejected
+    * append must not leave phantom auto-created topics in the catalog (they
+    * would persist on the next successful write and permanently block
+    * creating the intended schema). */
+  private def targetsOf(topics: Seq[String], schema: SType): Map[String, SType] = {
+    val maxTopics = ParquetStore.maxTopicsPerAppend
+    if (topics.length > maxTopics)
+      throw new IllegalArgumentException(
+        s"append spans more than $maxTopics distinct topics — topic looks " +
+          "data-keyed, not namespace-keyed (cap: graft.store.maxTopicsPerAppend)")
+    topics.map { t =>
+      val target = catalog.effective(t)
+      // appends must fit LOSSLESSLY (FossilSchema.fits): `combine` ranks
+      // same-width signed/unsigned equal and would admit casts that throw
+      // under ANSI or change values — the reference rejects bytes that
+      // don't validate against the topic schema.
+      if (!FossilSchema.fits(schema, target))
+        throw new IllegalArgumentException(
+          s"append schema ${schema.ddl} does not fit topic $t schema ${target.ddl}")
+      t -> target
+    }.toMap
+  }
+
+  /** Register the topics the catalog does not know yet and persist the
+    * sidecar before their data lands; an append to known topics leaves
+    * `catalog.json` untouched. */
+  private def register(topics: Seq[String]): Unit = {
+    val fresh = topics.filter(catalog.schemaOf(_).isEmpty)
+    if (fresh.nonEmpty) {
+      fresh.foreach(catalog.ensure)
+      persistCatalog()
+    }
   }
 
   /** Entries of EXACTLY one topic, typed by that topic's OWN schema — no
@@ -135,10 +184,8 @@ final class ParquetStore(spark: SparkSession, root: String) extends TopicStore {
     if (!StoreFs.exists(d))
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("time", TimestampType), StructField("topic", StringType),
-          StructField("value", schema.sparkType))))
-    else spark.read.parquet(d)
+        ParquetStore.entrySchema(schema.sparkType))
+    else readGroup(schema, d)
       .filter(col("topic") === t) // partition-column prune
       .select(col("time"), col("topic").cast(StringType).as("topic"), col("value"))
   }
@@ -156,9 +203,7 @@ final class ParquetStore(spark: SparkSession, root: String) extends TopicStore {
       }
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("time", TimestampType), StructField("topic", StringType),
-          StructField("value", combined.sparkType))))
+        ParquetStore.entrySchema(combined.sparkType))
     }
     val combined = FossilSchema.combineAll(groups.map(_._1))
     val target: DataType = combined match {
@@ -166,7 +211,7 @@ final class ParquetStore(spark: SparkSession, root: String) extends TopicStore {
       case s => s.sparkType
     }
     groups.map { case (s, dir) =>
-      val df = spark.read.parquet(dir)
+      val df = readGroup(s, dir)
       val v = combined match {
         case SAmbiguous => lit(null).cast(BinaryType).as("value") // opaque
         // sameType = equal modulo nullability: parquet reads arrays back
@@ -184,6 +229,12 @@ final class ParquetStore(spark: SparkSession, root: String) extends TopicStore {
       // prunes at the file index rather than filtering rows)
       .filter(col("topic").isInCollection(wanted))
   }
+
+  /** One schema group's files, read with the catalog's schema: the group
+    * directory is keyed by that schema and every file in it was written
+    * with it, so Spark needs no footer-inference job to find it. */
+  private def readGroup(s: SType, dir: String): DataFrame =
+    spark.read.schema(ParquetStore.entrySchema(s.sparkType)).parquet(dir)
 
   /** Maintenance: rewrite every schema group's accumulated small append
     * files (each [[append]] / streaming micro-batch lands at least one file
@@ -242,8 +293,8 @@ final class ParquetStore(spark: SparkSession, root: String) extends TopicStore {
     * then deleted mid-walk throws from the stream and would fail the
     * whole metrics scrape — the scrape briefly waiting on the store lock
     * beats a failed scrape); dot- and underscore-prefixed components
-    * (mid-compact temp trees, Spark `_temporary` staging) are skipped
-    * the same way Spark scans skip them. */
+    * (mid-compact temp trees, landing temp files, Spark `_temporary`
+    * staging) are skipped the same way Spark scans skip them. */
   def segmentCount: Long = {
     val dataDir = s"$root/data"
     if (!StoreFs.exists(dataDir)) return 0L
@@ -283,6 +334,11 @@ object ParquetStore {
     * JVM-wide, overridable for tests via the system property. */
   def maxTopicsPerAppend: Int =
     sys.props.get("graft.store.maxTopicsPerAppend").map(_.toInt).getOrElse(100000)
+
+  /** The canonical entries schema `(time, topic, value)`. */
+  private[engine] def entrySchema(value: DataType): StructType = StructType(Seq(
+    StructField("time", TimestampType), StructField("topic", StringType),
+    StructField("value", value)))
 
   /** Type equality ignoring nullability flags (Spark's own sameType is
     * private[sql]). */

@@ -453,9 +453,6 @@ object Similarity {
         col("__w.a").as("witness"), col("__w.cos_e6").as("cos_e6"))
   }
 
-  /** Exact brute-force top-k: for every query row, the k nearest corpus
-    * rows by (sim_e6 desc, id asc), self-matches excluded.
-    * Output: (q, rank, id, sim_e6). */
   /** Parallelism insurance for the NLJ-scan family (same contract as
     * [[Dedup.spread]]): the corpus side of a broadcast-queries scan
     * inherits the SCAN's partitioning, and a small-file corpus (one
@@ -471,6 +468,9 @@ object Similarity {
         df.sparkSession.sparkContext.defaultParallelism) df
     else df.repartition(col(idCol))
 
+  /** Exact brute-force top-k: for every query row, the k nearest corpus
+    * rows by (sim_e6 desc, id asc), self-matches excluded.
+    * Output: (q, rank, id, sim_e6). */
   def bruteForceTopK(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {

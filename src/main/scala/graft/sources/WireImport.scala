@@ -60,7 +60,8 @@ import graft.api.{LocalClient, RemoteClient, WireEntry, WireException}
   * `importInto(..., resume = true)` skips topics/windows at or below the
   * mark and re-lands only the missing SUFFIX of an interrupted page:
   * within a page, schema groups land sequentially in sorted-DDL order and
-  * each landing is one atomic Spark write job, so the landed prefix is
+  * each landing is one all-or-nothing driver-side append (no Spark job,
+  * see [[graft.engine.ParquetStore.append]]), so the landed prefix is
   * identified by comparing the target's in-window entry count against the
   * strictly-increasing prefix sums of the re-fetched groups. Resume
   * assumes the import is the only writer of those topics and the source

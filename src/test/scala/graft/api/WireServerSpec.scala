@@ -431,4 +431,43 @@ class WireServerSpec extends SparkSpec {
       sock.close()
     } finally server.close()
   }
+
+  test("QUERY of a reduce pipeline: one N/A entry at Go's zero time carrying the result") {
+    val root = Files.createTempDirectory("graft_wire_reduce").toString
+    val server = new WireServer(spark, Map("a" -> root), "a", fixedClock)
+    val client = new RemoteClient("127.0.0.1", server.port, db = "a", poolSize = 1)
+    try {
+      client.create("/red", "float64")
+      Seq(1.5, 2.5, 3.5).foreach(v => client.append("/red", Codec.encode(FossilSchema.SFloat64, v)))
+      // agg-shaped (native aggregate) and general-fold reduces both emit a
+      // synthetic entry with a null time
+      val Seq(count) = client.query("all in /red | map e -> 1 | reduce a, b -> a + b")
+      assert(count.topic == "N/A" && count.decoded == 3L)
+      assert(count.time == java.time.Instant.parse("0001-01-01T00:00:00Z"))
+      val Seq(product) = client.query("all in /red | reduce a, b -> a * b")
+      assert(product.topic == "N/A" && product.decoded == 1.5 * 2.5 * 3.5)
+      assert(product.time == count.time)
+    } finally { client.close(); server.close() }
+  }
+
+  test("wire APPENDs land without a Spark job") {
+    val root = Files.createTempDirectory("graft_wire_nojob").toString
+    var server: WireServer = null
+    var client: RemoteClient = null
+    try {
+      // created inside the probe: the server's threads inherit its marker
+      val jobs = jobsDuring {
+        server = new WireServer(spark, Map("a" -> root), "a", fixedClock)
+        client = new RemoteClient("127.0.0.1", server.port, db = "a", poolSize = 1)
+        client.create("/nj", "float64")
+        (1 to 3).foreach(i => client.append(s"/nj/t$i", Codec.encode(FossilSchema.SFloat64, i.toDouble)))
+        client.append("/nj/t1", Codec.encode(FossilSchema.SFloat64, 4.0))
+      }
+      assert(jobs == 0)
+      assert(client.query("all in /nj").map(_.decoded).toSet == Set(1.0, 2.0, 3.0, 4.0))
+    } finally {
+      if (client != null) client.close()
+      if (server != null) server.close()
+    }
+  }
 }

@@ -3,6 +3,13 @@ package graft.engine
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+
 import graft.SparkSpec
 import graft.api.LocalClient
 import graft.fql.Compiler
@@ -402,5 +409,191 @@ class StoreSpec extends SparkSpec {
       e.getMessage.contains(StoreMigration.CurrentVersion.toString))
     // the refused open must not have rewritten the sidecar
     assert(ParquetStore.loadCatalog(root)._2 == 99)
+  }
+
+  /** Every data file under `root/data` whose name is not hidden. */
+  private def visibleFiles(root: String): Seq[java.nio.file.Path] = {
+    val data = java.nio.file.Paths.get(root, "data")
+    if (!Files.exists(data)) Seq.empty
+    else {
+      val st = Files.walk(data)
+      try st.iterator().asScala.filter(Files.isRegularFile(_)).filter { f =>
+        val n = f.getFileName.toString
+        !n.startsWith(".") && !n.startsWith("_")
+      }.toList finally st.close()
+    }
+  }
+
+  private def topicFiles(root: String, topic: String): Seq[java.nio.file.Path] = {
+    val dir = ExternalCatalogUtils.getPartitionPathString("topic", topic)
+    visibleFiles(root).filter(_.getParent.getFileName.toString == dir)
+  }
+
+  /** Collected rows with binary and NaN values made comparable. */
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case f: Float if f.isNaN => "NaN"
+      case x => x
+    }).toSeq.sortBy(_.toString)
+
+  test("driver landing and the Spark write land equal entries and equal Parquet footers") {
+    val t1 = Timestamp.valueOf("2024-01-01 00:00:00")
+    val t2 = Timestamp.valueOf("2024-01-01 00:00:05")
+    // (topic, topic ddl, append ddl, two values): every scalar, a fixed
+    // array, a composite, and two widening casts
+    val cases: Seq[(String, String, String, Seq[Any])] = Seq(
+      ("/ty/string", "string", "string", Seq("a", "b")),
+      ("/ty/binary", "binary", "binary", Seq(Array[Byte](1, 2), Array[Byte]())),
+      ("/ty/boolean", "boolean", "boolean", Seq(true, false)),
+      ("/ty/int8", "int8", "int8", Seq((-3).toByte, 127.toByte)),
+      ("/ty/int16", "int16", "int16", Seq((-300).toShort, 3.toShort)),
+      ("/ty/int32", "int32", "int32", Seq(-70000, 1)),
+      ("/ty/int64", "int64", "int64", Seq(Long.MinValue, 5L)),
+      ("/ty/uint8", "uint8", "uint8", Seq(255.toShort, 0.toShort)),
+      ("/ty/uint16", "uint16", "uint16", Seq(65535, 1)),
+      ("/ty/uint32", "uint32", "uint32", Seq(4294967295L, 2L)),
+      ("/ty/uint64", "uint64", "uint64", Seq(Long.MaxValue, 3L)),
+      ("/ty/float32", "float32", "float32", Seq(1.5f, Float.NaN)),
+      ("/ty/float64", "float64", "float64", Seq(-2.25, Double.MaxValue)),
+      ("/ty/array", "[3]int32", "[3]int32", Seq(Seq(1, 2, 3), Seq(-1, 0, 1))),
+      ("/ty/composite", """{"a": int32, "s": string}""", """{"a": int32, "s": string}""",
+        Seq(Row(7, "hi"), Row(-1, ""))),
+      ("/ty/widen", "int64", "int32", Seq(41, -41)),
+      ("/ty/widenarr", "[2]float64", "[2]float32", Seq(Seq(0.5f, 1.5f), Seq(2f, 3f))))
+    val rootA = Files.createTempDirectory("graft_land_driver").toString
+    val rootB = Files.createTempDirectory("graft_land_spark").toString
+    val a = new LocalClient(spark, rootA, fixedClock)
+    val b = new LocalClient(spark, rootB, fixedClock)
+    cases.foreach { case (topic, topicDdl, ddl, vs) =>
+      a.createTopic(topic, topicDdl)
+      b.createTopic(topic, topicDdl)
+      val rows = Seq(Row(t2, topic, vs(0)), Row(t1, topic, vs(1)))
+      a.appendBatch(rows, ddl)
+      b.appendFrame(spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+        ParquetStore.entrySchema(FossilSchema.parse(ddl).sparkType)), ddl)
+    }
+    val (sa, sb) = (new ParquetStore(spark, rootA), new ParquetStore(spark, rootB))
+    cases.foreach { case (topic, _, _, _) =>
+      val (ea, eb) = (sa.entries(topic), sb.entries(topic))
+      assert(ea.schema == eb.schema, topic)
+      assert(rowsOf(ea) == rowsOf(eb), topic)
+      // one file per topic on both paths, with the same footer
+      val (Seq(fa), Seq(fb)) = (topicFiles(rootA, topic), topicFiles(rootB, topic))
+      def footer(f: java.nio.file.Path) = {
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toUri), spark.sparkContext.hadoopConfiguration))
+        try {
+          val m = r.getFooter.getFileMetaData
+          (m.getSchema, m.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"),
+            r.getRecordCount)
+        } finally r.close()
+      }
+      assert(footer(fa) == footer(fb), topic)
+      assert(fa.getFileName.toString.matches("part-[0-9a-f-]{36}\\.c000\\..*parquet"), fa)
+    }
+    // the driver path sorts by time within the file
+    assert(a.query("all in /ty/int64").collect().map(_.getTimestamp(0)).toSeq == Seq(t1, t2))
+  }
+
+  test("append, appendBatch and appendRaw submit no Spark job") {
+    val root = Files.createTempDirectory("graft_land_nojob").toString
+    val c = new LocalClient(spark, root, fixedClock)
+    c.createTopic("/nj", "float64")
+    val at = Timestamp.valueOf("2024-01-01 00:00:00")
+    val jobs = jobsDuring {
+      c.append("/nj/a", 1.5, at) // a new topic
+      c.append("/nj/a", 2.5, at) // an existing one
+      c.appendBatch(Seq(Row(at, "/nj/a", 3.5), Row(at, "/nj/b", 4.5)), "float64")
+      c.appendRaw("/nj/c", Codec.encode(FossilSchema.SFloat64, 5.5), at)
+    }
+    assert(jobs == 0)
+    assert(rowsOf(c.query("all in /nj").select("value")) ==
+      Seq(1.5, 2.5, 3.5, 4.5, 5.5).map(Seq(_)))
+  }
+
+  test("a failed driver landing leaves no visible file and no phantom topic") {
+    val root = Files.createTempDirectory("graft_land_fail").toString
+    val c = new LocalClient(spark, root, fixedClock)
+    c.createTopic("/lf", "int64")
+    val at = Timestamp.valueOf("2024-01-01 00:00:00")
+    def untouched(topics: String*): Unit = {
+      topics.foreach(t => assert(topicFiles(root, t).isEmpty, t))
+      val reopened = new LocalClient(spark, root, fixedClock).listTopics.toMap
+      topics.foreach(t => assert(!c.listTopics.toMap.contains(t) && !reopened.contains(t), t))
+    }
+    // a value that does not convert, on the cast path (int32 into int64)
+    intercept[Exception] {
+      c.appendBatch(Seq(Row(at, "/lf/a", 1), Row(at, "/lf/b", "not an int")), "int32")
+    }
+    untouched("/lf/a", "/lf/b")
+    // a writer failure on the second topic: a plain file where its
+    // partition directory goes
+    val group = java.nio.file.Paths.get(root, "data",
+      s"sgroup=${ParquetStore.schemaKey(FossilSchema.SInt64)}")
+    Files.createDirectories(group)
+    val blocker = group.resolve(ExternalCatalogUtils.getPartitionPathString("topic", "/lf/b"))
+    Files.write(blocker, Array[Byte](0))
+    intercept[java.io.IOException] {
+      c.appendBatch(Seq(Row(at, "/lf/a", 1L), Row(at, "/lf/b", 2L)), "int64")
+    }
+    untouched("/lf/a", "/lf/b")
+    assert(Files.list(group.resolve(ExternalCatalogUtils.getPartitionPathString("topic", "/lf/a")))
+      .count() == 0) // the first topic's temp file is gone too
+    Files.delete(blocker)
+    c.appendBatch(Seq(Row(at, "/lf/a", 1L), Row(at, "/lf/b", 2L)), "int64")
+    assert(c.query("all in /lf").count() == 2)
+  }
+
+  test("an append to existing topics leaves catalog.json untouched") {
+    val root = Files.createTempDirectory("graft_land_sidecar").toString
+    val c = new LocalClient(spark, root, fixedClock)
+    c.createTopic("/sc", "float64")
+    val at = Timestamp.valueOf("2024-01-01 00:00:00")
+    c.append("/sc/a", 1.0, at)
+    val sidecar = java.nio.file.Paths.get(root, "catalog.json")
+    def stamp = (Files.readAllBytes(sidecar).toSeq, Files.getLastModifiedTime(sidecar))
+    val before = stamp
+    Thread.sleep(20) // a rewrite would move the mtime
+    c.append("/sc/a", 2.0, at)
+    c.appendBatch(Seq(Row(at, "/sc", 3.0), Row(at, "/sc/a", 4.0)), "float64")
+    c.appendRaw("/sc/a", Codec.encode(FossilSchema.SFloat64, 5.0), at)
+    c.appendFrame(spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(at, "/sc/a", 6.0)), 1),
+      ParquetStore.entrySchema(org.apache.spark.sql.types.DoubleType)), "float64")
+    assert(stamp == before)
+    assert(c.query("all in /sc").count() == 6)
+    // a new topic is persisted (before its data lands)
+    c.append("/sc/b", 7.0, at)
+    assert(stamp != before)
+    assert(new LocalClient(spark, root, fixedClock).listTopics.toMap.get("/sc/b").contains("float64"))
+  }
+
+  test("schema groups read with the catalog schema: no inference job, same rows and types") {
+    val root = Files.createTempDirectory("graft_read_schema").toString
+    val c = new LocalClient(spark, root, fixedClock)
+    val at = Timestamp.valueOf("2024-01-01 00:00:00")
+    val cases: Seq[(String, String, Any)] = Seq(
+      ("/rs/u8", "uint8", 200.toShort), ("/rs/u16", "uint16", 65000),
+      ("/rs/u32", "uint32", 4000000000L), ("/rs/u64", "uint64", 9L),
+      ("/rs/arr", "[2]float64", Seq(1.5, -2.5)), ("/rs/arri", "[3]uint8", Seq[Short](1, 2, 255)),
+      ("/rs/comp", """{"n": uint16, "v": [2]int32}""", Row(60000, Seq(1, 2))))
+    cases.foreach { case (t, ddl, v) =>
+      c.createTopic(t, ddl)
+      c.appendBatch(Seq(Row(at, t, v)), ddl)
+    }
+    val store = new ParquetStore(spark, root)
+    cases.foreach { case (t, ddl, _) =>
+      var typed: org.apache.spark.sql.DataFrame = null
+      assert(jobsDuring { typed = store.entries(t) } == 0, t)
+      // the footer-inferred read of the same group, as before
+      val inferred = spark.read
+        .parquet(s"$root/data/sgroup=${ParquetStore.schemaKey(FossilSchema.parse(ddl))}")
+        .filter(org.apache.spark.sql.functions.col("topic") === t)
+        .select("time", "topic", "value")
+      assert(ParquetStore.sameModuloNullability(typed.schema("value").dataType,
+        inferred.schema("value").dataType), t)
+      assert(rowsOf(typed) == rowsOf(inferred), t)
+      assert(rowsOf(store.topicEntries(t)) == rowsOf(inferred), t)
+    }
   }
 }
