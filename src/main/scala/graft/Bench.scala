@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR and prints ONE clean JSON line on stdout
   * (build.sbt routes forked stdout around sbt's logger).
@@ -9,26 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Spark 4.1's checkpoint-file CRC sidecars (fileChecksum.enabled
-      // defaults true) route every state/offset/commit/sink-metadata file
-      // close through a per-manager checksum thread pool — r18 profiling
-      // showed the battery's stateful micro-batch tasks spending 85-95% of
-      // their executorRunTime parked in ChecksumCancellableFSDataOutputStream
-      // .close (32 tasks × ~3.5 s on a ~2k-row batch). The engine's
-      // exactly-once contract rests on idempotent batch IDs + atomic log
-      // renames, not CRC sidecars; integrity of checkpoint bytes belongs to
-      // the checkpoint filesystem (HDFS/S3 already checksum). Off by
-      // default, env-overridable for deployments that want the sidecars.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("GRAFT_CKPT_CHECKSUM", "false"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.harness(GraftSession.cpus)
 
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
 

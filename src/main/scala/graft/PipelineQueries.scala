@@ -232,6 +232,37 @@ object PipelineQueries {
         in
       })
 
+  /** The `(doc_id, text)` JSON stream over a doc fixture dir, one file per
+    * micro-batch. */
+  private def docReplay(s: SparkSession, in: String): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    s.readStream
+      .schema(StructType(Seq(StructField("doc_id", LongType, nullable = false),
+        StructField("text", StringType, nullable = true))))
+      .option("maxFilesPerTrigger", 1).json(in)
+  }
+
+  /** Drain `stream` with one AvailableNow pass over a fresh checkpoint,
+    * appending `perBatch(batch)` of every micro-batch to a fresh parquet
+    * dir (foreachBatch); returns that dir read back. `key` names the
+    * row's scratch dirs. */
+  private def drainBatchesToParquet(stream: DataFrame, key: String)(
+      perBatch: DataFrame => DataFrame): DataFrame = {
+    val outDir = Queries.scratchDir(s"graft_${key}_out")
+    val ck = Queries.scratchDir(s"graft_${key}_ck")
+    Queries.deleteOnExit(outDir); Queries.deleteOnExit(ck)
+    stream.writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        perBatch(batch).write.mode("append").parquet(outDir)
+        ()
+      }
+      .option("checkpointLocation", ck)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    stream.sparkSession.read.parquet(outDir)
+  }
+
   /** Deterministic PII-bearing text for the scrub rows: every doc except
     * doc_id%5==0 gains an email + IPv4 + phone tail (the synthetic docs
     * carry none of their own). Mirrored exactly by [[piiOracleSql]]. */
@@ -591,16 +622,6 @@ object PipelineQueries {
       import graft.operators.SignatureStore
       val root = refSigStore(s, d)
       val in = docsStreamFixture(s, d)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType, nullable = true)))
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).json(in)
-      val outDir = Queries.scratchDir("graft_stream_dedup_out")
-      val ck = Queries.scratchDir("graft_stream_dedup_ck")
-      Queries.deleteOnExit(outDir); Queries.deleteOnExit(ck)
       // the frozen reference is identical for every micro-batch: read +
       // persist it once per invocation instead of re-paying the store
       // scan per batch (r18 profile: the per-batch wall was dominated by
@@ -608,21 +629,12 @@ object PipelineQueries {
       // unpersisted before the row returns — nothing survives the run
       val bandsRef = SignatureStore.bands(s, root, "ref90").persist()
       val hashesRef = SignatureStore.shingleHashes(s, root, "ref90").persist()
-      try {
-        val q = stream.writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            Dedup.minhashPairsAgainstStored(
-              batch, "doc_id", "text", bandsRef, hashesRef,
-              shingleWords = 3, numHashes = 12, numBands = 4, minJaccardE4 = 5000)
-              .write.mode("append").parquet(outDir)
-            ()
-          }
-          .option("checkpointLocation", ck)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally { bandsRef.unpersist(); hashesRef.unpersist(); () }
-      s.read.parquet(outDir).orderBy("a", "b")
+      try drainBatchesToParquet(docReplay(s, in), "stream_dedup") { batch =>
+        Dedup.minhashPairsAgainstStored(
+          batch, "doc_id", "text", bandsRef, hashesRef,
+          shingleWords = 3, numHashes = 12, numBands = 4, minJaccardE4 = 5000)
+      }.orderBy("a", "b")
+      finally { bandsRef.unpersist(); hashesRef.unpersist(); () }
     }),
     // the live-crawl perplexity-filter shape: new documents stream in and
     // score per micro-batch against the PERSISTED train95 LM (foreachBatch
@@ -632,34 +644,14 @@ object PipelineQueries {
     "stream_nll_stored" -> ((s, d) => {
       val root = refLmStore(s, d)
       val in = docsStreamFixture(s, d)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType, nullable = true)))
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).json(in)
-      val outDir = Queries.scratchDir("graft_stream_nll_out")
-      val ck = Queries.scratchDir("graft_stream_nll_ck")
-      Queries.deleteOnExit(outDir); Queries.deleteOnExit(ck)
       // load the stored LM once (tag gate + 1-row vocab action) and
       // persist its frames for the whole replay — LmStore.score per batch
       // re-ran a driver head() job and re-scanned both artifacts (r18)
       val model = graft.operators.LmStore.load(s, root, "train95")
       model.counts.persist(); model.totals.persist()
-      try {
-        val q = stream.writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            model.score(batch, "doc_id", "text")
-              .write.mode("append").parquet(outDir)
-            ()
-          }
-          .option("checkpointLocation", ck)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally { model.counts.unpersist(); model.totals.unpersist(); () }
-      s.read.parquet(outDir).orderBy("id")
+      try drainBatchesToParquet(docReplay(s, in), "stream_nll")(
+        model.score(_, "doc_id", "text")).orderBy("id")
+      finally { model.counts.unpersist(); model.totals.unpersist(); () }
     }),
     // streaming incremental SUBSTRING dedup: each micro-batch of the
     // planted-doc replay joins its own windows against the persisted
@@ -668,36 +660,16 @@ object PipelineQueries {
     "stream_dedup_substring" -> ((s, d) => {
       val root = refWindowStore(s, d)
       val in = plantedStreamFixture(s, d)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType, nullable = true)))
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).json(in)
-      val outDir = Queries.scratchDir("graft_stream_substr_out")
-      val ck = Queries.scratchDir("graft_stream_substr_ck")
-      Queries.deleteOnExit(outDir); Queries.deleteOnExit(ck)
       // frozen reference windows read + persisted once per invocation
       // (see stream_dedup_ref) — the tag-gated store read happens here,
       // each micro-batch pays only its own windows + the narrow join
       val swParams = operators.SubstringWindowStore.Params(k = 10)
       val refW = operators.SubstringWindowStore
         .windows(s, root, "base", swParams).persist()
-      try {
-        val q = stream.writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            Dedup.substringPairsAgainstRef(
-              batch, "doc_id", "text", refW, swParams)
-              .write.mode("append").parquet(outDir)
-            ()
-          }
-          .option("checkpointLocation", ck)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally { refW.unpersist(); () }
-      s.read.parquet(outDir).orderBy("a", "b")
+      try drainBatchesToParquet(docReplay(s, in), "stream_substr")(
+        Dedup.substringPairsAgainstRef(_, "doc_id", "text", refW, swParams))
+        .orderBy("a", "b")
+      finally { refW.unpersist(); () }
     }),
     // streaming SPAN REMOVAL against the frozen reference — the
     // remediation step of the crawl-substring story: each micro-batch of
@@ -707,35 +679,15 @@ object PipelineQueries {
     "stream_drop_spans" -> ((s, d) => {
       val root = refWindowStore(s, d)
       val in = plantedStreamFixture(s, d)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType, nullable = true)))
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).json(in)
-      val outDir = Queries.scratchDir("graft_stream_spans_out")
-      val ck = Queries.scratchDir("graft_stream_spans_ck")
-      Queries.deleteOnExit(outDir); Queries.deleteOnExit(ck)
       // frozen reference windows read + persisted once per invocation
       // (see stream_dedup_ref / stream_dedup_substring)
       val spParams = operators.SubstringWindowStore.Params(k = 10)
       val refSp = operators.SubstringWindowStore
         .windows(s, root, "base", spParams).persist()
-      try {
-        val q = stream.writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            Dedup.dropSharedSpansAgainstRef(
-              batch, "doc_id", "text", refSp, spParams)
-              .write.mode("append").parquet(outDir)
-            ()
-          }
-          .option("checkpointLocation", ck)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally { refSp.unpersist(); () }
-      s.read.parquet(outDir).orderBy("id")
+      try drainBatchesToParquet(docReplay(s, in), "stream_spans")(
+        Dedup.dropSharedSpansAgainstRef(_, "doc_id", "text", refSp, spParams))
+        .orderBy("id")
+      finally { refSp.unpersist(); () }
     }),
     // deterministic hash-stratified subsampling (training-mix rates):
     // pure function of doc_id, reproducible on any engine/partitioning
@@ -763,23 +715,9 @@ object PipelineQueries {
     "stream_dsir" -> ((s, d) => {
       val in = docsStreamFixture(s, d, chargeKey = "stream_dsir")
       val w = refDsirWeights(s, d)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType, nullable = true)))
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).json(in)
-      val ck = Queries.scratchDir("graft_stream_dsir_ck")
-      Queries.deleteOnExit(ck)
-      val q = Curation.dsirScore(stream, "doc_id", "text", w, dim = 1024)
-        .writeStream.format("memory").queryName("graft_sink_stream_dsir")
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("graft_sink_stream_dsir").orderBy("id")
+      Queries.drainToMemory(
+        Curation.dsirScore(docReplay(s, in), "doc_id", "text", w, dim = 1024),
+        "graft_sink_stream_dsir", "append").orderBy("id")
     }),
     // stored-weights DSIR scoring: the fit persists once (harness-
     // charged), the timed wall is only the zero-exchange score of a 5%
@@ -1510,46 +1448,17 @@ object PipelineQueries {
     // agg path on the same slice (shared restricted oracle)
     "stream_classifier" -> ((s, d) => {
       val in = docsStreamFixture(s, d, chargeKey = "stream_classifier")
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType, nullable = true)))
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).json(in)
-      val ck = Queries.scratchDir("graft_stream_cls_ck")
-      Queries.deleteOnExit(ck)
-      val q = TextAnalysis.linearScoreRowLocal(
-          stream, "doc_id", "text",
-          TextAnalysis.fixtureWeights(s, 1024), dim = 1024)
-        .writeStream.format("memory").queryName("graft_sink_stream_cls")
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("graft_sink_stream_cls").orderBy("id")
+      Queries.drainToMemory(
+        TextAnalysis.linearScoreRowLocal(docReplay(s, in), "doc_id", "text",
+          TextAnalysis.fixtureWeights(s, 1024), dim = 1024),
+        "graft_sink_stream_cls", "append").orderBy("id")
     }),
     "stream_pii_scrub" -> ((s, d) => {
       val in = docsStreamFixture(s, d, chargeKey = "stream_pii_scrub")
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType, nullable = true)))
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).json(in)
-      val ck = Queries.scratchDir("graft_stream_pii_ck")
-      Queries.deleteOnExit(ck)
-      val q = Curation.piiScrub(
-          stream.withColumn("text", piiAugmentedText), "doc_id", "text")
-        .writeStream.format("memory").queryName("graft_sink_stream_pii")
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("graft_sink_stream_pii").orderBy("doc_id")
+      Queries.drainToMemory(
+        Curation.piiScrub(docReplay(s, in).withColumn("text", piiAugmentedText),
+          "doc_id", "text"),
+        "graft_sink_stream_pii", "append").orderBy("doc_id")
     }),
     // the merge-table tokenizer composed onto the live-crawl replay: the
     // broadcast-ranks mapPartitions is stateless, so true token counting
@@ -1557,23 +1466,9 @@ object PipelineQueries {
     // restricted to the fixture slice (same md5(text)-joined oracle)
     "stream_tokens_bpe" -> ((s, d) => {
       val in = docsStreamFixture(s, d, chargeKey = "stream_tokens_bpe")
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType, nullable = true)))
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).json(in)
-      val ck = Queries.scratchDir("graft_stream_bpe_ck")
-      Queries.deleteOnExit(ck)
-      val q = operators.Bpe.tokenCounts(stream, "doc_id", "text")
-        .writeStream.format("memory").queryName("graft_sink_stream_bpe")
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("graft_sink_stream_bpe").orderBy("id")
+      Queries.drainToMemory(
+        operators.Bpe.tokenCounts(docReplay(s, in), "doc_id", "text"),
+        "graft_sink_stream_bpe", "append").orderBy("id")
     }),
     // decontamination composed onto the live-crawl replay: the eval
     // shingle set is broadcast-sized by nature, so the streaming side is
@@ -1584,25 +1479,11 @@ object PipelineQueries {
       val evalSet = Curation.evalShingles(
         Tables.documents(s, d).filter(col("doc_id") % 20 === 0),
         "doc_id", "text", shingleWords = 4)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType, nullable = true)))
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).json(in)
-      val ck = Queries.scratchDir("graft_stream_decontam_ck")
-      Queries.deleteOnExit(ck)
-      val q = Curation.contaminationHitsAgainst(
-          stream.filter(col("doc_id") % 20 =!= 0),
-          "doc_id", "text", shingleWords = 4, evalSet)
-        .writeStream.format("memory").queryName("graft_sink_stream_decontam")
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table("graft_sink_stream_decontam").orderBy("doc_id")
+      Queries.drainToMemory(
+        Curation.contaminationHitsAgainst(
+          docReplay(s, in).filter(col("doc_id") % 20 =!= 0),
+          "doc_id", "text", shingleWords = 4, evalSet),
+        "graft_sink_stream_decontam", "append").orderBy("doc_id")
     }),
     "curate_domain_cap" -> ((s, d) =>
       Curation.capPerDomain(

@@ -152,33 +152,39 @@ object Queries {
       })
 
   /** Replay a batch `(t_us, topic, value)` frame through the file-source
-    * stream, run `plan` over the streaming frame, and drain it into a
-    * memory sink via one AvailableNow pass; returns the sink table. The
-    * sink name is FIXED per battery key: the memory sink registers its
-    * results with createOrReplaceTempView, so repeated invocations
-    * (bench passes, verify re-runs) REPLACE the previous result set
-    * instead of accumulating one retained table per UUID in the driver.
-    * `batchEntries` is by-name: it is only evaluated on a fixture-cache
-    * miss (the fixture is immutable, so only the checkpoint needs to be
-    * fresh per invocation). */
+    * stream, run `plan` over the streaming frame, and drain it with
+    * [[drainToMemory]]. `batchEntries` is by-name: it is only evaluated on
+    * a fixture-cache miss (the fixture is immutable, so only the
+    * checkpoint needs to be fresh per invocation). */
   private def replayThroughStream(
       s: SparkSession, dir: String, batchEntries: => DataFrame,
       sinkName: String, mode: String, fixtureKey: String = null)(
       plan: DataFrame => DataFrame): DataFrame = {
-    import graft.streaming.StreamingIngest
     val rowKey = sinkName.stripPrefix("graft_sink_")
     val in = jsonFixture(
       Option(fixtureKey).getOrElse(rowKey), dir, batchEntries, rowKey)
+    drainToMemory(plan(graft.streaming.StreamingIngest.fileSource(s, in)),
+      sinkName, mode)
+  }
+
+  /** Drain the streaming frame `out` into the memory sink `sinkName` with
+    * one AvailableNow pass over a fresh checkpoint; returns the sink
+    * table. The sink name is FIXED per battery key: the memory sink
+    * registers its results with createOrReplaceTempView, so repeated
+    * invocations (bench passes, verify re-runs) REPLACE the previous
+    * result set instead of accumulating one retained table per UUID in
+    * the driver. */
+  private[graft] def drainToMemory(
+      out: DataFrame, sinkName: String, mode: String): DataFrame = {
     val ck = scratchDir(s"graft_${sinkName}_ck")
     deleteOnExit(ck)
-    val out = plan(StreamingIngest.fileSource(s, in))
-    val q = out.writeStream.format("memory").queryName(sinkName)
+    out.writeStream.format("memory").queryName(sinkName)
       .option("checkpointLocation", ck)
       .outputMode(mode)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-    s.table(sinkName)
+      .awaitTermination()
+    out.sparkSession.table(sinkName)
   }
 
   /** Recursive delete at JVM exit — for store fixtures under tmpdir whose
@@ -424,67 +430,9 @@ object Queries {
     // double-land or a dropped boundary microsecond is a hash mismatch.
     // A 10% time-keyed slice keeps the driver-paged wire leg (the
     // migration tool's documented cost model) bench-sized.
-    "stream_wire_follow" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val sink = scratchDir("graft_swf_sink")
-      val ckpt = scratchDir("graft_swf_ckpt")
-      val srcRoot = scratchDir("graft_swf_src")
-      val dstRoot = scratchDir("graft_swf_dst")
-      Seq(sink, ckpt, srcRoot, dstRoot).foreach(deleteOnExit)
-      val slice = Tables.eventEntries(s, d).drop("__t_ns")
-        .filter(unix_micros(col("time")) % 10 === 0)
-      // fixture prep (harness): tranche boundaries + the source's first
-      // tranche — test-rig work standing in for the OLD deployment
-      val b1 = harness("stream_wire_follow") {
-        val mm = slice.agg(min(unix_micros(col("time"))),
-          max(unix_micros(col("time")))).first()
-        mm.getLong(0) + (mm.getLong(1) - mm.getLong(0)) / 2
-      }
-      val src = harness("stream_wire_follow") {
-        val c = new graft.api.LocalClient(s, srcRoot, fixedClock)
-        c.createTopic("/events", "float64")
-        c.appendFrame(slice.filter(unix_micros(col("time")) <= b1), "float64")
-        c
-      }
-      // each drain is one checkpointed streaming restart — phase-
-      // attributed like stream_session's, so the bench's io-normalized
-      // headline can discount this row's disk-weather share too
-      def drain(): Unit = phase("stream_wire_follow/drain") {
-        val entries = graft.streaming.StreamingIngest
-          .storeStream(s, dstRoot, "float64")
-        val out = graft.streaming.StreamingFql.query(
-          "all in /events | map F -> 5/9 * (F-32)", entries, fixedClock)
-        out.select(unix_micros(col("time")).as("t_us"), col("topic"),
-            col("value"))
-          .writeStream.option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .format("parquet").option("path", sink)
-          .outputMode("append").start().awaitTermination()
-      }
-      val server = new graft.api.WireServer(s, Map("src" -> srcRoot), "src",
-        fixedClock)
-      try {
-        val client = new graft.api.RemoteClient("127.0.0.1", server.port,
-          db = "src")
-        try {
-          phase("stream_wire_follow/follow") {
-            graft.sources.WireImport.followOnce(s, client, dstRoot)
-          }
-          drain()
-          harness("stream_wire_follow") {
-            src.appendFrame(slice.filter(unix_micros(col("time")) > b1),
-              "float64")
-          }
-          phase("stream_wire_follow/follow") {
-            graft.sources.WireImport.followOnce(s, client, dstRoot,
-              closeBoundary = true)
-          }
-          drain()
-        } finally client.close()
-      } finally server.close()
-      s.read.parquet(sink).select("t_us", "topic", "value")
-        .orderBy("t_us", "topic")
-    }),
+    "stream_wire_follow" -> ((s, d) =>
+      liveMigration(s, d, "stream_wire_follow", idleDrain = false)(root =>
+        graft.streaming.StreamingIngest.storeStream(s, root, "float64"))),
 
     // [stream_dsv2] The SAME live-migration composition as
     // stream_wire_follow, with ONE difference: the analytics drain reads
@@ -495,63 +443,82 @@ object Queries {
     // three drains (the last idle) prove exactly-once through the
     // connector, and the shared oracle with stream_wire_follow IS the
     // equivalence proof the r17 verdict asked for.
-    "stream_dsv2" -> ((s, d) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val sink = scratchDir("graft_sdv_sink")
-      val ckpt = scratchDir("graft_sdv_ckpt")
-      val srcRoot = scratchDir("graft_sdv_src")
-      val dstRoot = scratchDir("graft_sdv_dst")
-      Seq(sink, ckpt, srcRoot, dstRoot).foreach(deleteOnExit)
-      val slice = Tables.eventEntries(s, d).drop("__t_ns")
-        .filter(unix_micros(col("time")) % 10 === 0)
-      val b1 = harness("stream_dsv2") {
-        val mm = slice.agg(min(unix_micros(col("time"))),
-          max(unix_micros(col("time")))).first()
-        mm.getLong(0) + (mm.getLong(1) - mm.getLong(0)) / 2
-      }
-      val src = harness("stream_dsv2") {
-        val c = new graft.api.LocalClient(s, srcRoot, fixedClock)
-        c.createTopic("/events", "float64")
-        c.appendFrame(slice.filter(unix_micros(col("time")) <= b1), "float64")
-        c
-      }
-      def drain(): Unit = phase("stream_dsv2/drain") {
-        val entries = s.readStream.format("fossil").load(dstRoot)
-        val out = graft.streaming.StreamingFql.query(
-          "all in /events | map F -> 5/9 * (F-32)", entries, fixedClock)
-        out.select(unix_micros(col("time")).as("t_us"), col("topic"),
-            col("value"))
-          .writeStream.option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .format("parquet").option("path", sink)
-          .outputMode("append").start().awaitTermination()
-      }
-      val server = new graft.api.WireServer(s, Map("src" -> srcRoot), "src",
-        fixedClock)
-      try {
-        val client = new graft.api.RemoteClient("127.0.0.1", server.port,
-          db = "src")
-        try {
-          phase("stream_dsv2/follow") {
-            graft.sources.WireImport.followOnce(s, client, dstRoot)
-          }
-          drain()
-          harness("stream_dsv2") {
-            src.appendFrame(slice.filter(unix_micros(col("time")) > b1),
-              "float64")
-          }
-          phase("stream_dsv2/follow") {
-            graft.sources.WireImport.followOnce(s, client, dstRoot,
-              closeBoundary = true)
-          }
-          drain()
-          drain() // idle: the connector checkpoint re-lands nothing
-        } finally client.close()
-      } finally server.close()
-      s.read.parquet(sink).select("t_us", "topic", "value")
-        .orderBy("t_us", "topic")
-    }),
+    "stream_dsv2" -> ((s, d) =>
+      liveMigration(s, d, "stream_dsv2", idleDrain = true)(root =>
+        s.readStream.format("fossil").load(root))),
   )
+
+  /** The live-migration body shared by stream_wire_follow and stream_dsv2:
+    * a source store seeded with the first tranche of a 10% time-keyed
+    * events slice, served over the wire and followed into a landing store
+    * in two cycles (the second tranche appended in between, the second
+    * cycle closing the boundary), each cycle followed by one checkpointed
+    * AvailableNow drain of `source(landingRoot)` through a streaming FQL
+    * map into a parquet sink. `key` names the row's `phase`/`harness`
+    * ledger entries; `idleDrain` adds a third drain after the last cycle,
+    * which must re-land nothing. */
+  private def liveMigration(
+      s: SparkSession, d: String, key: String, idleDrain: Boolean)(
+      source: String => DataFrame): DataFrame = {
+    import org.apache.spark.sql.streaming.Trigger
+    val sink = scratchDir(s"graft_${key}_sink")
+    val ckpt = scratchDir(s"graft_${key}_ckpt")
+    val srcRoot = scratchDir(s"graft_${key}_src")
+    val dstRoot = scratchDir(s"graft_${key}_dst")
+    Seq(sink, ckpt, srcRoot, dstRoot).foreach(deleteOnExit)
+    val slice = Tables.eventEntries(s, d).drop("__t_ns")
+      .filter(unix_micros(col("time")) % 10 === 0)
+    // fixture prep (harness): tranche boundaries + the source's first
+    // tranche — test-rig work standing in for the OLD deployment
+    val b1 = harness(key) {
+      val mm = slice.agg(min(unix_micros(col("time"))),
+        max(unix_micros(col("time")))).first()
+      mm.getLong(0) + (mm.getLong(1) - mm.getLong(0)) / 2
+    }
+    val src = harness(key) {
+      val c = new graft.api.LocalClient(s, srcRoot, fixedClock)
+      c.createTopic("/events", "float64")
+      c.appendFrame(slice.filter(unix_micros(col("time")) <= b1), "float64")
+      c
+    }
+    // each drain is one checkpointed streaming restart — phase-
+    // attributed like stream_session's, so the bench's io-normalized
+    // headline can discount this row's disk-weather share too
+    def drain(): Unit = phase(s"$key/drain") {
+      val out = graft.streaming.StreamingFql.query(
+        "all in /events | map F -> 5/9 * (F-32)", source(dstRoot), fixedClock)
+      out.select(unix_micros(col("time")).as("t_us"), col("topic"),
+          col("value"))
+        .writeStream.option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .format("parquet").option("path", sink)
+        .outputMode("append").start().awaitTermination()
+    }
+    val server = new graft.api.WireServer(s, Map("src" -> srcRoot), "src",
+      fixedClock)
+    try {
+      val client = new graft.api.RemoteClient("127.0.0.1", server.port,
+        db = "src")
+      try {
+        phase(s"$key/follow") {
+          graft.sources.WireImport.followOnce(s, client, dstRoot)
+        }
+        drain()
+        harness(key) {
+          src.appendFrame(slice.filter(unix_micros(col("time")) > b1),
+            "float64")
+        }
+        phase(s"$key/follow") {
+          graft.sources.WireImport.followOnce(s, client, dstRoot,
+            closeBoundary = true)
+        }
+        drain()
+        if (idleDrain) drain() // the checkpoint re-lands nothing
+      } finally client.close()
+    } finally server.close()
+    s.read.parquet(sink).select("t_us", "topic", "value")
+      .orderBy("t_us", "topic")
+  }
 
   /** One connector-read store fixture per (JVM, sf dir): the events table
     * ingested once through the library path, then every `dsv2_*` row reads

@@ -15,9 +15,9 @@ object Tables {
   /** Per-(session, dir, table) memo of the BUILT frame. Building a
     * `spark.read.parquet` relation is driver work — file listing, footer
     * schema inference, analysis — measured at 95-176 ms per call on this
-    * box (tools/ReadProbe, r18); the battery builds these frames several
-    * hundred times per bench run. The memo holds analyzed PLANS, never
-    * results: every action still scans the parquet inputs. The driver test
+    * box (r18, tools/ReadProbe as of `3e0ff69`); the battery builds these
+    * frames several hundred times per bench run. The memo holds analyzed
+    * PLANS, never results: every action still scans the parquet inputs. The driver test
     * tables are immutable for a JVM's lifetime, so a snapshotted file
     * listing cannot go stale; weak session keys keep a long-lived process
     * from pinning dead sessions. */

@@ -77,7 +77,7 @@ final class RemoteClient(
   @volatile private var handshakeVersion: String = ""
   @volatile private var closed = false
   private val poolCount = math.max(1, poolSize)
-  private val pool = new LinkedBlockingQueue[Socket]()
+  private[api] val pool = new LinkedBlockingQueue[Socket]()
   // serializes full-pool drains (use/close): two concurrent drains would
   // each take part of the pool and deadlock waiting for the other's half
   private val drainLock = new Object
@@ -98,6 +98,7 @@ final class RemoteClient(
   private def connect(): Socket = {
     val sock = new Socket(host, port)
     try {
+      sock.setTcpNoDelay(true)
       val out = new DataOutputStream(sock.getOutputStream)
       val in = new DataInputStream(sock.getInputStream)
       writeMessage(out, "VERSION", Array.emptyByteArray)

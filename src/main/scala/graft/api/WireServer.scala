@@ -104,7 +104,7 @@ final class WireServer(
   @volatile private var running = true
   // live accepted sockets, so close() actually severs clients (otherwise
   // handler threads would keep their conns alive past server shutdown)
-  private val conns = java.util.concurrent.ConcurrentHashMap.newKeySet[Socket]()
+  private[api] val conns = java.util.concurrent.ConcurrentHashMap.newKeySet[Socket]()
 
   private val acceptor = new Thread(() => {
     while (running) {
@@ -139,6 +139,7 @@ final class WireServer(
     // try/finally: a failure attaching stores must still close the socket
     // and drop it from the live set, not leak a hung connection
     try {
+      sock.setTcpNoDelay(true) // replies are single frames: never hold them back
       metrics.incClientConnection() // reference: mux.go:91, per accept
       val in = new DataInputStream(sock.getInputStream)
       val out = new DataOutputStream(sock.getOutputStream)
@@ -342,13 +343,23 @@ object WireServer {
     (cmd, buf.drop(8))
   }
 
+  /** Frames up to this size go out in ONE socket write. */
+  private val SingleWriteBytes = 64 * 1024
+
+  /** `[u32 len][cmd, 8 bytes zero-padded][payload]`. A frame of up to
+    * [[SingleWriteBytes]] is assembled and written in one call: separate
+    * small writes of length, command and payload let Nagle's algorithm
+    * hold the tail back until the peer's delayed ACK. A larger frame sends
+    * its 12-byte head, then the payload uncopied. */
   private[api] def writeMessage(out: DataOutputStream, cmd: String, payload: Array[Byte]): Unit = {
-    val cmdBytes = new Array[Byte](8)
+    val whole = 12 + payload.length <= SingleWriteBytes
+    val frame = java.nio.ByteBuffer.allocate(if (whole) 12 + payload.length else 12)
+    frame.putInt(8 + payload.length)
     val c = cmd.getBytes(StandardCharsets.UTF_8)
-    System.arraycopy(c, 0, cmdBytes, 0, math.min(8, c.length))
-    out.writeInt(8 + payload.length)
-    out.write(cmdBytes)
-    out.write(payload)
+    frame.put(c, 0, math.min(8, c.length)).position(12)
+    if (whole) frame.put(payload)
+    out.write(frame.array())
+    if (!whole) out.write(payload)
     out.flush()
   }
 

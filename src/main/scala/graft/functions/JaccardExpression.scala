@@ -103,8 +103,8 @@ object JaccardE4 {
   * offsets) once per pair occurrence, and (b) two boxed
   * HashSet<UTF8String> builds per pair inside [[JaccardE4.kernel]] —
   * together the family's dominant stage once candidates outnumber true
-  * pairs ~200:1 (tools/NgramProbe at 10×: shuttle 1.6 s + kernel 1.2 s
-  * of a 2.9 s verify). These kernels replace the payload with a row-local
+  * pairs ~200:1 (tools/NgramProbe as of `3e0ff69`, at 10×: shuttle 1.6 s
+  * + kernel 1.2 s of a 2.9 s verify). These kernels replace the payload with a row-local
   * SORTED xxhash64 array (8 B/element, primitive) and the count with an
   * allocation-free linear merge.
   *

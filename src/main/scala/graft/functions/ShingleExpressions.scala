@@ -18,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * first-occurrence distinct like array_distinct. The HOF forms evaluate
   * INTERPRETED, copy a k-token slice per window, and re-box per element —
   * measured 60% of the substring rows' wall time before the swap
-  * (tools/SubstrProbe). */
+  * (tools/SubstrProbe as of `3e0ff69`). */
 object ShingleKernels {
 
   private val Space = UTF8String.fromString(" ")

@@ -28,21 +28,23 @@ import TextOps._
   */
 object Dedup {
 
-  /** Hash-repartition `(id, text)` before per-row heavy lifting — but
+  /** Hash-repartition by `idCol` before per-row heavy lifting — but
     * ONLY when the input is under-partitioned: a small corpus often
     * arrives as ONE parquet split, which would otherwise run every
-    * shingle/hash single-threaded no matter how many cores exist. A
-    * 100 TB corpus arrives as tens of thousands of splits, where the
-    * unconditional repartition this replaces would shuffle the ENTIRE
-    * raw text once more for nothing (every downstream op re-keys by
-    * id/hash/band anyway — the upfront exchange is pure overhead at
-    * scale, parallelism insurance at toy scale). */
-  private def spread(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val sel = docs.select(col(idCol).as("id"), col(textCol).as("__text"))
-    if (sel.rdd.getNumPartitions >= docs.sparkSession.sparkContext.defaultParallelism)
-      sel
-    else sel.repartition(col("id"))
-  }
+    * shingle/hash (or, for the broadcast-queries vector scans in
+    * [[Similarity]], every score) single-threaded no matter how many
+    * cores exist. A 100 TB corpus arrives as tens of thousands of splits,
+    * where an unconditional repartition would shuffle the ENTIRE input
+    * once more for nothing (every downstream op re-keys by id/hash/band
+    * anyway — the upfront exchange is pure overhead at scale, parallelism
+    * insurance at toy scale). */
+  private[operators] def spreadById(df: DataFrame, idCol: String): DataFrame =
+    if (df.rdd.getNumPartitions >= df.sparkSession.sparkContext.defaultParallelism) df
+    else df.repartition(col(idCol))
+
+  /** `(id, __text)` projection of the docs, spread by id ([[spreadById]]). */
+  private def spread(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    spreadById(docs.select(col(idCol).as("id"), col(textCol).as("__text")), "id")
 
   /** Exact dedup: group by content hash of the normalized text.
     * Returns one row per duplicate group (`n > 1`): the content hash, the
@@ -96,9 +98,9 @@ object Dedup {
     * whose count ratio cannot reach the threshold can never verify.
     * Riding the counts through the band join (one scalar per side) kills
     * such pairs BEFORE the pair-dedup shuffle and the array join-back —
-    * the verify stage's dominant cost (r15 NgramProbe: the join-backs
-    * shuttling full shingle arrays were 2.96 s of dedup_ngram's 4.35 s
-    * at 10×). The cut honors j_e4's HALF_UP rounding: keep iff
+    * the verify stage's dominant cost (r15 tools/NgramProbe as of
+    * `3e0ff69`: the join-backs shuttling full shingle arrays were 2.96 s
+    * of dedup_ngram's 4.35 s at 10×). The cut honors j_e4's HALF_UP rounding: keep iff
     * `2·10⁴·min ≥ (2τ−1)·max` ⇔ `(min/max)·10⁴ ≥ τ − 0.5` — exactly the
     * pairs whose ROUNDED Jaccard could still clear τ, so recall is
     * untouched and every oracle row hashes identically. */
@@ -713,9 +715,9 @@ object Dedup {
     * scale; against adversarial input a manufactured collision creates a
     * false exact-substring pair that can drop a legitimate document. For
     * deployments treating the crawl as hostile, the 16-byte binary md5 key
-    * (`unhex(md5(g))` — A/B'd as `pairsB16` in [[graft.tools.SubstrProbe]];
-    * keeps ~two-thirds of the key-size win) is the drop-in cryptographic
-    * alternative; the user-surfaced audit identity ([[hotWindows]]) is
+    * (`unhex(md5(g))` — A/B'd as `pairsB16` in tools/SubstrProbe as of
+    * `3e0ff69`; keeps ~two-thirds of the key-size win) is the drop-in
+    * cryptographic alternative; the user-surfaced audit identity ([[hotWindows]]) is
     * already md5. [[SubstringWindowStore]] persists this frame, so store
     * and inline consumers cannot drift — switching keys is a store version
     * bump, not a silent re-key. */

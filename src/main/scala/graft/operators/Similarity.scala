@@ -453,21 +453,6 @@ object Similarity {
         col("__w.a").as("witness"), col("__w.cos_e6").as("cos_e6"))
   }
 
-  /** Parallelism insurance for the NLJ-scan family (same contract as
-    * [[Dedup.spread]]): the corpus side of a broadcast-queries scan
-    * inherits the SCAN's partitioning, and a small-file corpus (one
-    * parquet file < maxPartitionBytes) collapses the whole scoring scan
-    * to ONE task — r19 ProfileQ measured ann_pq's ADC as a single 18 s
-    * task with 31 idle cores. Repartition by id only when the scan is
-    * narrower than the cluster; at real scale the scan already carries
-    * more partitions than cores and this is a no-op (the unconditional
-    * repartition it replaces in [[bruteForceTopK]] would shuffle the
-    * full corpus vectors once for nothing there). */
-  private def spreadVecs(df: DataFrame, idCol: String): DataFrame =
-    if (df.rdd.getNumPartitions >=
-        df.sparkSession.sparkContext.defaultParallelism) df
-    else df.repartition(col(idCol))
-
   /** Exact brute-force top-k: for every query row, the k nearest corpus
     * rows by (sim_e6 desc, id asc), self-matches excluded.
     * Output: (q, rank, id, sim_e6). */
@@ -475,7 +460,7 @@ object Similarity {
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {
     val qd = queries.select(col(idCol), col(vecCol).cast("array<double>").as(vecCol))
-    val cd = spreadVecs(
+    val cd = Dedup.spreadById(
       corpus.select(col(idCol), col(vecCol).cast("array<double>").as(vecCol)),
       idCol) // corpus streams against broadcast queries
     val q = qd.select(col(idCol).as("q"), col(vecCol).as("qv"), norm(col(vecCol)).as("qn"))
@@ -513,9 +498,9 @@ object Similarity {
           size(v).cast("string"))))
     // scoped: the prepped corpus feeds the pre-rank scan AND the rescore
     // join-back; spread so the pre-rank NLJ scan parallelizes (see
-    // [[spreadVecs]])
+    // [[Dedup.spreadById]])
     val cd = OperatorCache.scoped(
-      spreadVecs(
+      Dedup.spreadById(
         corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v")),
         "id")
         .withColumn("n", norm(col("v")))
@@ -1031,7 +1016,9 @@ object Similarity {
       numSub: Int, numCodes: Int, k: Int, refine: Int = 4): DataFrame = {
     require(cbArr.length == numSub * numCodes,
       s"codebook has ${cbArr.length} entries, expected ${numSub * numCodes}")
-    val cd = spreadVecs(corpus.select(col(idCol).as("id"),
+    // a one-file corpus would otherwise score in ONE task (r19 ProfileQ:
+    // ann_pq's ADC ran as a single 18 s task with 31 idle cores)
+    val cd = Dedup.spreadById(corpus.select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v")), "id")
     val w = cbArr.head.length
 

@@ -33,8 +33,9 @@ object TextOps {
     * the HOF form (`array_distinct(transform(sequence(...), i ->
     * concat_ws(" ", slice(toks, i, k))))`) evaluated interpreted, copied
     * a k-token slice per window, and measured 60% of the substring
-    * family's wall time (tools/SubstrProbe). Output identical, including
-    * null-token skipping and first-occurrence distinct order.
+    * family's wall time (tools/SubstrProbe as of `3e0ff69`). Output
+    * identical, including null-token skipping and first-occurrence
+    * distinct order.
     * DuckDB twin: `list_distinct(list_transform(range(1, greatest(len(toks)-k+1,0)+1),
     *   i -> array_to_string(toks[i:i+k-1], ' ')))` */
   def wordShingles(toks: Column, k: Int): Column =

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.Tables
 import graft.engine.FossilEngine
 import graft.Queries
@@ -10,11 +9,7 @@ import graft.Queries
   * subscripts, composite keys). */
 object EdgeProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
     val eng = FossilEngine.over(
       Tables.eventEntries(spark, "/root/testdata/sf0.001"),
       Tables.eventsCatalog, Queries.fixedClock)

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.engine.ParquetStore
 import graft.sources.FossilDatabase
 
@@ -19,14 +18,7 @@ object FossilImportTool {
     require(args.length == 2,
       "usage: FossilImportTool <fossilDir> <storeRoot>")
     val Array(fossilDir, storeRoot) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus)
     try {
       val (topics, entries, skipped) =
         FossilDatabase.importInto(spark, fossilDir, new ParquetStore(spark, storeRoot))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** In-process stack sampler for one battery row: while the query runs, a
   * daemon thread samples every live "Executor task launch worker" (and
@@ -15,14 +15,7 @@ object HotSpots {
     val sfDir = args(0)
     val name = args(1)
     val prefix = if (args.length > 2) args(2) else "Executor task launch"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("GRAFT_CKPT_CHECKSUM", "false"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.harness(GraftSession.cpus)
 
     // warm-up like Bench
     try graft.SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()

@@ -3,8 +3,10 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Dump `.explain("formatted")` for named battery rows (and, for the
   * foreachBatch streaming rows, their INNER per-micro-batch operator plans
@@ -21,12 +23,7 @@ object PlanDump {
     val outDir = args(1)
     val names = args.drop(2).toSeq
     Files.createDirectories(Paths.get(outDir))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus)
 
     def dump(name: String, df: DataFrame): Unit = {
       val s = df.queryExecution.explainString(

@@ -1,7 +1,8 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+
+import graft.GraftSession
 
 /** Per-job attribution for one battery row: wall time split into Spark job
   * time vs driver-only gaps (planning, listing, control-plane I/O), plus
@@ -47,14 +48,7 @@ object ProfileQ {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("GRAFT_CKPT_CHECKSUM", "false"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.harness(GraftSession.cpus)
     val probe = new Probe
     spark.sparkContext.addSparkListener(probe)
 

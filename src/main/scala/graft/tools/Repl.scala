@@ -4,6 +4,7 @@ import scala.io.StdIn
 
 import org.apache.spark.sql.SparkSession
 
+import graft.GraftSession
 import graft.api.{ConnectionString, LocalClient, RemoteClient}
 import graft.engine.{Codec, FossilSchema}
 
@@ -246,12 +247,7 @@ object Repl {
 
   /** Embedded-store loop (serverless `file://` / bare-path shape). */
   private def localLoop(root: String): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
     val client = new LocalClient(spark, root)
     var format = "table"
     println(s"graft repl over $root — 'quit' to exit")

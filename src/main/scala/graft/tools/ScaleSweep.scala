@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.operators.Similarity
 
 /** Scale-insurance sweep: synthesize a ~K× corpus from sf0.1 and time the
@@ -45,17 +46,8 @@ object ScaleSweep {
       if (args.length > 1) Some(args(1).split(",").map(_.trim).toSet) else None
     val base = "/root/testdata/sf0.1"
     val out = s"/tmp/graft_scale${factor}x"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // match Bench: checkpoint CRC sidecars off (see Bench.scala)
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("GRAFT_CKPT_CHECKSUM", "false"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.harness(cpus)
 
     synthesize(spark, base, out, factor)
 

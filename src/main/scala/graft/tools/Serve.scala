@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.api.WireServer
 
 /** Standalone wire-server entrypoint — the CLI analog of the reference's
@@ -78,11 +77,7 @@ object Serve {
           c.databases.toSeq.sortBy { case (n, _) => (n != c.defaultDb, n) }
         case None => Seq("default" -> "/tmp/graft_serve_store")
       }
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4)
     // fossil.verbose clamps at 2 (cmd/fossil/config.go clamp): 0=ERROR,
     // 1=WARN, 2=INFO — flags have no verbosity knob, config-only
     spark.sparkContext.setLogLevel(

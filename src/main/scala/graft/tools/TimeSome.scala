@@ -1,21 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Quick targeted timings: runMain graft.tools.TimeSome <sfDir> q1 q2 ... */
 object TimeSome {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // match Bench: checkpoint CRC sidecars off (see Bench.scala)
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-        sys.env.getOrElse("GRAFT_CKPT_CHECKSUM", "false"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.harness(GraftSession.cpus)
     names.foreach { n =>
       try graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
       catch { case _: Throwable => () }

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.api.{ConnectionString, RemoteClient}
 import graft.sources.WireImport
 
@@ -46,14 +45,7 @@ object WireImportTool {
     }
     val storeRoot = pos(1)
     val pageSize = if (pos.length == 3) pos(2).toInt else 50000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus)
     val client = new RemoteClient(target.host, target.port, db = target.db,
       poolSize = jobs)
     try {

@@ -470,4 +470,41 @@ class WireServerSpec extends SparkSpec {
       if (server != null) server.close()
     }
   }
+
+  test("a wire frame up to 64 KiB goes out in one socket write") {
+    class Counting extends java.io.ByteArrayOutputStream {
+      var writes = 0
+      override def write(b: Int): Unit = { writes += 1; super.write(b) }
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+        writes += 1; super.write(b, off, len)
+      }
+    }
+    def framed(payload: Array[Byte]): (Int, (String, Array[Byte])) = {
+      val sink = new Counting
+      send(new DataOutputStream(sink), "APPEND", payload)
+      (sink.writes, recv(new DataInputStream(
+        new java.io.ByteArrayInputStream(sink.toByteArray))))
+    }
+    val small = Array.tabulate[Byte](1024)(_.toByte)
+    val (n, (cmd, back)) = framed(small)
+    assert(n == 1)
+    assert(cmd == "APPEND" && back.sameElements(small))
+    // past the single-write size: the 12-byte head, then the payload
+    val big = Array.tabulate[Byte](64 * 1024)(_.toByte)
+    val (nBig, (cmdBig, backBig)) = framed(big)
+    assert(nBig == 2)
+    assert(cmdBig == "APPEND" && backBig.sameElements(big))
+  }
+
+  test("both ends of a live wire connection disable Nagle (TCP_NODELAY)") {
+    val root = Files.createTempDirectory("graft_wire_nodelay").toString
+    val server = new WireServer(spark, Map("a" -> root), "a", fixedClock)
+    val client = new RemoteClient("127.0.0.1", server.port, db = "a", poolSize = 1)
+    try {
+      // the handshake has been answered, so the server side is set up
+      assert(client.pool.size == 1 && client.pool.peek().getTcpNoDelay)
+      assert(server.conns.size == 1)
+      server.conns.forEach(sock => assert(sock.getTcpNoDelay))
+    } finally { client.close(); server.close() }
+  }
 }
