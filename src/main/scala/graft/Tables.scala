@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
-import graft.engine.{Catalog, FossilSchema}
+import graft.engine.{Catalog, StoreFs}
 
 /** Readers for the driver-provided test tables (`TESTDATA.md`), plus the
   * entry-view adapters that expose the `events` table through the fossil
@@ -17,22 +17,29 @@ object Tables {
     * schema inference, analysis — measured at 95-176 ms per call on this
     * box (r18, tools/ReadProbe as of `3e0ff69`); the battery builds these
     * frames several hundred times per bench run. The memo holds analyzed
-    * PLANS, never results: every action still scans the parquet inputs. The driver test
-    * tables are immutable for a JVM's lifetime, so a snapshotted file
-    * listing cannot go stale; weak session keys keep a long-lived process
-    * from pinning dead sessions. */
+    * PLANS, never results: every action still scans the parquet inputs.
+    * Each entry carries the table path's listing (names, sizes, mtimes) at
+    * build time, and a lookup re-lists the path (one listing, no footer
+    * read): a table rewritten in place rebuilds instead of serving the old
+    * files. Weak session keys keep a long-lived process from pinning dead
+    * sessions. */
+  private type Listing = Seq[(String, Long, Long)]
   private val frames =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]())
-  private def memo(spark: SparkSession, dir: String, name: String)(
-      build: => DataFrame): DataFrame =
+        java.util.concurrent.ConcurrentHashMap[(String, String), (Listing, DataFrame)]]())
+  private def memo(spark: SparkSession, dir: String, name: String, file: String)(
+      build: => DataFrame): DataFrame = {
+    val listing = StoreFs.listStatus(s"$dir/$file")
+      .map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
     frames.computeIfAbsent(spark,
-        _ => new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]())
-      .computeIfAbsent((dir, name), _ => build)
+        _ => new java.util.concurrent.ConcurrentHashMap[(String, String), (Listing, DataFrame)]())
+      .compute((dir, name), (_, old) =>
+        if (old != null && old._1 == listing) old else (listing, build))._2
+  }
 
   def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    memo(spark, dir, name)(spark.read.parquet(s"$dir/$name.parquet"))
+    memo(spark, dir, name, s"$name.parquet")(spark.read.parquet(s"$dir/$name.parquet"))
 
   /** `events.ts` has shipped in two parquet physical types across driver
     * testdata generations: TIMESTAMP(NANOS) (which Spark 4 refuses —
@@ -49,7 +56,7 @@ object Tables {
     * (`unix_micros * 1000`), kept only for the FQL compiler's ns-exact
     * bound semantics. */
   def events(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "__events_normalized")(eventsBuild(spark, dir))
+    memo(spark, dir, "__events_normalized", "events.parquet")(eventsBuild(spark, dir))
 
   private def eventsBuild(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

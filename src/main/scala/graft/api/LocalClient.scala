@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.engine.{Codec, FossilEngine, FossilSchema, ParquetStore, SchemaViolationException}
 import graft.fql.Compiler
@@ -90,12 +91,16 @@ final class LocalClient(
     * — run during a quiesced period). */
   def compact(): Seq[(String, Long, Long)] = store.compact()
 
-  /** STATS: per-topic entry counts + time bounds (reference
-    * `pkg/database/stats.go` analog, computed from data not heap). */
-  def stats: DataFrame = {
+  /** STATS: per-topic `(topic, n, first, last)` rows — entry counts and
+    * time bounds (reference `pkg/database/stats.go` analog, computed from
+    * data not heap), in topic order. The result is one row per topic, so it
+    * is sorted on the driver: a distributed sort would add a sampling job
+    * and a second shuffle for a topics-sized result. The order is Spark's
+    * string order (UTF-8 bytes). */
+  def stats: Seq[Row] = {
     import org.apache.spark.sql.functions._
     query("all").groupBy("topic")
       .agg(count(lit(1)).as("n"), min("time").as("first"), max("time").as("last"))
-      .orderBy("topic")
+      .collect().toSeq.sortBy(r => UTF8String.fromString(r.getString(0)))
   }
 }

@@ -8,7 +8,10 @@ import java.time.format.DateTimeFormatter
 import java.time.ZoneOffset
 import java.util.Base64
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.types.StructType
 
 import graft.engine.{Codec, FossilSchema}
 import graft.fql.Compiler
@@ -32,11 +35,13 @@ import graft.fql.Compiler
   *  - CREATE     → payload `[u32 topic-len][topic][schema ddl]`
   *  - USE        → payload = store name; per-connection [[Session]] state
   *
-  * This is a front-end, not a distributed data path: results stream to the
-  * client through `toLocalIterator` (one partition in memory at a time),
-  * which is the inherent shape of a wire protocol handing rows to a single
-  * consumer. Bulk analytics stay on the DataFrame API; this surface exists
-  * for reference-client parity (QUERY/APPEND/LIST/USE/VERSION round-trip).
+  * This is a front-end, not a distributed data path: a QUERY runs as ONE
+  * Spark job ([[WireServer.queryBody]]) whose tasks encode their own entry
+  * lines and each ship at most one response's worth of bytes; the driver
+  * cancels the job once the response passes the cap, so the job's output
+  * and the driver's buffer stay bounded by the cap however large the store
+  * is. Bulk analytics stay on the DataFrame API; this surface exists for
+  * reference-client parity (QUERY/APPEND/LIST/USE/VERSION round-trip).
   */
 final class WireServer(
     spark: SparkSession, storeRoots: Map[String, String], defaultStore: String,
@@ -218,13 +223,7 @@ final class WireServer(
         // the reference reports process-heap numbers (`pkg/database/stats.go`)
         // which are meaningless for a distributed engine; we report
         // catalog/data stats per topic instead, in the LIST line shape
-        val items = session.client.stats.collect().toSeq.map { r =>
-          // explicit UTC like the QUERY entry lines — Timestamp.toString
-          // would render in the server JVM's default timezone
-          def fmt(i: Int) = EntryTimeFormat.format(r.getTimestamp(i).toInstant)
-          s"${r.getString(0)} n=${r.getLong(1)} first=${fmt(2)} last=${fmt(3)}"
-        }
-        writeMessage(out, "OK", listPayload(items))
+        writeMessage(out, "OK", listPayload(session.client.stats.map(statsLine)))
       case "CREATE" =>
         val (topic, rest) = lengthPrefixedString(payload)
         session.client.createTopic(topic, new String(rest, StandardCharsets.UTF_8).trim)
@@ -235,40 +234,17 @@ final class WireServer(
         writeMessage(out, "OK", okPayload(200, "Ok"))
       case "QUERY" =>
         val fql = new String(payload, StandardCharsets.UTF_8)
-        val df = session.query(fql)
-        val schema = FossilSchema.fromSpark(df.schema("value").dataType)
-        // entry lines pull one partition at a time (toLocalIterator); the
-        // u32-count header is counted during that same single execution and
-        // patched into the buffered body before it hits the socket. The
-        // frame's length prefix makes buffering inherent (the reference
-        // marshals QueryResponse fully in memory too) — so responses are
-        // capped like inbound messages; past the cap the client gets a
-        // typed error instead of a server OOM or a >u32 frame.
-        val body = new java.io.ByteArrayOutputStream()
-        val bo = new DataOutputStream(body)
-        bo.writeInt(0) // count placeholder
-        var n = 0
-        val rows = df.toLocalIterator()
-        var overflow = false
-        while (rows.hasNext && !overflow) {
-          val r = rows.next()
-          val bytes = entryLine(r, schema).getBytes(StandardCharsets.UTF_8)
-          bo.writeInt(bytes.length)
-          bo.write(bytes)
-          n += 1
-          // the wire FRAME adds 8 command bytes on top of the body — cap
-          // against the frame size a client's readMessage will see, or a
-          // body in the 8-byte window passes here and fails client-side
-          overflow = body.size() > maxResponseBytes - 8
-        }
-        if (overflow)
-          writeMessage(out, "ERR", errPayload(507,
-            s"query response exceeds the $maxResponseBytes-byte wire cap; " +
-              "narrow the query or use the DataFrame API"))
-        else {
-          val resp = body.toByteArray
-          java.nio.ByteBuffer.wrap(resp).putInt(n)
-          writeMessage(out, "OK", resp)
+        // one Spark job builds the whole body (queryBody). The frame's
+        // length prefix makes buffering inherent (the reference marshals
+        // QueryResponse fully in memory too) — so responses are capped like
+        // inbound messages; past the cap the client gets a typed error
+        // instead of a server OOM or a >u32 frame.
+        queryBody(session.query(fql), maxResponseBytes) match {
+          case Some(body) => writeMessage(out, "OK", body)
+          case None =>
+            writeMessage(out, "ERR", errPayload(507,
+              s"query response exceeds the $maxResponseBytes-byte wire cap; " +
+                "narrow the query or use the DataFrame API"))
         }
       case "METRICS" =>
         // the scrape surface as a wire command (the reference exposes the
@@ -277,35 +253,6 @@ final class WireServer(
       case other =>
         writeMessage(out, "ERR", errPayload(501, s"command not found: $other"))
     }
-
-  /** `time \t topic \t base64(wire bytes) \t schema` like Entry.ToString
-    * (`pkg/database/result.go:31-33`). Array schemas arrive with length 0
-    * (Spark's ArrayType has no fixed length) and are resolved to the
-    * actual per-row length here; null values (ambiguous-schema prefix
-    * scans surface opaque nulls) encode as empty data. A null time (the
-    * synthetic entry a reduce emits) renders as Go's zero `time.Time`,
-    * which is what the reference's reduce entry carries. */
-  private def entryLine(r: org.apache.spark.sql.Row, schema: FossilSchema.SType): String = {
-    import FossilSchema.SArray
-    val t = Option(r.getAs[Timestamp]("time")).fold(WireServer.ZeroTime)(_.toInstant)
-    val topic = r.getAs[String]("topic")
-    val v = r.get(r.fieldIndex("value"))
-    val rowSchema = (schema, v) match {
-      case (SArray(_, e), s: scala.collection.Seq[_]) => SArray(s.length, e)
-      case _ => schema
-    }
-    val data =
-      if (v == null) Array.emptyByteArray
-      else Codec.encode(rowSchema, v match {
-        case row: org.apache.spark.sql.Row =>
-          // composite: struct row → map keyed by field names
-          row.schema.fieldNames.zip(row.toSeq).toMap
-        case seq: scala.collection.Seq[_] => seq
-        case x => x
-      })
-    val ts = WireServer.EntryTimeFormat.format(t)
-    s"$ts\t$topic\t${Base64.getEncoder.encodeToString(data)}\t${rowSchema.ddl}"
-  }
 
 }
 
@@ -323,6 +270,113 @@ object WireServer {
   private[api] val EntryTimeFormat =
     DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")
       .withZone(ZoneOffset.UTC)
+
+  /** A [[LocalClient.stats]] row as the STATS line
+    * `topic n=<count> first=<time> last=<time>`, times in explicit UTC like
+    * the QUERY entry lines (Timestamp.toString would render in the JVM's
+    * default timezone). */
+  def statsLine(r: Row): String = {
+    def fmt(i: Int) = EntryTimeFormat.format(r.getTimestamp(i).toInstant)
+    s"${r.getString(0)} n=${r.getLong(1)} first=${fmt(2)} last=${fmt(3)}"
+  }
+
+  /** `time \t topic \t base64(wire bytes) \t schema` like Entry.ToString
+    * (`pkg/database/result.go:31-33`). Array schemas arrive with length 0
+    * (Spark's ArrayType has no fixed length) and are resolved to the
+    * actual per-row length here; null values (ambiguous-schema prefix
+    * scans surface opaque nulls) encode as empty data. A null time (the
+    * synthetic entry a reduce emits) renders as Go's zero `time.Time`,
+    * which is what the reference's reduce entry carries. */
+  private[api] def entryLine(r: Row, schema: FossilSchema.SType): String = {
+    import FossilSchema.SArray
+    val t = Option(r.getAs[Timestamp]("time")).fold(ZeroTime)(_.toInstant)
+    val topic = r.getAs[String]("topic")
+    val v = r.get(r.fieldIndex("value"))
+    val rowSchema = (schema, v) match {
+      case (SArray(_, e), s: scala.collection.Seq[_]) => SArray(s.length, e)
+      case _ => schema
+    }
+    val data =
+      if (v == null) Array.emptyByteArray
+      else Codec.encode(rowSchema, v match {
+        case row: Row =>
+          // composite: struct row → map keyed by field names
+          row.schema.fieldNames.zip(row.toSeq).toMap
+        case seq: scala.collection.Seq[_] => seq
+        case x => x
+      })
+    val ts = EntryTimeFormat.format(t)
+    s"$ts\t$topic\t${Base64.getEncoder.encodeToString(data)}\t${rowSchema.ddl}"
+  }
+
+  /** The QUERY body for `df` — `[u32 count]`, then `[u32 len][entry line]`
+    * per row in partition order — from ONE Spark job, or None when it does
+    * not fit a `cap`-byte response. Each task encodes its own entry lines
+    * and gives up before they pass the byte budget, so no task ships more
+    * than one response could hold. Once the driver's running total passes
+    * the budget it drops what it holds and cancels the job; a job failure
+    * after that point (the cancel, or Spark's `maxResultSize` abort) is
+    * the same overflow. The job runs under its own SQL execution, so SQL
+    * metrics and `QueryExecutionListener`s see the query like a collect. */
+  private[api] def queryBody(df: DataFrame, cap: Int): Option[Array[Byte]] = {
+    // the wire FRAME adds 8 command bytes on top of the body, which starts
+    // with the u32 count: capped against the frame size a client's
+    // readMessage will see
+    val budget = cap.toLong - 12
+    val rowType = df.schema
+    val schema = FossilSchema.fromSpark(rowType("value").dataType)
+    val qe = df.queryExecution
+    val sc = df.sparkSession.sparkContext
+    val tag = s"graft-wire-query-${java.util.UUID.randomUUID()}"
+    SQLExecution.withNewExecutionId(qe, Some("wireQuery")) {
+      val rdd = qe.toRdd
+      val parts = new Array[Array[Byte]](rdd.getNumPartitions)
+      var count, total = 0L
+      var overflow = false
+      // results arrive one at a time (the job waiter serializes the handler)
+      def land(i: Int, part: Option[(Int, Array[Byte])]): Unit = part match {
+        case _ if overflow => ()
+        case Some((n, bytes)) if total + bytes.length <= budget =>
+          count += n; total += bytes.length; parts(i) = bytes
+        case _ =>
+          overflow = true
+          parts.mapInPlace(_ => null)
+          sc.cancelJobsWithTag(tag)
+      }
+      sc.addJobTag(tag)
+      val job =
+        try sc.submitJob(rdd, (rows: Iterator[InternalRow]) => encodeEntries(rows, rowType, schema, budget),
+          parts.indices, land, ())
+        finally sc.removeJobTag(tag)
+      scala.concurrent.Await.ready(job, scala.concurrent.duration.Duration.Inf)
+      if (overflow) None
+      else {
+        job.value.get.get // rethrows a failed job
+        val body = java.nio.ByteBuffer.allocate(4 + total.toInt).putInt(count.toInt)
+        parts.foreach(body.put)
+        Some(body.array())
+      }
+    }
+  }
+
+  /** One partition's rows as `[u32 len][entry line]` bytes and their count,
+    * or None as soon as those bytes would pass `budget`. */
+  private def encodeEntries(rows: Iterator[InternalRow], rowType: StructType,
+      schema: FossilSchema.SType, budget: Long): Option[(Int, Array[Byte])] = {
+    val toRow = CatalystTypeConverters.createToScalaConverter(rowType)
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new DataOutputStream(bytes)
+    var n = 0
+    while (rows.hasNext) {
+      val line = entryLine(toRow(rows.next()).asInstanceOf[Row], schema)
+        .getBytes(StandardCharsets.UTF_8)
+      if (bytes.size + 4L + line.length > budget) return None
+      out.writeInt(line.length)
+      out.write(line)
+      n += 1
+    }
+    Some((n, bytes.toByteArray))
+  }
 
   private[api] def readMessage(in: DataInputStream): (String, Array[Byte]) = {
     val length = in.readInt()

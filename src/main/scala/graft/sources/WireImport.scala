@@ -92,6 +92,10 @@ object WireImport {
 
   private val StatsLine = """^(\S+) n=(\d+) first=(\S+) last=(\S+)$""".r
 
+  /** How long a concurrent run waits for its other workers to stop after
+    * the first failure (or after the last topic) before it returns. */
+  private val WorkerStopWaitSeconds = 60L
+
   /** Wire instants carry exactly µs precision (`SSSSSS` in the server's
     * entry/STATS format), so the µs value is exact — no rounding choice. */
   private def usOf(i: Instant): Long =
@@ -307,6 +311,11 @@ object WireImport {
         s"unparseable STATS line from server: '$line'")
     }.toMap
     val entries = new java.util.concurrent.atomic.AtomicLong(0L)
+    // set on the first worker failure: the other workers stop at their
+    // next window boundary (see the concurrent branch below)
+    val cancelled = new java.util.concurrent.atomic.AtomicBoolean(false)
+    def stopIfCancelled(): Unit =
+      if (cancelled.get) throw new java.util.concurrent.CancellationException("import cancelled")
     val pages = new java.util.concurrent.atomic.AtomicInteger(0)
 
     /** Fetch one window, clamped to the exact topic and the window's own
@@ -420,6 +429,7 @@ object WireImport {
       val effLast = if (holdback) lastUs - 1 else lastUs
       val prior = stateLock.synchronized(state.get(topic))
       prior.flatMap(_.pending).foreach { case (lo, hi) =>
+        stopIfCancelled()
         val recovered = recoverPending(topic, lo, hi)
         markDone(topic, hi, recovered)
       }
@@ -448,6 +458,7 @@ object WireImport {
         val span = Math.subtractExact(effLast, startUs)
         def bound(i: Long): Long = startUs + (BigInt(span) * i / nPages).toLong
         (0L until nPages).foreach { i =>
+          stopIfCancelled()
           val lo = bound(i)
           val hi = if (i == nPages - 1) effLast else bound(i + 1) - 1
           if (hi >= lo) {
@@ -465,27 +476,36 @@ object WireImport {
         importTopic(topic, n, firstUs, lastUs)
       }
     } else {
-      // one worker owns one topic end-to-end; first failure cancels the
-      // rest (their sidecar marks survive for resume). shutdownNow may
-      // interrupt a worker mid-landing — exactly the crash the pending
-      // intent + prefix-sum recovery already covers.
+      // one worker owns one topic end-to-end; the first failure, in
+      // whichever order the workers finish, cancels the rest: each stops
+      // at its next window boundary with its sidecar marks intact for
+      // resume. The run waits for every worker to stop, so no worker lands
+      // a page behind a caller that already saw the failure (a resume
+      // started then would land the same window twice). The wait is
+      // bounded: a worker blocked reading from a stalled server has no
+      // read timeout and ignores interrupts, so after WorkerStopWaitSeconds
+      // the run returns or rethrows the first failure with that worker
+      // still running.
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(concurrency, math.max(1, work.size)))
+      val finished = new java.util.concurrent.ExecutorCompletionService[Unit](pool)
       try {
-        val futures = work.map { case (topic, (n, firstUs, lastUs)) =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit = importTopic(topic, n, firstUs, lastUs)
-          })
+        work.foreach { case (topic, (n, firstUs, lastUs)) =>
+          finished.submit(() => importTopic(topic, n, firstUs, lastUs))
         }
-        futures.foreach { f =>
-          try f.get()
+        work.foreach { _ =>
+          try finished.take().get()
           catch {
             case e: java.util.concurrent.ExecutionException =>
-              pool.shutdownNow()
               throw Option(e.getCause).getOrElse(e)
           }
         }
-      } finally pool.shutdownNow()
+      } finally {
+        cancelled.set(true)
+        pool.shutdown()
+        if (!pool.awaitTermination(WorkerStopWaitSeconds, java.util.concurrent.TimeUnit.SECONDS))
+          pool.shutdownNow()
+      }
     }
     // follow cycles keep the sidecar — it IS the inter-poll high-water
     // state; the batch path deletes it as its completion marker

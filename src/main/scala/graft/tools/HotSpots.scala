@@ -12,6 +12,7 @@ import graft.GraftSession
   */
 object HotSpots {
   def main(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: HotSpots <sfDir> <query> [threadPrefix]")
     val sfDir = args(0)
     val name = args(1)
     val prefix = if (args.length > 2) args(2) else "Executor task launch"

@@ -19,6 +19,7 @@ import graft.GraftSession
   * just the post-hoc sink read). */
 object PlanDump {
   def main(args: Array[String]): Unit = {
+    require(args.length >= 3, "usage: PlanDump <sfDir> <outDir> <name> [name...]")
     val sfDir = args(0)
     val outDir = args(1)
     val names = args.drop(2).toSeq

@@ -46,6 +46,7 @@ object ProfileQ {
   }
 
   def main(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: ProfileQ <sfDir> <query> [query...]")
     val sfDir = args(0)
     val names = args.drop(1).toSeq
     val spark = GraftSession.harness(GraftSession.cpus)

@@ -5,7 +5,7 @@ import scala.io.StdIn
 import org.apache.spark.sql.SparkSession
 
 import graft.GraftSession
-import graft.api.{ConnectionString, LocalClient, RemoteClient}
+import graft.api.{ConnectionString, LocalClient, RemoteClient, WireServer}
 import graft.engine.{Codec, FossilSchema}
 
 /** Interactive REPL — the CLI analog of the reference's client loop
@@ -284,7 +284,7 @@ object Repl {
             client.listTopics.foreach { case (t2, s) => println(s"$t2\t$s") }
           case "list" :: "schemas" :: Nil =>
             client.listSchemas.foreach(println)
-          case "stats" :: Nil => client.stats.show(100, truncate = false)
+          case "stats" :: Nil => client.stats.map(WireServer.statsLine).foreach(println)
           case "compact" :: Nil =>
             client.compact().foreach { case (g, b, a) => println(s"$g: $b -> $a files") }
           case "format" :: f :: Nil if Set("table", "csv", "json")(f) =>

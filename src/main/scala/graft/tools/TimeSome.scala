@@ -5,6 +5,7 @@ import graft.GraftSession
 /** Quick targeted timings: runMain graft.tools.TimeSome <sfDir> q1 q2 ... */
 object TimeSome {
   def main(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: TimeSome <sfDir> <query> [query...]")
     val sfDir = args(0)
     val names = args.drop(1).toSeq
     val spark = GraftSession.harness(GraftSession.cpus)

@@ -65,4 +65,26 @@ class TablesSpec extends SparkSpec {
     val entries = Tables.eventEntries(spark, d)
     assert(entries.columns.toSeq == Seq("time", "topic", "value", "__t_ns"))
   }
+
+  test("a table rewritten in place is re-read, an unchanged one is served from the memo") {
+    val dir = Files.createTempDirectory("graft_tablesspec_memo").toString
+    import spark.implicits._
+    def write(ids: Seq[Long]): Unit =
+      ids.toDF("id").coalesce(1).write.mode("overwrite").parquet(s"$dir/t.parquet")
+    write(Seq(1L, 2L, 3L))
+    val first = Tables.read(spark, dir, "t")
+    assert(Tables.read(spark, dir, "t") eq first)
+    assert(first.as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+    write(Seq(10L, 11L))
+    assert(Tables.read(spark, dir, "t").as[Long].collect().sorted.toSeq == Seq(10L, 11L))
+
+    // the normalized events frame is memoized the same way
+    val events = writeFixture("nanos")
+    assert(Tables.events(spark, events).count() == micros.size)
+    Seq(7L).toDF("event_id").withColumn("ts", timestamp_micros(lit(0L)))
+      .withColumn("user_id", lit(1L)).withColumn("event_type", lit("x"))
+      .withColumn("value", lit(1.0)).withColumn("props", lit("{}"))
+      .coalesce(1).write.mode("overwrite").parquet(s"$events/events.parquet")
+    assert(Tables.events(spark, events).select("event_id").as[Long].collect().toSeq == Seq(7L))
+  }
 }

@@ -5,7 +5,15 @@ import java.net.Socket
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
+import java.sql.Timestamp
 import java.util.Base64
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 import graft.engine.{Codec, FossilSchema}
@@ -452,23 +460,14 @@ class WireServerSpec extends SparkSpec {
 
   test("wire APPENDs land without a Spark job") {
     val root = Files.createTempDirectory("graft_wire_nojob").toString
-    var server: WireServer = null
-    var client: RemoteClient = null
-    try {
-      // created inside the probe: the server's threads inherit its marker
-      val jobs = jobsDuring {
-        server = new WireServer(spark, Map("a" -> root), "a", fixedClock)
-        client = new RemoteClient("127.0.0.1", server.port, db = "a", poolSize = 1)
-        client.create("/nj", "float64")
-        (1 to 3).foreach(i => client.append(s"/nj/t$i", Codec.encode(FossilSchema.SFloat64, i.toDouble)))
-        client.append("/nj/t1", Codec.encode(FossilSchema.SFloat64, 4.0))
-      }
-      assert(jobs == 0)
-      assert(client.query("all in /nj").map(_.decoded).toSet == Set(1.0, 2.0, 3.0, 4.0))
-    } finally {
-      if (client != null) client.close()
-      if (server != null) server.close()
+    val (jobs, _) = wireJobs(root) { client =>
+      client.create("/nj", "float64")
+      (1 to 3).foreach(i => client.append(s"/nj/t$i", Codec.encode(FossilSchema.SFloat64, i.toDouble)))
+      client.append("/nj/t1", Codec.encode(FossilSchema.SFloat64, 4.0))
     }
+    assert(jobs == 0)
+    val (_, got) = wireJobs(root)(_.query("all in /nj"))
+    assert(got.map(_.decoded).toSet == Set(1.0, 2.0, 3.0, 4.0))
   }
 
   test("a wire frame up to 64 KiB goes out in one socket write") {
@@ -506,5 +505,294 @@ class WireServerSpec extends SparkSpec {
       assert(server.conns.size == 1)
       server.conns.forEach(sock => assert(sock.getTcpNoDelay))
     } finally { client.close(); server.close() }
+  }
+
+  /** A clock one minute further on at every read, from 2025-01-01. */
+  private def tickingClock(): Compiler.Clock = {
+    val minutes = new java.util.concurrent.atomic.AtomicLong(0)
+    () => 1735689600L * 1000000000L + minutes.getAndIncrement() * 60L * 1000000000L
+  }
+
+  /** A store root holding `values` under `topic` (schema `ddl`), one file
+    * per wire APPEND, each at its own minute. */
+  private def filledRoot(prefix: String, topic: String, ddl: String,
+      values: Seq[Array[Byte]]): String = {
+    val root = Files.createTempDirectory(prefix).toString
+    fill(root, Seq((topic, ddl, values)))
+    root
+  }
+
+  private def fill(root: String, topics: Seq[(String, String, Seq[Array[Byte]])]): Unit = {
+    val server = new WireServer(spark, Map("a" -> root), "a", tickingClock())
+    val client = new RemoteClient("127.0.0.1", server.port, db = "a", poolSize = 1)
+    try topics.foreach { case (topic, ddl, values) =>
+      client.create(topic, ddl)
+      values.foreach(client.append(topic, _))
+    } finally { client.close(); server.close() }
+  }
+
+  private def f64s(n: Int): Seq[Array[Byte]] =
+    (1 to n).map(i => Codec.encode(FossilSchema.SFloat64, i.toDouble))
+
+  /** The raw reply to one QUERY on a fresh connection. */
+  private def rawQuery(port: Int, fql: String): (String, Array[Byte]) = {
+    val sock = new Socket("127.0.0.1", port)
+    try {
+      send(new DataOutputStream(sock.getOutputStream), "QUERY", fql.getBytes(StandardCharsets.UTF_8))
+      recv(new DataInputStream(sock.getInputStream))
+    } finally sock.close()
+  }
+
+  /** Spark jobs a wire call runs: the server is built inside the probe so
+    * its connection threads carry the probe's marker. */
+  private def wireJobs[T](root: String)(call: RemoteClient => T): (Int, T) = {
+    var server: WireServer = null
+    var client: RemoteClient = null
+    var got: Option[T] = None
+    try {
+      val jobs = jobsDuring {
+        server = new WireServer(spark, Map("a" -> root), "a", fixedClock)
+        client = new RemoteClient("127.0.0.1", server.port, db = "a", poolSize = 1)
+        got = Some(call(client))
+      }
+      (jobs, got.get)
+    } finally {
+      if (client != null) client.close()
+      if (server != null) server.close()
+    }
+  }
+
+  test("a wire QUERY runs one Spark job however many files the topic spans") {
+    val root = filledRoot("graft_wire_onejob", "/oj", "float64", f64s(8))
+    val files = new graft.engine.ParquetStore(spark, root).segmentCount
+    assert(files >= 4, s"topic stored as $files files")
+    val (scan, all) = wireJobs(root)(_.query("all in /oj"))
+    assert(all.map(_.decoded.asInstanceOf[Double]).sorted == (1 to 8).map(_.toDouble))
+    assert(scan == 1, s"all in /oj ran $scan jobs")
+    val (pipe, kept) = wireJobs(root)(_.query("all in /oj | filter v -> v > 2 | map x -> x * 2"))
+    assert(kept.map(_.decoded.asInstanceOf[Double]).sorted == (3 to 8).map(_ * 2.0))
+    assert(pipe == 1, s"filter | map ran $pipe jobs")
+    // a shuffle keeps its map-stage job: at most 2
+    val (sample, _) = wireJobs(root)(_.query("sample(@hour) in /oj"))
+    assert(sample <= 2, s"sample ran $sample jobs")
+    val (reduce, Seq(sum)) = wireJobs(root)(_.query("all in /oj | reduce a, b -> a + b"))
+    assert(sum.decoded == 36.0)
+    assert(reduce <= 2, s"reduce ran $reduce jobs")
+  }
+
+  test("STATS aggregates in one shuffle and orders topics on the driver") {
+    val root = Files.createTempDirectory("graft_wire_stats").toString
+    fill(root, Seq(("/st/b", "float64", f64s(2)), ("/st/a", "float64", f64s(3)),
+      ("/st/c", "float64", f64s(1))))
+    val (jobs, lines) = wireJobs(root)(_.stats())
+    assert(lines.map(_.takeWhile(_ != ' ')) == Seq("/st/a", "/st/b", "/st/c"))
+    // /st/b took minutes 0-1, /st/a minutes 2-4
+    assert(lines.head == "/st/a n=3 first=2025-01-01T00:02:00.000000Z " +
+      "last=2025-01-01T00:04:00.000000Z", lines.head)
+    assert(jobs == 2, s"STATS ran $jobs jobs")
+  }
+
+  test("QUERY bodies are the entry lines of the frame's rows, in partition order") {
+    val root = Files.createTempDirectory("graft_wire_bytes").toString
+    val composite = FossilSchema.parse("{n:int64,s:string}")
+    fill(root, Seq(
+      ("/b/f64", "float64", f64s(6)),
+      ("/b/i64", "int64", (1 to 5).map(i => Codec.encode(FossilSchema.SInt64, i * -7L))),
+      ("/b/str", "string", Seq("", "tab\there", "ünï").map(Codec.encode(FossilSchema.SString, _))),
+      ("/b/bin", "binary", Seq(Array[Byte](0, -1, 7), Array.emptyByteArray)
+        .map(Codec.encode(FossilSchema.SBinary, _))),
+      ("/b/arr", "[3]int32", Seq(Seq(1, 2, 3), Seq(-4, 0, 9))
+        .map(Codec.encode(FossilSchema.parse("[3]int32"), _))),
+      ("/b/cmp", "{n:int64,s:string}", Seq(Map("n" -> 1L, "s" -> "x"), Map("n" -> -2L, "s" -> ""))
+        .map(Codec.encode(composite, _))),
+      ("/b/none", "float64", Nil)))
+    // the body the server built before the one-job fetch: every row of the
+    // frame through toLocalIterator, one entry line each
+    def iterated(df: DataFrame): Array[Byte] = {
+      val schema = FossilSchema.fromSpark(df.schema("value").dataType)
+      val rows = df.toLocalIterator().asScala.toSeq
+      val body = new java.io.ByteArrayOutputStream()
+      val bo = new DataOutputStream(body)
+      bo.writeInt(rows.size)
+      rows.foreach { r =>
+        val line = WireServer.entryLine(r, schema).getBytes(StandardCharsets.UTF_8)
+        bo.writeInt(line.length)
+        bo.write(line)
+      }
+      body.toByteArray
+    }
+    val local = new LocalClient(spark, root, fixedClock)
+    val server = new WireServer(spark, Map("a" -> root), "a", fixedClock)
+    try {
+      for (fql <- Seq("all in /b/f64", "all in /b/i64", "all in /b/str", "all in /b/bin",
+          "all in /b/arr", "all in /b/cmp", "all in /b", "all in /b/f64 | reduce a, b -> a + b",
+          "all in /b/none", "all in /b/f64 | filter v -> v > 100")) {
+        val (cmd, body) = rawQuery(server.port, fql)
+        assert(cmd == "OK", s"$fql: ${new String(body.drop(4), StandardCharsets.UTF_8)}")
+        val want = iterated(local.query(fql))
+        assert(body.sameElements(want), s"$fql: body differs")
+      }
+      // spot checks that the fixtures exercise what they claim
+      val rc = new RemoteClient("127.0.0.1", server.port, db = "a", poolSize = 1)
+      try {
+        val Seq(red) = rc.query("all in /b/f64 | reduce a, b -> a + b")
+        assert(red.time == WireServer.ZeroTime && red.decoded == 21.0)
+      } finally rc.close()
+      assert(ByteBuffer.wrap(rawQuery(server.port, "all in /b/none")._2).getInt == 0)
+    } finally server.close()
+  }
+
+  test("a QUERY over several partitions past the cap answers 507 and the connection survives") {
+    val root = filledRoot("graft_wire_cap4", "/c4", "float64", f64s(8))
+    val fitting = "all in /c4 | filter v -> v > 5"
+    val whole = {
+      val server = new WireServer(spark, Map("a" -> root), "a", fixedClock)
+      try rawQuery(server.port, fitting)._2 finally server.close()
+    }
+    assert(ByteBuffer.wrap(whole).getInt == 3)
+    // a frame of exactly the cap (8 command bytes + body) still fits
+    val cap = 8 + whole.length
+    val server = new WireServer(spark, Map("a" -> root), "a", fixedClock, maxResponseBytes = cap)
+    try {
+      val sock = new Socket("127.0.0.1", server.port)
+      val out = new DataOutputStream(sock.getOutputStream)
+      val in = new DataInputStream(sock.getInputStream)
+      for (fql <- Seq("all in /c4", "all in /c4 | filter v -> v > 4")) {
+        send(out, "QUERY", fql.getBytes(StandardCharsets.UTF_8))
+        val (c, p) = recv(in)
+        assert(c == "ERR" && codeOf(p) == 507, fql)
+      }
+      send(out, "VERSION", Array.emptyByteArray)
+      assert(codeOf(recv(in)._2) == 200)
+      send(out, "QUERY", fitting.getBytes(StandardCharsets.UTF_8))
+      val (oc, op) = recv(in)
+      assert(oc == "OK" && op.sameElements(whole))
+      sock.close()
+    } finally server.close()
+    val tight = new WireServer(spark, Map("a" -> root), "a", fixedClock, maxResponseBytes = cap - 1)
+    try {
+      val (c, p) = rawQuery(tight.port, fitting)
+      assert(c == "ERR" && codeOf(p) == 507)
+    } finally tight.close()
+  }
+
+  test("QUERY tasks ship at most one response's worth of large entries") {
+    val root = Files.createTempDirectory("graft_wire_large").toString
+    val local = new LocalClient(spark, root, fixedClock)
+    val rnd = new scala.util.Random(7)
+    var minute = 0L
+    // four files per topic of ~2.7 KB entry lines: /big's files each hold
+    // more than the cap, /mid's each fit it but together do not
+    for ((topic, perFile) <- Seq("/big" -> 24, "/mid" -> 4); _ <- 1 to 4)
+      local.appendBatch((1 to perFile).map { _ =>
+        minute += 1
+        Row(new Timestamp(1735689600000L + minute * 60000L), topic,
+          rnd.alphanumeric.take(2000).mkString)
+      }, "string")
+    for (t <- Seq("/big", "/mid"))
+      assert(local.query(s"all in $t").queryExecution.toRdd.getNumPartitions >= 4, t)
+    val cap = 16 * 1024
+    val resultBytes = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) resultBytes.add(e.taskMetrics.resultSize)
+    }
+    val server = new WireServer(spark, Map("a" -> root), "a", fixedClock, maxResponseBytes = cap)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // jobsDuring's marker job reaches the shared listener queue after
+      // every task end of the queries before it
+      jobsDuring {
+        val sock = new Socket("127.0.0.1", server.port)
+        val out = new DataOutputStream(sock.getOutputStream)
+        val in = new DataInputStream(sock.getInputStream)
+        for (fql <- Seq("all in /big", "all in /mid")) {
+          send(out, "QUERY", fql.getBytes(StandardCharsets.UTF_8))
+          val (c, p) = recv(in)
+          assert(c == "ERR" && codeOf(p) == 507, fql)
+        }
+        send(out, "VERSION", Array.emptyByteArray)
+        assert(codeOf(recv(in)._2) == 200)
+        sock.close()
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      server.close()
+    }
+    val sizes = resultBytes.asScala.toSeq
+    assert(sizes.nonEmpty && sizes.max > 4 * 2000, sizes) // /mid's files did ship
+    assert(sizes.forall(_ <= cap), s"task results above the $cap-byte cap: $sizes")
+  }
+
+  test("a QueryExecutionListener sees one onSuccess per wire QUERY") {
+    val root = filledRoot("graft_wire_qel", "/q", "float64", f64s(5))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(funcName)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add(s"failed:$funcName")
+    }
+    val server = new WireServer(spark, Map("a" -> root), "a", fixedClock)
+    val client = new RemoteClient("127.0.0.1", server.port, db = "a", poolSize = 1)
+    spark.listenerManager.register(listener)
+    try {
+      // the executions `body` ran, up to a marker action: the listener bus
+      // delivers in order, so once the marker is seen so is everything before
+      def executions(body: => Unit): Seq[String] = {
+        seen.clear()
+        body
+        spark.range(1).collect()
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (!seen.contains("collect") && System.nanoTime() < deadline) Thread.sleep(10)
+        val got = seen.asScala.toSeq
+        assert(got.lastOption.contains("collect"), got)
+        got.init
+      }
+      val queries = Seq("all in /q", "all in /q | filter v -> v > 1 | map x -> x * 2",
+        "all in /q | reduce a, b -> a + b")
+      assert(executions(queries.foreach(client.query)) == Seq.fill(queries.size)("wireQuery"))
+      // sample's greedy pass plans through an RDD, which is an execution of
+      // its own when the query compiles; the fetch is still one
+      val sampled = executions(client.query("sample(@hour) in /q"))
+      assert(sampled.count(_ == "wireQuery") == 1 && sampled.forall(Set("wireQuery", "rdd")), sampled)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      client.close(); server.close()
+    }
+  }
+
+  test("hostile frames close only their own connection") {
+    val root = filledRoot("graft_wire_hostile", "/h", "float64", f64s(2))
+    val server = new WireServer(spark, Map("a" -> root), "a", fixedClock)
+    def int(v: Int) = ByteBuffer.allocate(4).putInt(v).array()
+    val cmd = "QUERY".getBytes(StandardCharsets.UTF_8).padTo(8, 0.toByte)
+    try {
+      val bystander = new Socket("127.0.0.1", server.port)
+      val bout = new DataOutputStream(bystander.getOutputStream)
+      val bin = new DataInputStream(bystander.getInputStream)
+      for ((what, frame) <- Seq(
+          "a length prefix above MaxMessageBytes" -> int(WireServer.MaxMessageBytes + 1),
+          "a negative length prefix" -> int(-1),
+          "a length prefix below 8" -> int(7),
+          "a frame truncated mid-body" -> (int(100) ++ cmd ++ "all in".getBytes(StandardCharsets.UTF_8)))) {
+        val hostile = new Socket("127.0.0.1", server.port)
+        hostile.setSoTimeout(30000)
+        hostile.getOutputStream.write(frame)
+        hostile.getOutputStream.flush()
+        hostile.shutdownOutput() // the truncated body never completes
+        val eof = try hostile.getInputStream.read() catch { case _: java.net.SocketException => -1 }
+        assert(eof == -1, s"$what: the server did not close the connection")
+        hostile.close()
+        // the open connection still answers
+        send(bout, "QUERY", "all in /h".getBytes(StandardCharsets.UTF_8))
+        val (c, p) = recv(bin)
+        assert(c == "OK" && ByteBuffer.wrap(p).getInt == 2, what)
+        // and the server still accepts
+        val fresh = new RemoteClient("127.0.0.1", server.port, db = "a", poolSize = 1)
+        try assert(fresh.query("all in /h").size == 2, what) finally fresh.close()
+      }
+      bystander.close()
+    } finally server.close()
   }
 }

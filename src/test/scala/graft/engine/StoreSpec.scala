@@ -45,7 +45,7 @@ class StoreSpec extends SparkSpec {
     assert(c2.query("all in /sensors/temp/garage").count() == 2)
 
     // stats surface
-    val st = c2.stats.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val st = c2.stats.map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(st("/sensors/temp/garage") == 2L && st("/logs") == 1L)
   }
 
