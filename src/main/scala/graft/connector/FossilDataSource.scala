@@ -4,16 +4,21 @@ import java.util.OptionalLong
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
+import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.engine.{Catalog, FossilSchema, ParquetStore, StoreFs, StoreMigration}
-import graft.engine.FossilSchema.{SAmbiguous, SType, SUnknown}
+import graft.engine.FossilSchema.{SType, SUnknown}
 
 /** `spark.read.format("fossil")` — the engine's front door for plain Spark
   * users: a DataSource V2 READ connector over a ParquetStore root, so every
@@ -30,17 +35,21 @@ import graft.engine.FossilSchema.{SAmbiguous, SType, SUnknown}
   * combined type; a mixed-scalar store reads as null binary, exactly like
   * the library path).
   *
-  * Pushdown, mirroring what the engine's own query path gets from
-  * [[graft.plans.RawTimePushdown]] + partition pruning:
+  * Store files are read by Spark's own Parquet reader, one reader per
+  * schema group ([[FossilReaderFactory]]); the connector adds only what
+  * Spark's file source does not know about a store root:
   *   - topic equality / IN / prefix filters prune PARTITION DIRECTORIES at
   *     planning time (no file of a filtered-out topic is even listed);
-  *   - time range bounds become parquet row-group predicates evaluated
-  *     against min/max stats (the store writes time-sorted files so the
-  *     stats partition the time axis);
-  *   - column pruning reaches the parquet pages (a `select(value)` never
-  *     decodes time).
-  * Every pushed filter is ALSO returned as a residual — Spark re-evaluates
-  * the exact predicate, so pruning is never a correctness input.
+  *   - the topic comes from the `topic=` directory, and each schema group's
+  *     value is widened to the combined type by the same rule `entries`
+  *     uses.
+  * Spark's reader then prunes columns (a `select(value)` never decodes
+  * time) and, where the file's time column is INT64, row groups by the
+  * pushed time bounds (the store writes time-sorted files so min/max stats
+  * partition the time axis; INT96, Spark's default write type, has no
+  * usable stats). Every pushed filter is ALSO returned as a residual —
+  * Spark re-evaluates the exact predicate, so pruning is never a
+  * correctness input.
   *
   * Reads are DSv2-only by design: writes go through the library/client
   * (`LocalClient.append`, streaming ingest) because the store has a
@@ -108,22 +117,6 @@ private[connector] object FossilDataSource {
           s"fossil source reads exactly one store root, got ${items.length} paths")
       }
     }
-
-  /** Inverse of Spark's partition-path escaping (`%XX` hex sequences —
-    * topic values contain `/`, stored as `%2F`). */
-  def unescapePathName(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        val hex = s.substring(i + 1, i + 3)
-        try { sb.append(Integer.parseInt(hex, 16).toChar); i += 3 }
-        catch { case _: NumberFormatException => sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
 }
 
 /** What the shared [[FossilScanBuilder]] needs from either layout's table:
@@ -133,7 +126,6 @@ trait FossilTableBase extends Table with SupportsRead {
   def root: String
   def prefix: String
   def combined: SType
-  def opaqueValue: Boolean
   /** Topics under the prefix (candidate set the pushed topic filters cut). */
   def prefixTopics: Seq[String]
   /** Layout-specific scan over the surviving topics. */
@@ -172,7 +164,6 @@ final class FossilTable(
     case SUnknown => FossilSchema.default
     case s => s
   }
-  val opaqueValue: Boolean = combined == SAmbiguous
 
   override def name(): String = s"fossil:$root[$prefix]"
 
@@ -198,6 +189,11 @@ final class FossilTable(
         files.map(f => FossilScan.footerRowCount(f.path, f.length)).sum.toString)
     m
   }
+
+  /** The distinct schema groups of `topics`, in the order the scan indexes
+    * them (and lists their files). */
+  def groupsOf(topics: Seq[String]): Seq[SType] =
+    topics.flatMap(catalog.schemaOf).distinct
 
   override def makeScan(wanted: Seq[String], pruned: StructType,
       loUs: Option[Long], hiUs: Option[Long], pushed: Array[Filter]): Scan =
@@ -298,27 +294,20 @@ final class FossilScan(
 
   /** Planning-time listing: only surviving topics' partition directories
     * are walked (driver-side, same class of work as Spark's own file
-    * index; a petabyte deployment would swap a manifest in here). Files
-    * split by `spark.sql.files.maxPartitionBytes` byte ranges — row
+    * index; a petabyte deployment would swap a manifest in here). */
+  private lazy val plannedFiles: Seq[FossilScan.DataFile] =
+    FossilScan.listDataFiles(table, wantedTopics)
+
+  /** Files split by `spark.sql.files.maxPartitionBytes` byte ranges — row
     * groups resolve to the range holding their midpoint, so no footer is
     * read at planning time. */
-  private lazy val partitions: Array[FossilInputPartition] =
-    FossilScan.split(FossilScan.listDataFiles(table, wantedTopics),
-      FossilScan.maxPartitionBytes())
-
   override def planInputPartitions(): Array[InputPartition] =
-    partitions.toArray[InputPartition]
+    FossilScan.split(table, wantedTopics, plannedFiles, FossilScan.maxPartitionBytes())
+      .toArray[InputPartition]
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new FossilReaderFactory(pruned.fieldNames, table.combined.sparkType,
-      table.opaqueValue, loUs, hiUs,
-      new org.apache.spark.util.SerializableConfiguration(StoreFs.conf()))
-
-  /** Distinct planned files (a file splits into several byte-range
-    * partitions; stats must count it once). */
-  private lazy val plannedFiles: Seq[(String, Long)] =
-    partitions.map(p => (p.path, p.length)).groupBy(_._1)
-      .map { case (path, chunks) => (path, chunks.map(_._2).sum) }.toSeq
+    FossilReaderFactory(SparkSession.active, table.groupsOf(wantedTopics),
+      table.combined, pruned, loUs, hiUs)
 
   /** Exact row counts from parquet footers (r17 verdict item 5 — SQL
     * users get the row visibility wire STATS clients have). Footer reads
@@ -328,12 +317,10 @@ final class FossilScan(
     * sizeInBytes) rather than stall planning on a petabyte listing. */
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): OptionalLong =
-      OptionalLong.of(partitions.map(_.length).sum)
+      OptionalLong.of(plannedFiles.map(_.length).sum)
     override def numRows(): OptionalLong =
       if (plannedFiles.size > FossilScan.statsFooterCap) OptionalLong.empty()
-      else OptionalLong.of(plannedFiles.map { case (p, l) =>
-        FossilScan.footerRowCount(p, l)
-      }.sum)
+      else OptionalLong.of(plannedFiles.map(f => FossilScan.footerRowCount(f.path, f.length)).sum)
   }
 }
 
@@ -350,14 +337,13 @@ private[connector] object FossilScan {
   def listDataFiles(table: FossilTable, wantedTopics: Seq[String]): Seq[DataFile] = {
     val out = Seq.newBuilder[DataFile]
     val wantedSet = wantedTopics.toSet
-    val schemas = wantedTopics.flatMap(table.catalog.schemaOf).distinct
-    schemas.foreach { s =>
+    table.groupsOf(wantedTopics).foreach { s =>
       val gdir = s"${table.root}/data/sgroup=${ParquetStore.schemaKey(s)}"
       if (StoreFs.isDirectory(gdir)) {
         StoreFs.listStatus(gdir).filter(_.isDirectory).foreach { td =>
           val name = td.getPath.getName
           if (name.startsWith("topic=")) {
-            val topic = FossilDataSource.unescapePathName(name.stripPrefix("topic="))
+            val topic = ExternalCatalogUtils.unescapePathName(name.stripPrefix("topic="))
             if (wantedSet.contains(topic)) {
               StoreFs.listStatus(td.getPath.toString).filter { st =>
                 val n = st.getPath.getName
@@ -374,14 +360,24 @@ private[connector] object FossilScan {
     out.result()
   }
 
-  /** Byte-range splitting, the same convention as the batch scan. */
-  def split(files: Seq[DataFile], maxBytes: Long): Array[FossilInputPartition] = {
+  /** Byte-range splitting of `files` of `table`'s `wantedTopics`, shared by
+    * the batch scan and the micro-batch stream; each split is tagged with
+    * its file's schema group, indexed as in [[FossilTable.groupsOf]]. */
+  def split(table: FossilTable, wantedTopics: Seq[String], files: Seq[DataFile],
+      maxBytes: Long): Array[FossilInputPartition] = {
+    val groupIndex = table.groupsOf(wantedTopics).zipWithIndex.toMap
+    val wanted = wantedTopics.toSet
     val out = Array.newBuilder[FossilInputPartition]
-    files.foreach { f =>
+    // a checkpoint written under other topic filters can name files of
+    // topics this scan does not read; their rows are not its rows
+    files.filter(f => wanted.contains(f.topic)).foreach { f =>
+      val group = groupIndex(table.catalog.schemaOf(f.topic).get)
+      val topic = InternalRow(UTF8String.fromString(f.topic))
       var off = 0L
       while (off < f.length) {
         val chunk = math.min(maxBytes, f.length - off)
-        out += FossilInputPartition(f.path, off, chunk, f.topic)
+        out += FossilInputPartition(group, PartitionedFile(topic,
+          SparkPath.fromPathString(f.path), off, chunk, fileSize = f.length))
         off += chunk
       }
     }

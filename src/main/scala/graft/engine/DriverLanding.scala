@@ -79,8 +79,7 @@ private[engine] object DriverLanding {
     val sqlConf = spark.sessionState.conf
     val hadoopConf = spark.sessionState.newHadoopConf()
     val writers = topics.map(_.target).distinct.map { t =>
-      val dataSchema = StructType(Seq(
-        StructField("time", TimestampType), StructField("value", t.sparkType)))
+      val dataSchema = ParquetStore.fileSchema(t.sparkType)
       val job = Job.getInstance(hadoopConf)
       val factory = ParquetUtils.prepareWrite(sqlConf, job, dataSchema,
         new ParquetOptions(Map.empty[String, String], sqlConf))

@@ -206,23 +206,11 @@ final class ParquetStore(spark: SparkSession, root: String) extends TopicStore {
         ParquetStore.entrySchema(combined.sparkType))
     }
     val combined = FossilSchema.combineAll(groups.map(_._1))
-    val target: DataType = combined match {
-      case SAmbiguous => BinaryType // untyped fallback view
-      case s => s.sparkType
-    }
     groups.map { case (s, dir) =>
       val df = readGroup(s, dir)
-      val v = combined match {
-        case SAmbiguous => lit(null).cast(BinaryType).as("value") // opaque
-        // sameType = equal modulo nullability: parquet reads arrays back
-        // with nullable elements, and ANSI cast refuses array<double> →
-        // array<double> across that nullability gap — don't cast what
-        // already matches
-        case _ if ParquetStore.sameModuloNullability(df.schema("value").dataType, target) =>
-          col("value").as("value")
-        case _ => col("value").cast(target).as("value")
-      }
-      df.select(col("time"), col("topic").cast(StringType).as("topic"), v)
+      val v = ParquetStore.widenValue(df.schema("value").dataType, combined)(
+        col("value"))(_.cast(_), lit(null).cast(BinaryType))
+      df.select(col("time"), col("topic").cast(StringType).as("topic"), v.as("value"))
     }.reduce(_ unionByName _)
       // a schema group can host topics OUTSIDE the prefix — enforce the
       // trait contract here (an IN-list on the partition column, so it
@@ -339,6 +327,27 @@ object ParquetStore {
   private[engine] def entrySchema(value: DataType): StructType = StructType(Seq(
     StructField("time", TimestampType), StructField("topic", StringType),
     StructField("value", value)))
+
+  /** The columns of a store data file, `(time, value)`: the topic is the
+    * `topic=` directory, not a column. */
+  private[graft] def fileSchema(value: DataType): StructType = StructType(Seq(
+    StructField("time", TimestampType), StructField("value", value)))
+
+  /** The one widening rule for reading a schema group, whose `value` column
+    * has type `group`, into a view of `combined` type. An Ambiguous view
+    * reads as null binary (opaque); a value already of the combined type
+    * modulo nullability is left alone (Parquet reads arrays back with
+    * nullable elements, and an ANSI cast refuses array<double> →
+    * array<double> across that gap); anything else is cast to the combined
+    * type. `cast` and `nullBinary` build the result in the caller's
+    * expression API (a `Column` here, a Catalyst `Expression` in the
+    * connector); `value` is only built when the view reads it. */
+  private[graft] def widenValue[E](group: DataType, combined: SType)(value: => E)(
+      cast: (E, DataType) => E, nullBinary: => E): E = combined match {
+    case SAmbiguous => nullBinary
+    case c if sameModuloNullability(group, c.sparkType) => value
+    case c => cast(value, c.sparkType)
+  }
 
   /** Type equality ignoring nullability flags (Spark's own sameType is
     * private[sql]). */

@@ -18,8 +18,8 @@ object HotSpots {
     val prefix = if (args.length > 2) args(2) else "Executor task launch"
     val spark = GraftSession.harness(GraftSession.cpus)
 
-    // warm-up like Bench
-    try graft.SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()
+    // warm-up on the data the sampled run reads (caches, JIT, codegen)
+    try graft.SparkEntry.queries(name)(spark, sfDir).count()
     catch { case e: Throwable => println(s"[warm $name] $e") }
 
     val counts = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder]

@@ -7,7 +7,6 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
 
 import graft.SparkSpec
 import graft.api.LocalClient
@@ -73,7 +72,8 @@ class FossilDataSourceSpec extends SparkSpec {
     val scan = scanOf(one)
     // only /m/a's directory was listed: every planned partition is /m/a
     val parts = scan.planInputPartitions().map(_.asInstanceOf[FossilInputPartition])
-    assert(parts.nonEmpty && parts.forall(_.topic == "/m/a"))
+    assert(parts.nonEmpty &&
+      parts.forall(_.file.partitionValues.getUTF8String(0).toString == "/m/a"))
     assert(one.count() == 10)
     assert(scan.description().contains("PushedFilters: ["))
     assert(scan.description().contains("topic"))
@@ -186,23 +186,73 @@ class FossilDataSourceSpec extends SparkSpec {
     assert(new String(Files.readAllBytes(sidecar), "UTF-8").contains("\"99\""))
   }
 
-  test("time-bound unit conversion is exact for millis, widened-safe for nanos") {
-    import FossilTimeBounds._
-    // lo: ms*1000 >= loUs  ⟺  ms >= ceil(lo/1000)
-    assert(loInUnit(1000L, TimeUnit.MILLIS) == 1L)
-    assert(loInUnit(1001L, TimeUnit.MILLIS) == 2L)
-    assert(loInUnit(-1001L, TimeUnit.MILLIS) == -1L)
-    // hi: ms*1000 <= hiUs  ⟺  ms <= floor(hi/1000)
-    assert(hiInUnit(1999L, TimeUnit.MILLIS) == 1L)
-    assert(hiInUnit(-1L, TimeUnit.MILLIS) == -1L)
-    assert(loInUnit(5L, TimeUnit.NANOS) == 5000L)
-    assert(hiInUnit(5L, TimeUnit.NANOS) == 5999L)
-    assert(hiInUnit(Long.MaxValue / 1000L, TimeUnit.NANOS) == Long.MaxValue)
-    // INT96: epoch day 0 = julian 2440588
-    val buf = java.nio.ByteBuffer.allocate(12).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    buf.putLong(1500L) // 1500 ns of day
-    buf.putInt(2440589) // one day after epoch
-    assert(int96ToMicros(buf.array()) == 86400000000L + 1L)
+  /** Run `body` with the session SQL conf `key` set to `value`, then put
+    * back what the session had (set or unset). */
+  private def withSqlConf[T](key: String, value: String)(body: => T): T = {
+    val old = spark.conf.getAll.get(key)
+    spark.conf.set(key, value)
+    try body
+    finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("millisecond and INT96 time columns filter exactly, like entries()") {
+    // one store file with TIMESTAMP_MILLIS time, one with INT96; the
+    // bounds fall inside a millisecond and on its edges. Spark's reader
+    // prunes row groups of the MILLIS file by its stats and none of the
+    // INT96 file; the residual filter makes both exact.
+    val root = newRoot("tunit")
+    val c = new LocalClient(spark, root, fixedClock)
+    c.createTopic("/tu", "int64")
+    val base = 1704067200000000L // 2024-01-01T00:00:00Z in µs
+    def land(outputType: String, offsetsUs: Seq[Long], firstValue: Long): Unit =
+      withSqlConf("spark.sql.parquet.outputTimestampType", outputType) {
+        import spark.implicits._
+        c.appendFrame(offsetsUs.zipWithIndex.map { case (o, i) => (base + o, firstValue + i) }
+          .toDF("us", "value").coalesce(1)
+          .select(timestamp_micros(col("us")).as("time"), lit("/tu").as("topic"),
+            col("value")), "int64")
+      }
+    land("TIMESTAMP_MILLIS", Seq(1000L, 2000L, 3000L), 0L)
+    land("INT96", Seq(1500L, 2000L, 2999L), 10L)
+    val timeTypes = Files.walk(java.nio.file.Paths.get(root, "data")).toArray
+      .map(_.toString).filter(_.endsWith(".parquet")).map { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f), spark.sparkContext.hadoopConfiguration))
+        try {
+          val schema = r.getFooter.getFileMetaData.getSchema
+          schema.getType(schema.getFieldIndex("time")).toString
+        } finally r.close()
+      }
+    assert(timeTypes.length == 2 && timeTypes.exists(_.contains("TIMESTAMP(MILLIS")) &&
+      timeTypes.exists(_.contains("int96")), timeTypes.mkString("; "))
+
+    def at(offUs: Long) = lit(java.time.Instant.EPOCH.plusNanos((base + offUs) * 1000L))
+    val cases: Seq[(String, org.apache.spark.sql.Column, Long => Boolean)] = Seq(
+      (">= 1.5ms", col("time") >= at(1500), _ >= 1500),
+      (">= 2ms", col("time") >= at(2000), _ >= 2000),
+      ("<= 1.5ms", col("time") <= at(1500), _ <= 1500),
+      ("<= 2ms", col("time") <= at(2000), _ <= 2000),
+      ("< 1.5ms", col("time") < at(1500), _ < 1500),
+      ("< 2ms", col("time") < at(2000), _ < 2000),
+      ("< 2.5ms", col("time") < at(2500), _ < 2500),
+      (">= 1.5ms and < 3ms", col("time") >= at(1500) && col("time") < at(3000),
+        o => o >= 1500 && o < 3000))
+    def rows(df: DataFrame): Seq[(Long, String, Long)] =
+      df.select(unix_micros(col("time")), col("topic"), col("value")).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted
+    val lib = new graft.engine.ParquetStore(spark, root).entries("/")
+    val all = rows(lib)
+    assert(all.map(r => r._1 - base) == Seq(1000L, 1500L, 2000L, 2000L, 2999L, 3000L))
+    cases.foreach { case (name, p, keep) =>
+      val fossil = rows(readFossil(root).filter(p))
+      assert(fossil == all.filter(r => keep(r._1 - base)), name)
+      // entries() hands the filter to Spark's file source as written, and
+      // Spark floors a `<` bound to whole milliseconds for the MILLIS
+      // file, pruning the row group that holds 1.0 ms (a defect of that
+      // path, recorded on ROADMAP); every other bound agrees
+      if (name != "< 1.5ms") assert(fossil == rows(lib.filter(p)), name)
+    }
   }
 
   test("byte-range splits cover a multi-row-group file exactly once") {
@@ -240,6 +290,64 @@ class FossilDataSourceSpec extends SparkSpec {
       else hadoop.set("parquet.block.size", oldBlock)
       spark.conf.set("spark.sql.files.maxPartitionBytes", oldMax)
     }
+  }
+
+  test("topics with escaped path characters read back under their exact names") {
+    // Spark's partition writer escapes '%', '=' and '#' in `topic=` dirs
+    // (a space stays literal); batch and stream must undo exactly that
+    val root = newRoot("esc")
+    val odd = "/odd/50% a=b#c d"
+    val plain = "/odd/plain"
+    val c = new LocalClient(spark, root, fixedClock)
+    c.createTopic("/odd", "float64")
+    c.append(odd, 1.0, ts("2024-01-01T00:00:00Z")) // driver-side landing
+    import spark.implicits._
+    c.appendFrame(Seq((ts("2024-01-02T00:00:00Z"), odd, 2.0), // Spark write job
+      (ts("2024-01-03T00:00:00Z"), plain, 3.0)).toDF("time", "topic", "value"), "float64")
+    def topicValues(df: DataFrame): Seq[(String, Double)] =
+      df.select("topic", "value").collect().map(r => (r.getString(0), r.getDouble(1)))
+        .toSeq.sorted
+    val expected = Seq((odd, 1.0), (odd, 2.0), (plain, 3.0))
+    assert(topicValues(readFossil(root)) == expected)
+    assert(topicValues(readFossil(root).filter(col("topic") === odd)) ==
+      Seq((odd, 1.0), (odd, 2.0)))
+    val sink = "graft_dsv2_esc_stream"
+    val q = spark.readStream.format("fossil").load(root).writeStream
+      .option("checkpointLocation", newRoot("esc_ckpt"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .format("memory").queryName(sink).outputMode("append").start()
+    try q.awaitTermination() finally q.stop()
+    assert(topicValues(spark.table(sink)) == expected)
+  }
+
+  test("reads leave the caller's Hadoop configuration untouched") {
+    // Spark's Parquet reader writes its requested schema into the Hadoop
+    // conf it is given; the connector must hand it a copy, per schema group
+    val root = newRoot("hconf")
+    val c = new LocalClient(spark, root, fixedClock)
+    c.createTopic("/w/i32", "int32")
+    c.createTopic("/w/i64", "int64")
+    c.append("/w/i32", 7, ts("2024-01-01T00:00:00Z"))
+    c.append("/w/i64", 9L, ts("2024-01-02T00:00:00Z"))
+    def snapshot(): Map[String, String] = {
+      val it = spark.sparkContext.hadoopConfiguration.iterator()
+      val b = Map.newBuilder[String, String]
+      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue }
+      b.result()
+    }
+    val before = snapshot()
+    assert(readFossil(root).orderBy("time").collect().map(_.getLong(2)).toSeq == Seq(7L, 9L))
+    assert(readFossil(root, prefix = "/w/i32").collect().map(_.getInt(2)).toSeq == Seq(7))
+    val sink = "graft_dsv2_hconf_stream"
+    val q = spark.readStream.format("fossil").load(root).writeStream
+      .option("checkpointLocation", newRoot("hconf_ckpt"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .format("memory").queryName(sink).outputMode("append").start()
+    try q.awaitTermination() finally q.stop()
+    assert(spark.table(sink).count() == 2L)
+    val after = snapshot()
+    val changed = (before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k))
+    assert(changed.isEmpty, s"Hadoop conf keys changed by the reads: ${changed.toSeq.sorted}")
   }
 
   test("SQL view over the connector composes with plain Spark SQL") {
