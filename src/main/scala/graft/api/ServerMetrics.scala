@@ -3,6 +3,8 @@ package graft.api
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.LongAdder
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 /** Server-side operational metrics — reference parity with the fossil
   * metrics store (`pkg/server/metrics.go:19-28`):
   *
@@ -139,6 +141,18 @@ final class ServerMetrics {
       sb ++= "# HELP jvm_threads_daemon Current daemon JVM thread count\n"
       sb ++= "# TYPE jvm_threads_daemon gauge\n"
       sb ++= s"jvm_threads_daemon ${threads.getDaemonThreadCount}\n"
+      // the cost of generated code: classes Spark compiled with Janino,
+      // then the JIT's time compiling them (and everything else) to
+      // machine code. Both count the whole JVM, not just this server.
+      sb ++= "# HELP jvm_codegen_compiles_total Classes Spark's code generator compiled, JVM-wide\n"
+      sb ++= "# TYPE jvm_codegen_compiles_total counter\n"
+      sb ++= s"jvm_codegen_compiles_total ${CodegenMetrics.METRIC_COMPILATION_TIME.getCount}\n"
+      Option(java.lang.management.ManagementFactory.getCompilationMXBean)
+        .filter(_.isCompilationTimeMonitoringSupported).foreach { jit =>
+          sb ++= "# HELP jvm_jit_compile_seconds_total Time the JIT spent compiling, JVM-wide\n"
+          sb ++= "# TYPE jvm_jit_compile_seconds_total counter\n"
+          sb ++= s"jvm_jit_compile_seconds_total ${jit.getTotalCompilationTime / 1000.0}\n"
+        }
     }
     sb ++= "# HELP fossil_requests Request counts for the fossil commands\n"
     sb ++= "# TYPE fossil_requests counter\n"

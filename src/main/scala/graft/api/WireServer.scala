@@ -10,11 +10,12 @@ import java.util.Base64
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{SQLExecution, SQLExecutionRDD}
 import org.apache.spark.sql.types.StructType
 
 import graft.engine.{Codec, FossilSchema}
 import graft.fql.Compiler
+import graft.plans.ParamLiterals
 
 /** Minimal TCP front-end speaking the fossil wire protocol shape — the S7
   * close-out. Framing per `pkg/proto/message.go:80-113`: every message is
@@ -316,8 +317,17 @@ object WireServer {
     * than one response could hold. Once the driver's running total passes
     * the budget it drops what it holds and cancels the job; a job failure
     * after that point (the cancel, or Spark's `maxResultSize` abort) is
-    * the same overflow. The job runs under its own SQL execution, so SQL
-    * metrics and `QueryExecutionListener`s see the query like a collect. */
+    * the same overflow. The job runs under its own SQL execution, so
+    * `QueryExecutionListener`s see the query like a collect.
+    *
+    * The job executes a rewritten copy of the physical plan
+    * ([[graft.plans.ParamLiterals]]): the time windows and thresholds in
+    * its filters reach the generated code as references, not as inlined
+    * constants. Wire traffic is a run of same-shape queries that differ
+    * only in those constants; without the rewrite each one compiled fresh
+    * Janino classes, which the JIT then compiled again. With it, a shape
+    * compiles once. Pushed scan filters keep their real literals, so
+    * row-group pruning is unchanged. */
   private[api] def queryBody(df: DataFrame, cap: Int): Option[Array[Byte]] = {
     // the wire FRAME adds 8 command bytes on top of the body, which starts
     // with the u32 count: capped against the frame size a client's
@@ -329,7 +339,8 @@ object WireServer {
     val sc = df.sparkSession.sparkContext
     val tag = s"graft-wire-query-${java.util.UUID.randomUUID()}"
     SQLExecution.withNewExecutionId(qe, Some("wireQuery")) {
-      val rdd = qe.toRdd
+      val rdd = new SQLExecutionRDD(ParamLiterals(qe.executedPlan).execute(),
+        qe.sparkSession.sessionState.conf)
       val parts = new Array[Array[Byte]](rdd.getNumPartitions)
       var count, total = 0L
       var overflow = false

@@ -871,11 +871,23 @@ object Similarity {
     * the only IEEE divergence from the fold's 0.0 seed is the sign of a
     * -0.0 total, which the e6 round-and-cast collapses anyway — so every
     * iscore is bit-identical to the previous expression and the oracle's. */
-  private def adcScore(numSub: Int, numCodes: Int): org.apache.spark.sql.Column =
+  private def adcScore(numSub: Int, numCodes: Int): org.apache.spark.sql.Column = {
+    requireNumSub(numSub)
     (0 until numSub).map { mi =>
       element_at(col("lut"),
         lit(mi * numCodes) + element_at(col("codes"), mi + 1) + 1)
     }.reduceLeft(_ + _)
+  }
+
+  /** Most PQ subspaces an ADC score unrolls. [[adcScore]] writes one term
+    * per subspace into the plan and its generated method, so an unbounded
+    * `numSub` grows both without limit; the battery uses 8. */
+  val MaxPqSubspaces = 64
+
+  private def requireNumSub(numSub: Int): Unit =
+    require(numSub >= 1 && numSub <= MaxPqSubspaces,
+      s"numSub = $numSub: the ADC score unrolls one term per subspace, " +
+        s"so numSub must be in 1..$MaxPqSubspaces")
 
   /** Per-query ADC table: lut[mi·numCodes + j] = qsub·cw, ordered. */
   private[operators] def pqLutOf(
@@ -999,7 +1011,8 @@ object Similarity {
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String,
       numSub: Int, numCodes: Int, k: Int, refine: Int = 4): DataFrame = {
-    require(numSub >= 1 && numCodes >= 2 && k >= 1 && refine >= 1)
+    requireNumSub(numSub)
+    require(numCodes >= 2 && k >= 1 && refine >= 1)
     val cd = corpus.select(col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v"))
     val (cbArr, _) = pqCodebook(cd, numSub, numCodes)
@@ -1088,7 +1101,8 @@ object Similarity {
       idCol: String, vecCol: String, centroidIdCol: String,
       numSub: Int, numCodes: Int, k: Int,
       nprobe: Int = 1, refine: Int = 8): DataFrame = {
-    require(numSub >= 1 && numCodes >= 2 && k >= 1 && nprobe >= 1 && refine >= 1)
+    requireNumSub(numSub)
+    require(numCodes >= 2 && k >= 1 && nprobe >= 1 && refine >= 1)
     val spark = corpus.sparkSession
     import spark.implicits._
     val cd = corpus.select(col(idCol).as("id"),

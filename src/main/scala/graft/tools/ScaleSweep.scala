@@ -196,9 +196,9 @@ object ScaleSweep {
       ("q_asof_forward", "linear"))
       .filter { case (n, _) => subset.forall(_.contains(n)) }
 
-    // warm-up pass at the smallest SF (JIT/codegen), as Bench does
+    // warm-up pass over the 1× base (JIT/codegen), the data then timed
     ops.foreach { case (n, _) =>
-      try graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
+      try graft.SparkEntry.queries(n)(spark, base).count()
       catch { case _: Throwable => () }
     }
 

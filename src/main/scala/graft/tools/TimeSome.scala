@@ -10,7 +10,7 @@ object TimeSome {
     val names = args.drop(1).toSeq
     val spark = GraftSession.harness(GraftSession.cpus)
     names.foreach { n =>
-      try graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
+      try graft.SparkEntry.queries(n)(spark, sfDir).count()
       catch { case _: Throwable => () }
     }
     // same harness accounting as Bench: streaming replay rows charge

@@ -10,6 +10,7 @@ import java.util.Base64
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.QueryExecution
@@ -534,6 +535,20 @@ class WireServerSpec extends SparkSpec {
   private def f64s(n: Int): Seq[Array[Byte]] =
     (1 to n).map(i => Codec.encode(FossilSchema.SFloat64, i.toDouble))
 
+  /** `rows` of `df` as a QUERY body: the count, then each entry line. */
+  private def entryBody(df: DataFrame, rows: Seq[Row]): Array[Byte] = {
+    val schema = FossilSchema.fromSpark(df.schema("value").dataType)
+    val body = new java.io.ByteArrayOutputStream()
+    val bo = new DataOutputStream(body)
+    bo.writeInt(rows.size)
+    rows.foreach { r =>
+      val line = WireServer.entryLine(r, schema).getBytes(StandardCharsets.UTF_8)
+      bo.writeInt(line.length)
+      bo.write(line)
+    }
+    body.toByteArray
+  }
+
   /** The raw reply to one QUERY on a fresh connection. */
   private def rawQuery(port: Int, fql: String): (String, Array[Byte]) = {
     val sock = new Socket("127.0.0.1", port)
@@ -608,19 +623,7 @@ class WireServerSpec extends SparkSpec {
       ("/b/none", "float64", Nil)))
     // the body the server built before the one-job fetch: every row of the
     // frame through toLocalIterator, one entry line each
-    def iterated(df: DataFrame): Array[Byte] = {
-      val schema = FossilSchema.fromSpark(df.schema("value").dataType)
-      val rows = df.toLocalIterator().asScala.toSeq
-      val body = new java.io.ByteArrayOutputStream()
-      val bo = new DataOutputStream(body)
-      bo.writeInt(rows.size)
-      rows.foreach { r =>
-        val line = WireServer.entryLine(r, schema).getBytes(StandardCharsets.UTF_8)
-        bo.writeInt(line.length)
-        bo.write(line)
-      }
-      body.toByteArray
-    }
+    def iterated(df: DataFrame): Array[Byte] = entryBody(df, df.toLocalIterator().asScala.toSeq)
     val local = new LocalClient(spark, root, fixedClock)
     val server = new WireServer(spark, Map("a" -> root), "a", fixedClock)
     try {
@@ -794,5 +797,69 @@ class WireServerSpec extends SparkSpec {
       }
       bystander.close()
     } finally server.close()
+  }
+
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  test("QUERYs of one shape that differ only in a constant compile no new classes") {
+    val root = Files.createTempDirectory("graft_wire_params").toString
+    val local = new LocalClient(spark, root, fixedClock)
+    // two days of entries up to the server clock's now, which bounds `since`
+    val t0 = java.time.Instant.parse("2024-12-30T00:00:00Z")
+    for (topic <- Seq("/p/a", "/p/b")) {
+      local.createTopic(topic, "float64")
+      local.appendBatch((0 until 2 * 24 * 60 by 7).map { m =>
+        Row(Timestamp.from(t0.plusSeconds(m * 60L)), topic, (m % 100).toDouble)
+      }, "float64")
+    }
+    // a WireImport page bound: microsecond instants
+    def us(minutes: Int, micros: Int) = java.time.format.DateTimeFormatter.ISO_INSTANT
+      .format(t0.plusSeconds(minutes * 60L).plusNanos(micros * 1000L))
+    val shapes: Seq[(String, Int => String)] = Seq(
+      "between" -> (i => s"all in /p/a between ~(2024/12/30) + @hour * $i, ~(2024/12/30) + @hour * ${i + 6}"),
+      "since" -> (i => s"all in /p/b since ~(2024/12/31) + @hour * $i"),
+      "filter" -> (i => s"all in /p/a | filter v -> v > ${20 + 3 * i}"),
+      "cross-topic day" ->
+        (i => s"all in /p between ~(2024/12/30) + @hour * $i, ~(2024/12/30) + @hour * ${i + 24}"),
+      "follower page" ->
+        (i => s"all in /p/b between ~(${us(97 * i, i)}), ~(${us(97 * i + 180, 999999 - i)})"))
+    def confs = (spark.conf.getAll,
+      spark.sparkContext.hadoopConfiguration.iterator().asScala.map(e => e.getKey -> e.getValue).toMap)
+    val confsBefore = confs
+    val server = new WireServer(spark, Map("a" -> root), "a", fixedClock)
+    val replies = try shapes.map { case (shape, fql) =>
+      val first = rawQuery(server.port, fql(0))
+      val before = compiles
+      val rest = (1 until 20).map(i => rawQuery(server.port, fql(i)))
+      assert(compiles == before, s"$shape: ${compiles - before} classes compiled after the first query")
+      first +: rest
+    } finally server.close()
+    assert(confs == confsBefore, "a wire QUERY changed the session's SQL or Hadoop conf")
+    for (((shape, fql), got) <- shapes.zip(replies)) {
+      got.zipWithIndex.foreach { case ((cmd, body), i) =>
+        assert(cmd == "OK", s"$shape #$i: ${new String(body.drop(4), StandardCharsets.UTF_8)}")
+        val df = local.query(fql(i))
+        assert(body.sameElements(entryBody(df, df.collect().toSeq)), s"$shape #$i: ${fql(i)}")
+      }
+      // the constants matter: the shape returns rows, and not the same ones
+      assert(got.map(r => ByteBuffer.wrap(r._2).getInt).sum > 0, shape)
+      assert(got.map(_._2.toSeq).distinct.size > 1, shape)
+    }
+  }
+
+  test("METRICS carries the JVM-wide codegen and JIT counters") {
+    val text = new ServerMetrics().render
+    val codegen = compiles
+    assert(text.linesIterator.contains("# TYPE jvm_codegen_compiles_total counter"))
+    assert(text.linesIterator.exists(l =>
+      l.startsWith("# HELP jvm_codegen_compiles_total ") && l.contains("JVM-wide")))
+    assert(text.linesIterator.contains(s"jvm_codegen_compiles_total $codegen"))
+    val jit = java.lang.management.ManagementFactory.getCompilationMXBean
+    if (jit != null && jit.isCompilationTimeMonitoringSupported) {
+      assert(text.linesIterator.contains("# TYPE jvm_jit_compile_seconds_total counter"))
+      assert(text.linesIterator.exists(l =>
+        l.startsWith("# HELP jvm_jit_compile_seconds_total ") && l.contains("JVM-wide")))
+      assert(text.linesIterator.exists(_.matches("jvm_jit_compile_seconds_total [0-9.]+(E[0-9]+)?")))
+    } else assert(!text.contains("jvm_jit_compile_seconds_total"))
   }
 }

@@ -222,6 +222,16 @@ class SimilaritySpec extends SparkSpec {
     assert(recall(r8) >= 0.85, s"pq recall@refine=8 = ${recall(r8)}")
   }
 
+  test("pqTopK refuses a numSub past the ADC unroll limit, naming numSub") {
+    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val numSub = Similarity.MaxPqSubspaces + 1
+    val e = intercept[IllegalArgumentException] {
+      Similarity.pqTopK(emb, emb, "vec_id", "embedding",
+        numSub = numSub, numCodes = 256, k = 3)
+    }
+    assert(e.getMessage.contains(s"numSub = $numSub"), e.getMessage)
+  }
+
   test("ivfTopKPq: candidates are bucket-mates with exact re-ranked scores; " +
       "high refine recovers the IVF top-k") {
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
