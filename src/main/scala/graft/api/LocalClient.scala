@@ -5,7 +5,6 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.engine.{Codec, FossilEngine, FossilSchema, ParquetStore, SchemaViolationException}
 import graft.fql.Compiler
@@ -82,9 +81,11 @@ final class LocalClient(
   /** Store shape for the per-database metrics collector
     * (`fossil_database_segments` / `fossil_database_topics`,
     * `pkg/server/dbmetrics.go:21-48` analog): live data file count and
-    * registered topic count, read at scrape time. */
+    * registered topic count, read at scrape time, plus the file index's
+    * footer reads and time-pruned files since the store opened. */
   def storeShape: ServerMetrics.DbShape =
-    ServerMetrics.DbShape(store.segmentCount, store.catalog.list.size.toLong)
+    ServerMetrics.DbShape(store.segmentCount, store.catalog.list.size.toLong,
+      store.footerReads, store.filesPruned)
 
   /** Maintenance: compact the store's accumulated small append files into
     * one time-sorted file per topic ([[graft.engine.ParquetStore.compact]]
@@ -93,14 +94,9 @@ final class LocalClient(
 
   /** STATS: per-topic `(topic, n, first, last)` rows — entry counts and
     * time bounds (reference `pkg/database/stats.go` analog, computed from
-    * data not heap), in topic order. The result is one row per topic, so it
-    * is sorted on the driver: a distributed sort would add a sampling job
-    * and a second shuffle for a topics-sized result. The order is Spark's
-    * string order (UTF-8 bytes). */
-  def stats: Seq[Row] = {
-    import org.apache.spark.sql.functions._
-    query("all").groupBy("topic")
-      .agg(count(lit(1)).as("n"), min("time").as("first"), max("time").as("last"))
-      .collect().toSeq.sortBy(r => UTF8String.fromString(r.getString(0)))
-  }
+    * data not heap), in Spark's string order (UTF-8 bytes). Answered from
+    * the store's file index: footers give counts and bounds, and only
+    * files without usable footer stats are aggregated by Spark
+    * ([[graft.engine.ParquetStore.stats]]). */
+  def stats: Seq[Row] = store.stats
 }

@@ -104,6 +104,16 @@ final class ServerMetrics {
       shapes.foreach { case (name, s) =>
         sb ++= s"""fossil_database_topics{db_name="${esc(name)}"} ${s.topics}\n"""
       }
+      sb ++= "# HELP fossil_store_footer_reads_total Parquet footers the store's file index read.\n"
+      sb ++= "# TYPE fossil_store_footer_reads_total counter\n"
+      shapes.foreach { case (name, s) =>
+        sb ++= s"""fossil_store_footer_reads_total{db_name="${esc(name)}"} ${s.footerReads}\n"""
+      }
+      sb ++= "# HELP fossil_store_files_pruned_total Store files a query's time bounds kept out of its scan.\n"
+      sb ++= "# TYPE fossil_store_files_pruned_total counter\n"
+      shapes.foreach { case (name, s) =>
+        sb ++= s"""fossil_store_files_pruned_total{db_name="${esc(name)}"} ${s.filesPruned}\n"""
+      }
     }
     // JVM runtime section — the reference mounts a full Go runtime
     // collector in the same registry (`pkg/server/metrics.go:43-47`,
@@ -185,6 +195,8 @@ object ServerMetrics {
   /** Store shape reported by a per-database collector — the analog of the
     * reference's `database.Stats()` fields the dbStatsCollector exports
     * (`pkg/server/dbmetrics.go:73-77`): data file count (the segment
-    * analog of a Parquet store) and registered topic count. */
-  final case class DbShape(segments: Long, topics: Long)
+    * analog of a Parquet store) and registered topic count; then, with no
+    * reference counterpart, the store file index's footer reads and the
+    * files query time bounds pruned, both since the store opened. */
+  final case class DbShape(segments: Long, topics: Long, footerReads: Long, filesPruned: Long)
 }

@@ -395,12 +395,13 @@ private[connector] object FossilScan {
   private val footerRows =
     new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]
 
+  /** A file's footer row count, read by the store's one footer reader
+    * ([[graft.engine.StoreIndex]]). */
   def footerRowCount(path: String, length: Long): Long =
     footerRows.computeIfAbsent((path, length), { _ =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path), StoreFs.conf())
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try java.lang.Long.valueOf(r.getRecordCount) finally r.close()
+      val st = new org.apache.hadoop.fs.FileStatus(length, false, 1, 0, 0,
+        new org.apache.hadoop.fs.Path(path))
+      java.lang.Long.valueOf(graft.engine.StoreIndex.read(st, StoreFs.conf()).rows)
     }).longValue()
 
   /** Split size from the active session (planning runs on the driver);

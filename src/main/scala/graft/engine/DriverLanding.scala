@@ -11,7 +11,6 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, GenericInternalRow}
 import org.apache.spark.sql.execution.datasources.OutputWriter
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
 import org.apache.spark.sql.types._
 
 import FossilSchema.SType
@@ -22,10 +21,10 @@ import FossilSchema.SType
   * topic's catalog type with Catalyst's `Cast` under the session's ANSI
   * mode, so a value the Spark write path would reject fails here too,
   * before any file exists. Each topic's rows, sorted by time, go to one
-  * file written by Spark's own Parquet writer (`ParquetUtils.prepareWrite`
-  * → `OutputWriterFactory.newInstance`, session SQL and Hadoop conf), so
-  * the file's schema, encodings and footer metadata are the ones a Spark
-  * job would write.
+  * file written by Spark's own Parquet writer (the store's
+  * [[StoreParquetFormat]] `prepareWrite` → `OutputWriterFactory.newInstance`,
+  * session SQL and Hadoop conf), so the file's schema, encodings, time type
+  * and footer metadata are the ones the store's Spark job would write.
   *
   * Commit: [[stage]] writes every file under a dot-prefixed temp name in
   * its `topic=` directory (hidden from scans, like Spark's `_temporary`);
@@ -76,13 +75,12 @@ private[engine] object DriverLanding {
     * temp written so far is deleted before the error propagates. */
   def stage(spark: SparkSession, topics: Seq[TopicRows],
       groupDir: SType => String): Seq[Staged] = {
-    val sqlConf = spark.sessionState.conf
     val hadoopConf = spark.sessionState.newHadoopConf()
+    val format = new StoreParquetFormat
     val writers = topics.map(_.target).distinct.map { t =>
       val dataSchema = ParquetStore.fileSchema(t.sparkType)
       val job = Job.getInstance(hadoopConf)
-      val factory = ParquetUtils.prepareWrite(sqlConf, job, dataSchema,
-        new ParquetOptions(Map.empty[String, String], sqlConf))
+      val factory = format.prepareWrite(spark, job, Map.empty, dataSchema)
       t -> (factory, dataSchema, new TaskAttemptContextImpl(job.getConfiguration, attempt))
     }.toMap
     val staged = Seq.newBuilder[Staged]

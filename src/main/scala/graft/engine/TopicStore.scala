@@ -3,8 +3,11 @@ package graft.engine
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import FossilSchema._
 
@@ -38,9 +41,32 @@ final class ViewStore(df: DataFrame, val catalog: Catalog) extends TopicStore {
   * Layout: `root/data/sgroup=<schema-hash>/topic=<escaped>/part-*.parquet`
   * — one directory tree per distinct schema (so each subtree has a uniform
   * Parquet value type), topic as a partition column (partition pruning for
-  * prefix scans), rows time-sorted within files (row-group min/max stats
-  * give time-range pruning, replacing fossil's segment `HeadTime` pruning +
-  * binary search, `pkg/database/segment.go:45-85`).
+  * prefix scans), rows time-sorted within files.
+  *
+  * Time type: both landing paths write `time` as `INT64
+  * TIMESTAMP(MICROS)` ([[StoreParquetFormat]]), so every new file's footer
+  * carries the min/max of its times; a session that sets
+  * `spark.sql.parquet.outputTimestampType` itself keeps its type. Stores
+  * landed earlier as INT96 (Spark's default) or TIMESTAMP_MILLIS read as
+  * before.
+  *
+  * File index and pruning ([[StoreIndex]], replacing fossil's segment
+  * `HeadTime` pruning + binary search, `pkg/database/segment.go:45-85`):
+  * every read lists the wanted topics' directories and knows each file's
+  * row count and time range from its footer. [[entries]] hands Spark a
+  * relation over exactly those files whose scan drops every file whose
+  * range misses the query's `time` bounds (an FQL window or a caller's own
+  * `time` filter); row-group min/max stats then prune inside the files it
+  * opens. A file without a usable range (INT96, MILLIS, only null times)
+  * is always read. The relation is built once per (wanted topics, listing)
+  * and reused while the listing is unchanged. [[stats]] answers from the
+  * footers and aggregates only files without a usable range.
+  *
+  * Staleness rule: the files are the only source of truth. Each read
+  * re-lists the directories (names, sizes, mtimes) and reads a footer only
+  * for a file not seen before; no manifest is written, and a frame reads
+  * the files of the listing it was built from, as a Spark file relation
+  * does.
   *
   * The topic registry persists as a JSON sidecar `root/catalog.json`
   * (analog of fossil's serialized topic/schema tables,
@@ -130,7 +156,8 @@ final class ParquetStore(spark: SparkSession, root: String) extends TopicStore {
           .sortWithinPartitions("topic", "time")
           .write.mode(SaveMode.Append)
           .partitionBy("topic")
-          .parquet(groupDir(target))
+          .format(classOf[StoreParquetFormat].getName)
+          .save(groupDir(target))
       }
     } finally cached.unpersist()
   }
@@ -180,49 +207,114 @@ final class ParquetStore(spark: SparkSession, root: String) extends TopicStore {
     val t = catalog.normalize(topic)
     val schema = catalog.schemaOf(t).getOrElse(
       throw new IllegalArgumentException(s"unknown topic $t"))
-    val d = groupDir(schema)
-    if (!StoreFs.exists(d))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        ParquetStore.entrySchema(schema.sparkType))
-    else readGroup(schema, d)
-      .filter(col("topic") === t) // partition-column prune
-      .select(col("time"), col("topic").cast(StringType).as("topic"), col("value"))
+    val groups = listGroups(Seq(t))
+    if (groups.isEmpty) emptyEntries(schema)
+    else memo(Seq(t), groups)
   }
 
   def entries(prefix: String): DataFrame = {
     val wanted = catalog.topicsUnder(prefix)
-    val schemas = wanted.flatMap(catalog.schemaOf).distinct
-    val groups = schemas.map(s => (s, groupDir(s))).filter { case (_, d) =>
-      StoreFs.exists(d)
-    }
-    if (groups.isEmpty) {
-      val combined = catalog.combinedSchema(prefix) match {
+    val groups = listGroups(wanted)
+    if (groups.isEmpty)
+      emptyEntries(catalog.combinedSchema(prefix) match {
         case SUnknown | SAmbiguous => FossilSchema.default
         case s => s
-      }
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        ParquetStore.entrySchema(combined.sparkType))
-    }
-    val combined = FossilSchema.combineAll(groups.map(_._1))
-    groups.map { case (s, dir) =>
-      val df = readGroup(s, dir)
-      val v = ParquetStore.widenValue(df.schema("value").dataType, combined)(
-        col("value"))(_.cast(_), lit(null).cast(BinaryType))
-      df.select(col("time"), col("topic").cast(StringType).as("topic"), v.as("value"))
-    }.reduce(_ unionByName _)
-      // a schema group can host topics OUTSIDE the prefix — enforce the
-      // trait contract here (an IN-list on the partition column, so it
-      // prunes at the file index rather than filtering rows)
-      .filter(col("topic").isInCollection(wanted))
+      })
+    else memo(wanted, groups)
   }
 
-  /** One schema group's files, read with the catalog's schema: the group
-    * directory is keyed by that schema and every file in it was written
-    * with it, so Spark needs no footer-inference job to find it. */
-  private def readGroup(s: SType, dir: String): DataFrame =
-    spark.read.schema(ParquetStore.entrySchema(s.sparkType)).parquet(dir)
+  /** STATS: `(topic, n, first, last)` per topic holding rows, in Spark's
+    * string order (UTF-8 bytes): the entry count and the earliest and
+    * latest time, null when every time is null. Files whose footer gives
+    * a row count and time range (see [[StoreIndex]]) are answered from
+    * it; only the other files are read, by one Spark aggregate, and the
+    * two are merged. A store landed with the default write rule runs no
+    * Spark job here. */
+  def stats: Seq[Row] = {
+    val groups = listGroups(catalog.topicsUnder("/"))
+    val acc = scala.collection.mutable.Map.empty[String, (Long, Long, Long)]
+    def add(topic: String, n: Long, lo: Long, hi: Long): Unit = {
+      val (n0, lo0, hi0) = acc.getOrElse(topic, (0L, Long.MaxValue, Long.MinValue))
+      acc(topic) = (n0 + n, math.min(lo0, lo), math.max(hi0, hi))
+    }
+    for ((_, topics) <- groups; t <- topics; f <- t.files; (lo, hi) <- f.range)
+      add(t.topic, f.rows, lo, hi)
+    val unknown = groups.map { case (s, topics) =>
+      s -> topics.map(t => t.copy(files = t.files.filter(_.range.isEmpty))).filter(_.files.nonEmpty)
+    }.filter(_._2.nonEmpty)
+    if (unknown.nonEmpty)
+      unknown.map { case (s, topics) => scan(s, topics).select("time", "topic") }
+        .reduce(_ unionByName _)
+        .groupBy("topic")
+        .agg(count(lit(1)), min(unix_micros(col("time"))), max(unix_micros(col("time"))))
+        .collect().foreach { r =>
+          add(r.getString(0), r.getLong(1),
+            if (r.isNullAt(2)) Long.MaxValue else r.getLong(2),
+            if (r.isNullAt(3)) Long.MinValue else r.getLong(3))
+        }
+    def time(us: Long, known: Boolean) =
+      if (known) org.apache.spark.sql.catalyst.util.DateTimeUtils.toJavaTimestamp(us) else null
+    acc.toSeq.collect { case (topic, (n, lo, hi)) if n > 0 =>
+      Row(topic, n, time(lo, lo <= hi), time(hi, lo <= hi))
+    }.sortBy(r => UTF8String.fromString(r.getString(0)))
+  }
+
+  /** File-index counters for the per-database metrics: footers read, and
+    * files a scan's time bounds kept out of it. */
+  def footerReads: Long = index.footerReads
+  def filesPruned: Long = index.filesPruned
+
+  private val index = new StoreIndex
+
+  /** The listed files of `wanted`, per schema group whose directory
+    * exists, in the order of the topics' first appearance. */
+  private def listGroups(wanted: Seq[String]): Seq[(SType, Seq[TopicFiles])] =
+    wanted.groupBy(catalog.schemaOf).toSeq.collect { case (Some(s), ts) => (s, ts) }
+      .sortBy { case (_, ts) => wanted.indexOf(ts.head) }
+      .map { case (s, ts) => (s, groupDir(s), ts) }
+      .filter { case (_, dir, _) => StoreFs.isDirectory(dir) }
+      .map { case (s, dir, ts) => (s, ts.map(index.list(dir, _))) }
+
+  // Built entries frames, keyed by wanted topics and valid for the exact
+  // listing they were built from: a query over unchanged files reuses its
+  // analyzed relation instead of resolving a data source, listing and
+  // inferring partitions again. Access-ordered, at most FramesKept.
+  private val frames =
+    new java.util.LinkedHashMap[Seq[String], (Seq[(SType, Seq[TopicFiles])], DataFrame)](
+      16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[Seq[String], (Seq[(SType, Seq[TopicFiles])], DataFrame)]) =
+        size() > ParquetStore.FramesKept
+    }
+
+  private def memo(wanted: Seq[String], groups: Seq[(SType, Seq[TopicFiles])]): DataFrame =
+    frames.synchronized(Option(frames.get(wanted))).collect {
+      case (listed, df) if listed == groups => df
+    }.getOrElse {
+      val combined = FossilSchema.combineAll(groups.map(_._1))
+      val df = groups.map { case (s, topics) =>
+        val v = ParquetStore.widenValue(s.sparkType, combined)(col("value"))(
+          _.cast(_), lit(null).cast(BinaryType))
+        scan(s, topics).select(col("time"), col("topic"), v.as("value"))
+      }.reduce(_ unionByName _)
+      frames.synchronized(frames.put(wanted, (groups, df)))
+      df
+    }
+
+  /** One schema group's listed files as a relation `(time, value, topic)`,
+    * read by Spark's Parquet reader with the catalog's schema (every file
+    * of the group was written with it, so no footer inference is needed)
+    * through a [[StoreFileIndex]]. */
+  private def scan(s: SType, topics: Seq[TopicFiles]): DataFrame = {
+    val files = new StoreFileIndex(topics, index.prunedCount)
+    spark.baseRelationToDataFrame(HadoopFsRelation(files, files.partitionSchema,
+      ParquetStore.fileSchema(s.sparkType), bucketSpec = None, new ParquetFileFormat,
+      options = Map.empty)(spark))
+  }
+
+  private def emptyEntries(s: SType): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ParquetStore.entrySchema(s.sparkType))
 
   /** Maintenance: rewrite every schema group's accumulated small append
     * files (each [[append]] / streaming micro-batch lands at least one file
@@ -263,7 +355,8 @@ final class ParquetStore(spark: SparkSession, root: String) extends TopicStore {
         .sortWithinPartitions("topic", "time")
         .write.mode(SaveMode.Overwrite)
         .partitionBy("topic")
-        .parquet(tmp)
+        .format(classOf[StoreParquetFormat].getName)
+        .save(tmp)
       val trash = s"$root/.trash_compact_${gName}_${System.nanoTime()}"
       StoreFs.rename(gDir, trash)
       StoreFs.rename(tmp, gDir)
@@ -318,6 +411,9 @@ final class ParquetStore(spark: SparkSession, root: String) extends TopicStore {
 }
 
 object ParquetStore {
+  /** Entries frames one store keeps built (see `ParquetStore.memo`). */
+  private val FramesKept = 64
+
   /** Cap on distinct topics per append call (see [[ParquetStore.append]]);
     * JVM-wide, overridable for tests via the system property. */
   def maxTopicsPerAppend: Int =

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Loop kernels for the shingle array expressions — public static shape so
@@ -59,13 +60,35 @@ object ShingleKernels {
       out.asInstanceOf[Array[AnyRef]], m).asInstanceOf[Array[Any]])
   }
 
+  /** Distinct `n`-character windows of `lt`, first occurrence first — what
+    * `substring(lt, i, n)` gives for i = 1 .. numChars - n + 1, in one walk:
+    * `substring` walks the string from byte 0 on every call, so the loop
+    * cost O(L²) on a document of L chars. Character boundaries follow
+    * UTF8String's own rule (the leading byte's length), and each window is
+    * a view on one private copy of the bytes. */
   def charShingles(lt: UTF8String, n: Int): ArrayData = {
     val len = lt.numChars()
     if (len < n) return new GenericArrayData(Array.empty[Any])
+    // getBytes may hand back the input's own buffer; the windows must not
+    // alias a buffer the caller reuses
+    val nb = lt.numBytes()
+    val bytes = new Array[Byte](nb)
+    lt.writeToMemory(bytes, Platform.BYTE_ARRAY_OFFSET)
+    // starts(c) = byte offset of char c; starts(len) = end of the string
+    val starts = new Array[Int](len + 1)
+    var c = 0
+    var off = 0
+    while (c < len) {
+      starts(c) = off
+      off += UTF8String.numBytesForFirstByte(bytes(off))
+      c += 1
+    }
+    starts(len) = math.min(off, nb)
     val seen = new java.util.LinkedHashSet[UTF8String]()
-    var i = 1
-    while (i <= len - n + 1) {
-      seen.add(lt.substringSQL(i, n))
+    var i = 0
+    while (i <= len - n) {
+      val end = math.min(starts(i + n), nb)
+      seen.add(UTF8String.fromBytes(bytes, starts(i), end - starts(i)))
       i += 1
     }
     new GenericArrayData(seen.toArray.asInstanceOf[Array[Any]])

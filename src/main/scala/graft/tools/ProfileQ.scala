@@ -53,9 +53,9 @@ object ProfileQ {
     val probe = new Probe
     spark.sparkContext.addSparkListener(probe)
 
-    // warm-up like Bench: JIT + codegen caches at the smallest SF
+    // warm-up like Bench: JIT + codegen caches, on the data it then profiles
     names.foreach { n =>
-      try graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
+      try graft.SparkEntry.queries(n)(spark, sfDir).count()
       catch { case e: Throwable => println(s"[warm $n] $e") }
     }
     def harnessOf(n: String): Long =

@@ -595,7 +595,7 @@ class WireServerSpec extends SparkSpec {
     assert(reduce <= 2, s"reduce ran $reduce jobs")
   }
 
-  test("STATS aggregates in one shuffle and orders topics on the driver") {
+  test("STATS answers from store footers with no Spark job and orders topics on the driver") {
     val root = Files.createTempDirectory("graft_wire_stats").toString
     fill(root, Seq(("/st/b", "float64", f64s(2)), ("/st/a", "float64", f64s(3)),
       ("/st/c", "float64", f64s(1))))
@@ -604,7 +604,36 @@ class WireServerSpec extends SparkSpec {
     // /st/b took minutes 0-1, /st/a minutes 2-4
     assert(lines.head == "/st/a n=3 first=2025-01-01T00:02:00.000000Z " +
       "last=2025-01-01T00:04:00.000000Z", lines.head)
-    assert(jobs == 2, s"STATS ran $jobs jobs")
+    assert(jobs == 0, s"STATS ran $jobs jobs")
+  }
+
+  test("METRICS and /metrics count the store index's footer reads and time-pruned files") {
+    // six wire APPENDs = six files of /fp, one per minute from 00:00
+    val root = filledRoot("graft_wire_index", "/fp", "float64", f64s(6))
+    val server = new WireServer(spark, Map("a" -> root), "a", fixedClock, metricsPort = 0)
+    val client = new RemoteClient("127.0.0.1", server.port, db = "a", poolSize = 1)
+    try {
+      def counter(name: String): Long = server.metrics.render.linesIterator
+        .find(_.startsWith(s"""$name{db_name="a"} """)).map(_.split(' ').last.toLong)
+        .getOrElse(fail(s"$name missing"))
+      assert(counter("fossil_store_footer_reads_total") == 0)
+      assert(counter("fossil_store_files_pruned_total") == 0)
+      val got = client.query(
+        "all in /fp between ~(2025/01/01) + @minute * 2, ~(2025/01/01) + @minute * 3")
+      assert(got.map(_.decoded.asInstanceOf[Double]).sorted == Seq(3.0, 4.0))
+      assert(counter("fossil_store_footer_reads_total") == 6)
+      assert(counter("fossil_store_files_pruned_total") == 4)
+      // a repeat reads no footer; STATS neither
+      client.query("all in /fp")
+      client.stats()
+      assert(counter("fossil_store_footer_reads_total") == 6)
+      val http = new String(new java.net.URI(
+        s"http://127.0.0.1:${server.httpMetricsPort}/metrics").toURL.openStream().readAllBytes(),
+        StandardCharsets.UTF_8)
+      assert(http.contains("# TYPE fossil_store_footer_reads_total counter"))
+      assert(http.contains("# TYPE fossil_store_files_pruned_total counter"))
+      assert(http.contains("""fossil_store_files_pruned_total{db_name="a"} 4"""))
+    } finally { client.close(); server.close() }
   }
 
   test("QUERY bodies are the entry lines of the frame's rows, in partition order") {
