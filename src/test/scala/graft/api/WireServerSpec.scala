@@ -607,6 +607,23 @@ class WireServerSpec extends SparkSpec {
     assert(jobs == 0, s"STATS ran $jobs jobs")
   }
 
+  test("STATS aggregates in one shuffle and orders topics on the driver") {
+    // files landed as INT96 carry no usable time range in their footers:
+    // STATS falls back to one Spark aggregate over them
+    val root = Files.createTempDirectory("graft_wire_stats96").toString
+    val key = "spark.sql.parquet.outputTimestampType"
+    val old = spark.conf.getAll.get(key)
+    spark.conf.set(key, "INT96")
+    try fill(root, Seq(("/st/b", "float64", f64s(2)), ("/st/a", "float64", f64s(3)),
+      ("/st/c", "float64", f64s(1))))
+    finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val (jobs, lines) = wireJobs(root)(_.stats())
+    assert(lines.map(_.takeWhile(_ != ' ')) == Seq("/st/a", "/st/b", "/st/c"))
+    assert(lines.head == "/st/a n=3 first=2025-01-01T00:02:00.000000Z " +
+      "last=2025-01-01T00:04:00.000000Z", lines.head)
+    assert(jobs == 2, s"STATS ran $jobs jobs")
+  }
+
   test("METRICS and /metrics count the store index's footer reads and time-pruned files") {
     // six wire APPENDs = six files of /fp, one per minute from 00:00
     val root = filledRoot("graft_wire_index", "/fp", "float64", f64s(6))
