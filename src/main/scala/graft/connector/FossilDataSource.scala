@@ -7,7 +7,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
@@ -17,7 +16,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.engine.{Catalog, FossilSchema, ParquetStore, StoreFs, StoreMigration}
+import graft.engine.{Catalog, FossilSchema, ParquetStore, StoreFs, StoreIndex, StoreMigration, TopicFiles}
 import graft.engine.FossilSchema.{SType, SUnknown}
 
 /** `spark.read.format("fossil")` — the engine's front door for plain Spark
@@ -35,21 +34,25 @@ import graft.engine.FossilSchema.{SType, SUnknown}
   * combined type; a mixed-scalar store reads as null binary, exactly like
   * the library path).
   *
-  * Store files are read by Spark's own Parquet reader, one reader per
-  * schema group ([[FossilReaderFactory]]); the connector adds only what
-  * Spark's file source does not know about a store root:
+  * Store files are listed by the store's own file index
+  * ([[graft.engine.StoreIndex]], the one `ParquetStore.entries` lists
+  * through) and read by Spark's own Parquet reader, one reader per schema
+  * group ([[FossilReaderFactory]]); the connector adds only what Spark's
+  * file source does not know about a store root:
   *   - topic equality / IN / prefix filters prune PARTITION DIRECTORIES at
   *     planning time (no file of a filtered-out topic is even listed);
+  *   - pushed time bounds prune whole FILES at planning time: a file whose
+  *     footer time range misses them is not read, and a file without a
+  *     usable range (INT96 or millisecond time) always is;
   *   - the topic comes from the `topic=` directory, and each schema group's
   *     value is widened to the combined type by the same rule `entries`
   *     uses.
   * Spark's reader then prunes columns (a `select(value)` never decodes
   * time) and, where the file's time column is INT64, row groups by the
   * pushed time bounds (the store writes time-sorted files so min/max stats
-  * partition the time axis; INT96, Spark's default write type, has no
-  * usable stats). Every pushed filter is ALSO returned as a residual —
-  * Spark re-evaluates the exact predicate, so pruning is never a
-  * correctness input.
+  * partition the time axis; INT96 has no usable stats). Every pushed
+  * filter is ALSO returned as a residual — Spark re-evaluates the exact
+  * predicate, so pruning is never a correctness input.
   *
   * Reads are DSv2-only by design: writes go through the library/client
   * (`LocalClient.append`, streaming ingest) because the store has a
@@ -171,24 +174,28 @@ final class FossilTable(
 
   /** STATS-class metadata for SQL users (`DESCRIBE EXTENDED`, `SHOW
     * TBLPROPERTIES`) — the visibility wire clients get from the STATS
-    * command. Lazy: computed on the FIRST properties call (a plain
-    * SELECT's planning never lists files through here), then fixed for
-    * this table handle. Row counts come from the same cached footer
-    * reads the scan statistics use, capped identically. */
-  override def properties(): java.util.Map[String, String] = tableProps
-
-  private lazy val tableProps: java.util.Map[String, String] = {
+    * command — from a fresh listing on every call: appends to known
+    * topics leave `catalog.json` alone, so a table handle outlives them
+    * (see `FossilCatalog`). Row counts are footer counts. */
+  override def properties(): java.util.Map[String, String] = {
+    val files = listFiles(prefixTopics).flatMap(_.files)
     val m = new java.util.HashMap[String, String]()
     m.put("topics", prefixTopics.size.toString)
     m.put("combined_schema", combined.ddl)
-    val files = FossilScan.listDataFiles(this, prefixTopics)
     m.put("num_files", files.size.toString)
     m.put("size_bytes", files.map(_.length).sum.toString)
-    if (files.size <= FossilScan.statsFooterCap)
-      m.put("num_rows",
-        files.map(f => FossilScan.footerRowCount(f.path, f.length)).sum.toString)
+    m.put("num_rows", files.map(_.rows).sum.toString)
     m
   }
+
+  /** This table's handle on the store's file index (its footer facts are
+    * JVM-wide, its counters its own). */
+  private[connector] val index = new StoreIndex
+
+  /** The listed files of `topics`, topic by topic, in the order of
+    * [[groupsOf]]. */
+  def listFiles(topics: Seq[String]): Seq[TopicFiles] =
+    index.listGroups(root, catalog, topics).flatMap(_._2)
 
   /** The distinct schema groups of `topics`, in the order the scan indexes
     * them (and lists their files). */
@@ -288,77 +295,51 @@ final class FossilScan(
 
   override def description(): String =
     s"FossilScan root=${table.root}, prefix=${table.prefix}, " +
-      s"topics=${wantedTopics.size}, " +
+      s"topics=${wantedTopics.size}, files=${count(plannedFiles)}/${count(listedFiles)}, " +
       s"PushedFilters: [${pushed.mkString(", ")}], " +
       s"ReadSchema: ${pruned.simpleString}"
 
-  /** Planning-time listing: only surviving topics' partition directories
-    * are walked (driver-side, same class of work as Spark's own file
-    * index; a petabyte deployment would swap a manifest in here). */
-  private lazy val plannedFiles: Seq[FossilScan.DataFile] =
-    FossilScan.listDataFiles(table, wantedTopics)
+  /** Planning-time listing through the store's file index: only surviving
+    * topics' partition directories are walked, and a file whose footer
+    * time range misses the pushed bounds is dropped (a file with an
+    * unknown range is kept), the rule `ParquetStore.entries` applies. The
+    * description shows planned/listed files. */
+  private lazy val listedFiles: Seq[TopicFiles] = table.listFiles(wantedTopics)
+  private lazy val plannedFiles: Seq[TopicFiles] = {
+    val (lo, hi) = (loUs.getOrElse(Long.MinValue), hiUs.getOrElse(Long.MaxValue))
+    listedFiles.map(t => t.copy(files = t.files.filter(_.mayOverlap(lo, hi))))
+  }
+  private def count(topics: Seq[TopicFiles]): Int = topics.map(_.files.size).sum
 
   /** Files split by `spark.sql.files.maxPartitionBytes` byte ranges — row
-    * groups resolve to the range holding their midpoint, so no footer is
-    * read at planning time. */
+    * groups resolve to the range holding their midpoint. */
   override def planInputPartitions(): Array[InputPartition] =
-    FossilScan.split(table, wantedTopics, plannedFiles, FossilScan.maxPartitionBytes())
-      .toArray[InputPartition]
+    FossilScan.split(table, wantedTopics, FossilScan.dataFiles(plannedFiles),
+      FossilScan.maxPartitionBytes()).toArray[InputPartition]
 
   override def createReaderFactory(): PartitionReaderFactory =
     FossilReaderFactory(SparkSession.active, table.groupsOf(wantedTopics),
       table.combined, pruned, loUs, hiUs)
 
-  /** Exact row counts from parquet footers (r17 verdict item 5 — SQL
-    * users get the row visibility wire STATS clients have). Footer reads
-    * are driver-side O(planned files) on FIRST touch only: files are
-    * immutable, so counts cache JVM-wide by (path, length); above
-    * [[FossilScan.statsFooterCap]] files the scan skips numRows (keeps
-    * sizeInBytes) rather than stall planning on a petabyte listing. */
+  /** Size and footer row counts of the files the scan reads — SQL users
+    * get the row visibility wire STATS clients have. */
   override def estimateStatistics(): Statistics = new Statistics {
-    override def sizeInBytes(): OptionalLong =
-      OptionalLong.of(plannedFiles.map(_.length).sum)
-    override def numRows(): OptionalLong =
-      if (plannedFiles.size > FossilScan.statsFooterCap) OptionalLong.empty()
-      else OptionalLong.of(plannedFiles.map(f => FossilScan.footerRowCount(f.path, f.length)).sum)
+    private val files = plannedFiles.flatMap(_.files)
+    override def sizeInBytes(): OptionalLong = OptionalLong.of(files.map(_.length).sum)
+    override def numRows(): OptionalLong = OptionalLong.of(files.map(_.rows).sum)
   }
 }
 
 private[connector] object FossilScan {
 
-  /** One discovered data file: absolute path, final length (parquet files
-    * are immutable once landed), owning topic (from the partition dir). */
+  /** One data file of a scan or a stream offset: absolute path, final
+    * length (parquet files are immutable once landed), owning topic (from
+    * the partition dir). */
   final case class DataFile(path: String, length: Long, topic: String)
 
-  /** The scan's file discovery, shared by the batch listing and the
-    * micro-batch offset log: only surviving topics' partition directories
-    * are listed, through the Hadoop control plane. Deterministic order
-    * (schema group, then sorted dir/file names). */
-  def listDataFiles(table: FossilTable, wantedTopics: Seq[String]): Seq[DataFile] = {
-    val out = Seq.newBuilder[DataFile]
-    val wantedSet = wantedTopics.toSet
-    table.groupsOf(wantedTopics).foreach { s =>
-      val gdir = s"${table.root}/data/sgroup=${ParquetStore.schemaKey(s)}"
-      if (StoreFs.isDirectory(gdir)) {
-        StoreFs.listStatus(gdir).filter(_.isDirectory).foreach { td =>
-          val name = td.getPath.getName
-          if (name.startsWith("topic=")) {
-            val topic = ExternalCatalogUtils.unescapePathName(name.stripPrefix("topic="))
-            if (wantedSet.contains(topic)) {
-              StoreFs.listStatus(td.getPath.toString).filter { st =>
-                val n = st.getPath.getName
-                st.isFile && n.endsWith(".parquet") &&
-                  !n.startsWith(".") && !n.startsWith("_")
-              }.foreach { st =>
-                out += DataFile(st.getPath.toString, st.getLen, topic)
-              }
-            }
-          }
-        }
-      }
-    }
-    out.result()
-  }
+  /** The files of `topics` as [[DataFile]]s, in listing order. */
+  def dataFiles(topics: Seq[TopicFiles]): Seq[DataFile] =
+    for (t <- topics; f <- t.files) yield DataFile(f.path.toString, f.length, t.topic)
 
   /** Byte-range splitting of `files` of `table`'s `wantedTopics`, shared by
     * the batch scan and the micro-batch stream; each split is tagged with
@@ -383,26 +364,6 @@ private[connector] object FossilScan {
     }
     out.result()
   }
-
-  /** Above this many planned files, [[FossilScan.estimateStatistics]]
-    * skips exact numRows — footer reads are cheap and cached, but a
-    * first-touch scan over millions of files must not stall planning. */
-  val statsFooterCap: Int = 10000
-
-  /** JVM-wide footer row-count cache keyed by (path, length) — parquet
-    * files in the store are immutable (landed by rename), so a count
-    * never goes stale; compaction REPLACES paths, which miss and re-read. */
-  private val footerRows =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), java.lang.Long]
-
-  /** A file's footer row count, read by the store's one footer reader
-    * ([[graft.engine.StoreIndex]]). */
-  def footerRowCount(path: String, length: Long): Long =
-    footerRows.computeIfAbsent((path, length), { _ =>
-      val st = new org.apache.hadoop.fs.FileStatus(length, false, 1, 0, 0,
-        new org.apache.hadoop.fs.Path(path))
-      java.lang.Long.valueOf(graft.engine.StoreIndex.read(st, StoreFs.conf()).rows)
-    }).longValue()
 
   /** Split size from the active session (planning runs on the driver);
     * falls back to Spark's 128 MB default ONLY when no session is active —

@@ -26,10 +26,15 @@ import org.apache.spark.sql.types.StructType
   * checkpoint restart, the same rule batch readers already follow
   * (compaction swaps whole directories out from under any reader).
   *
+  * Files are listed through the store's one file index
+  * ([[graft.engine.StoreIndex]], shared with `ParquetStore` and the batch
+  * scan). Its footer facts are JVM-wide, so a query started per drain
+  * reads only the footers of files that landed since the last listing.
+  *
   * Time/topic pushdown applies per micro-batch (the reader factory is the
   * batch scan's: Spark's Parquet reader with row-group time pruning and
-  * column pruning); pushed filters stay residual, so pruning is never a
-  * correctness input.
+  * column pruning); every fresh file is read, and pushed filters stay
+  * residual, so pruning is never a correctness input.
   */
 final class FossilMicroBatchStream(
     table: FossilTable,
@@ -48,7 +53,7 @@ final class FossilMicroBatchStream(
   override def initialOffset(): Offset = FossilStreamOffset(Seq.empty)
 
   override def latestOffset(): Offset =
-    FossilStreamOffset(FossilScan.listDataFiles(table, wantedTopics))
+    FossilStreamOffset(FossilScan.dataFiles(table.listFiles(wantedTopics)))
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val seen = start.asInstanceOf[FossilStreamOffset].files.map(_.path).toSet

@@ -22,7 +22,7 @@ import graft.engine.ParquetStore
   * groups whose midpoint falls inside the range belong to the split, as
   * with Spark's own file splits, so a store file bigger than
   * `spark.sql.files.maxPartitionBytes` parallelizes without the planner
-  * reading any footer. A split never mixes schema groups. */
+  * knowing its row groups. A split never mixes schema groups. */
 final case class FossilInputPartition(group: Int, file: PartitionedFile)
   extends InputPartition
 

@@ -19,6 +19,8 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMeta
 import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import FossilSchema.SType
+
 /** One store data file as [[StoreIndex]] knows it: its path, length and
   * mtime as listed and, from its footer, its row count and the inclusive µs
   * range of its non-null `time` values. `range` is None when the footer gives no usable range
@@ -35,18 +37,20 @@ final case class IndexedFile(path: Path, length: Long, mtime: Long, rows: Long,
 /** One topic's live files, listed under one schema group. */
 final case class TopicFiles(topic: String, dir: String, files: Seq[IndexedFile])
 
-/** The per-store file index behind [[ParquetStore]]'s reads: the files of
-  * the wanted topics' `topic=` directories, each with its footer's row
-  * count and `time` range.
+/** The store's file index, the one place that knows the store layout: the
+  * `sgroup=`/`topic=` directories of the wanted topics, which of their
+  * files are data files, and each file's footer row count and `time`
+  * range. [[ParquetStore]] and the `fossil` connector both list through
+  * it.
   *
   * Staleness rule: [[list]] re-lists the directories (names, sizes,
-  * mtimes) on every call and reads a footer only for a file it has not
-  * seen with that size and mtime; the files stay the only source of truth,
-  * so nothing the index hands out can describe files that were not there
-  * at its listing. Footer facts are kept per directory for the files of
-  * its latest listing only. */
+  * mtimes) on every call and reads a footer only for a file no index in
+  * this JVM has seen with that size and mtime; the files stay the only
+  * source of truth, so nothing the index hands out can describe files that
+  * were not there at its listing. Footer facts are shared JVM-wide and
+  * kept per directory for the files of its latest listing only; the
+  * counters are this instance's own. */
 final class StoreIndex {
-  private val known = new ConcurrentHashMap[String, Map[(String, Long, Long), IndexedFile]]
   private val footerReadCount = new LongAdder
   private[engine] val prunedCount = new LongAdder
 
@@ -56,30 +60,44 @@ final class StoreIndex {
   def filesPruned: Long = prunedCount.sum()
 
   /** The data files of `topic` under `groupDir`, in name order. */
-  def list(groupDir: String, topic: String): TopicFiles = {
+  private def list(groupDir: String, topic: String): TopicFiles = {
     val dir = s"$groupDir/${ExternalCatalogUtils.getPartitionPathString("topic", topic)}"
     val listed = StoreFs.listStatus(dir).filter { st =>
       val n = st.getPath.getName
       st.isFile && n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
     }
-    val before = known.getOrDefault(dir, Map.empty)
+    val before = StoreIndex.known.getOrDefault(dir, Map.empty)
     lazy val conf = StoreFs.conf()
     val files = listed.map { st =>
       before.getOrElse(StoreIndex.key(st), { footerReadCount.increment(); StoreIndex.read(st, conf) })
     }
-    if (files.isEmpty) known.remove(dir)
-    else known.put(dir, files.iterator.map(f => (f.path.toString, f.length, f.mtime) -> f).toMap)
+    if (files.isEmpty) StoreIndex.known.remove(dir)
+    else StoreIndex.known.put(dir,
+      files.iterator.map(f => (f.path.toString, f.length, f.mtime) -> f).toMap)
     TopicFiles(topic, dir, files)
   }
+
+  /** The listed files of the `wanted` topics of the store at `root`, per
+    * schema group whose directory exists, groups in the order of their
+    * topics' first appearance. */
+  def listGroups(root: String, catalog: Catalog, wanted: Seq[String]): Seq[(SType, Seq[TopicFiles])] =
+    wanted.groupBy(catalog.schemaOf).toSeq.collect { case (Some(s), ts) => (s, ts) }
+      .sortBy { case (_, ts) => wanted.indexOf(ts.head) }
+      .map { case (s, ts) => (s, ParquetStore.groupDir(root, s), ts) }
+      .filter { case (_, dir, _) => StoreFs.isDirectory(dir) }
+      .map { case (s, dir, ts) => (s, ts.map(list(dir, _))) }
 }
 
 object StoreIndex {
+  // footer facts of every index in the JVM, per listed directory
+  private val known = new ConcurrentHashMap[String, Map[(String, Long, Long), IndexedFile]]
+
   private def key(st: FileStatus) = (st.getPath.toString, st.getLen, st.getModificationTime)
 
   /** Row count and `time` range of one file, from its footer. Only
     * `INT64 TIMESTAMP(MICROS, UTC)` has a usable range: INT96 carries no
     * ordered statistics, and a millisecond range would need rounding. */
-  private[graft] def read(st: FileStatus, conf: Configuration): IndexedFile = {
+  private def read(st: FileStatus, conf: Configuration): IndexedFile = {
     val in = HadoopInputFile.fromStatus(st, conf)
     val stream = in.newStream()
     try {

@@ -53,7 +53,10 @@ final class ViewStore(df: DataFrame, val catalog: Catalog) extends TopicStore {
   * File index and pruning ([[StoreIndex]], replacing fossil's segment
   * `HeadTime` pruning + binary search, `pkg/database/segment.go:45-85`):
   * every read lists the wanted topics' directories and knows each file's
-  * row count and time range from its footer. [[entries]] hands Spark a
+  * row count and time range from its footer. The index is the one the
+  * `fossil` connector lists through too, and its footer facts are shared
+  * by every index in the JVM, so a file's footer is read once whichever
+  * reader meets it first. [[entries]] hands Spark a
   * relation over exactly those files whose scan drops every file whose
   * range misses the query's `time` bounds (an FQL window or a caller's own
   * `time` filter); row-group min/max stats then prune inside the files it
@@ -90,8 +93,7 @@ final class ParquetStore(spark: SparkSession, root: String) extends TopicStore {
   // layout (see StoreMigration; reference pkg/database/migration.go:30-43)
   val catalog: Catalog = ParquetStore.openCatalog(root)
 
-  private def groupDir(s: SType): String =
-    s"$root/data/sgroup=${ParquetStore.schemaKey(s)}"
+  private def groupDir(s: SType): String = ParquetStore.groupDir(root, s)
 
   // Mutating ops are synchronized on the store: the catalog map itself is
   // concurrent, but createTopic/append both mutate-then-persist, and two
@@ -207,14 +209,14 @@ final class ParquetStore(spark: SparkSession, root: String) extends TopicStore {
     val t = catalog.normalize(topic)
     val schema = catalog.schemaOf(t).getOrElse(
       throw new IllegalArgumentException(s"unknown topic $t"))
-    val groups = listGroups(Seq(t))
+    val groups = index.listGroups(root, catalog, Seq(t))
     if (groups.isEmpty) emptyEntries(schema)
     else memo(Seq(t), groups)
   }
 
   def entries(prefix: String): DataFrame = {
     val wanted = catalog.topicsUnder(prefix)
-    val groups = listGroups(wanted)
+    val groups = index.listGroups(root, catalog, wanted)
     if (groups.isEmpty)
       emptyEntries(catalog.combinedSchema(prefix) match {
         case SUnknown | SAmbiguous => FossilSchema.default
@@ -231,7 +233,7 @@ final class ParquetStore(spark: SparkSession, root: String) extends TopicStore {
     * two are merged. A store landed with the default write rule runs no
     * Spark job here. */
   def stats: Seq[Row] = {
-    val groups = listGroups(catalog.topicsUnder("/"))
+    val groups = index.listGroups(root, catalog, catalog.topicsUnder("/"))
     val acc = scala.collection.mutable.Map.empty[String, (Long, Long, Long)]
     def add(topic: String, n: Long, lo: Long, hi: Long): Unit = {
       val (n0, lo0, hi0) = acc.getOrElse(topic, (0L, Long.MaxValue, Long.MinValue))
@@ -265,15 +267,6 @@ final class ParquetStore(spark: SparkSession, root: String) extends TopicStore {
   def filesPruned: Long = index.filesPruned
 
   private val index = new StoreIndex
-
-  /** The listed files of `wanted`, per schema group whose directory
-    * exists, in the order of the topics' first appearance. */
-  private def listGroups(wanted: Seq[String]): Seq[(SType, Seq[TopicFiles])] =
-    wanted.groupBy(catalog.schemaOf).toSeq.collect { case (Some(s), ts) => (s, ts) }
-      .sortBy { case (_, ts) => wanted.indexOf(ts.head) }
-      .map { case (s, ts) => (s, groupDir(s), ts) }
-      .filter { case (_, dir, _) => StoreFs.isDirectory(dir) }
-      .map { case (s, dir, ts) => (s, ts.map(index.list(dir, _))) }
 
   // Built entries frames, keyed by wanted topics and valid for the exact
   // listing they were built from: a query over unchanged files reuses its
@@ -455,6 +448,10 @@ object ParquetStore {
       }
     case _ => a == b
   }
+
+  /** The directory of schema group `s` in the store at `root`; its topics'
+    * files live in `topic=<escaped>` directories below it. */
+  def groupDir(root: String, s: SType): String = s"$root/data/sgroup=${schemaKey(s)}"
 
   def schemaKey(s: SType): String = {
     val ddl = s.ddl

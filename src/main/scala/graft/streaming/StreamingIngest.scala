@@ -124,14 +124,14 @@ object StreamingIngest {
     * Output: canonical `(time TIMESTAMP, topic STRING, value T)`. */
   def storeStream(spark: SparkSession, root: String, schemaDdl: String): DataFrame = {
     val st = graft.engine.FossilSchema.parse(schemaDdl)
-    val dir = s"$root/data/sgroup=${graft.engine.ParquetStore.schemaKey(st)}"
+    val dir = graft.engine.ParquetStore.groupDir(root, st)
     spark.readStream
       .schema(StructType(Seq(
         StructField("time", TimestampType, nullable = false),
         StructField("topic", StringType, nullable = false),
         StructField("value", st.sparkType))))
       .option("basePath", dir)
-      .parquet(s"$dir/topic=*")
+      .parquet(dir)
   }
 
   /** Sliding-window stats: overlapping windows of `windowDur` advancing by

@@ -85,6 +85,17 @@ class FossilCatalogSpec extends SparkSpec {
         case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
       }.head
     assert(scan.stats.rowCount.contains(BigInt(6)), s"stats: ${scan.stats}")
+    // appends to a known topic leave catalog.json alone, so the catalog
+    // keeps its table handle across them; its properties still follow
+    def otherProps(): String = spark.sql("DESCRIBE TABLE EXTENDED fossil.main.other")
+      .filter("col_name = 'Table Properties'").collect().head.getString(1)
+    assert(otherProps().contains("num_files=1,num_rows=1"), otherProps())
+    val c = new LocalClient(spark, root, fixedClock)
+    c.append("/other", "y", ts("2024-02-02T00:00:00Z"))
+    c.append("/other", "z", ts("2024-02-03T00:00:00Z"))
+    val after = otherProps()
+    assert(after.contains("num_files=3,num_rows=3"), after)
+    assert(spark.sql("SELECT count(*) FROM fossil.main.other").collect().head.getLong(0) == 3L)
   }
 
   test("read-only: DDL refuses by name; unknown table errors") {

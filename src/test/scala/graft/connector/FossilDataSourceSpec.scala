@@ -96,6 +96,27 @@ class FossilDataSourceSpec extends SparkSpec {
     assert(got == Seq(4.0, 5.0, 6.0, 7.0, 8.0, 9.0))
   }
 
+  test("a windowed scan plans only the files whose time range meets the window") {
+    // four one-day files of /w/a, each with a row at 00:00 and at 18:00
+    val root = newRoot("window")
+    val c = new LocalClient(spark, root, fixedClock)
+    c.createTopic("/w", "float64")
+    (1 to 4).foreach { d =>
+      c.appendBatch(Seq(Row(ts(f"2024-02-$d%02dT00:00:00Z"), "/w/a", d.toDouble),
+        Row(ts(f"2024-02-$d%02dT18:00:00Z"), "/w/a", d + 0.5)), "float64")
+    }
+    val window = col("time").between(lit(ts("2024-02-02T00:00:00Z")), lit(ts("2024-02-02T12:00:00Z")))
+    val df = readFossil(root).filter(window)
+    val scan = scanOf(df)
+    assert(scan.planInputPartitions().length == 1)
+    assert(scan.description().contains("files=1/4"), scan.description())
+    val lib = new graft.engine.ParquetStore(spark, root).entries("/").filter(window)
+    assert(df.orderBy("time").collect().toSeq == lib.orderBy("time").collect().toSeq)
+    assert(df.collect().map(_.getDouble(2)).toSeq == Seq(2.0))
+    // without a window every file is planned
+    assert(scanOf(readFossil(root)).planInputPartitions().length == 4)
+  }
+
   test("column pruning: value-only projection reads without time/topic") {
     val root = floatStore()
     val df = readFossil(root).select("value")
@@ -348,6 +369,38 @@ class FossilDataSourceSpec extends SparkSpec {
     val after = snapshot()
     val changed = (before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k))
     assert(changed.isEmpty, s"Hadoop conf keys changed by the reads: ${changed.toSeq.sorted}")
+  }
+
+  /** The connector table behind `df` (after `df` has run, its index
+    * counts the footers the read needed). */
+  private def tableOf(df: DataFrame): FossilTable =
+    df.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => r.table
+    }.get.asInstanceOf[FossilTable]
+
+  test("footers are read once per JVM: a second load and a store reader share them") {
+    val root = floatStore()
+    val first = readFossil(root)
+    assert(first.count() == 20)
+    assert(tableOf(first).index.footerReads == 20)
+    // a second load over the unchanged store reads no footer
+    val second = readFossil(root).filter(col("topic") === "/m/a")
+    assert(second.count() == 10)
+    assert(tableOf(second).index.footerReads == 0)
+    // a store's own reads and the connector's share the facts too
+    val other = newRoot("shared")
+    val c = new LocalClient(spark, other, fixedClock)
+    c.createTopic("/s", "float64")
+    (1 to 3).foreach(i => c.append("/s/a", i.toDouble, ts(f"2024-03-$i%02dT00:00:00Z")))
+    val store = new graft.engine.ParquetStore(spark, other)
+    assert(store.entries("/").count() == 3 && store.footerReads == 3)
+    val viaConnector = readFossil(other)
+    assert(viaConnector.count() == 3)
+    assert(tableOf(viaConnector).index.footerReads == 0)
+    // a file landed since is the only footer read
+    c.append("/s/a", 4.0, ts("2024-03-04T00:00:00Z"))
+    val after = readFossil(other)
+    assert(after.count() == 4 && tableOf(after).index.footerReads == 1)
   }
 
   test("SQL view over the connector composes with plain Spark SQL") {
