@@ -9,35 +9,25 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.harness(GraftSession.cpus)
 
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
+    val names = SparkEntry.queries.keys.toSeq.sorted
 
-    // Warm-up at the smallest SF: JIT, codegen caches, parquet footer reads.
-    val warmDir = "/root/testdata/sf0.001"
-    queries.foreach { case (_, fn) =>
-      try fn(spark, warmDir).count() catch { case _: Throwable => () }
-    }
-
-    // median of three timed runs per query, taken PASS-MAJOR: the battery
-    // runs end-to-end three times and each query's samples come from
-    // different passes. Back-to-back runs of one query share any transient
+    // median of three timed runs per query, taken PASS-MAJOR after a
+    // warm-up at the smallest SF (JIT, codegen caches, parquet footer
+    // reads): back-to-back runs of one query share any transient
     // shared-sandbox contention (r3: dedup_minhash 8.7 s reported vs 1.6 s
     // reproduced; r5: per-run arrays spread 1.3-3.7 s on one query), so
-    // interleaving decorrelates the samples — a spike now inflates one pass
-    // of many queries slightly instead of all three samples of one query,
-    // and the per-query median discards it. The warm-up pass above already
-    // carries codegen/JIT for every plan shape.
-    // streaming replay rows do fixture I/O (JSON writes, file copies,
-    // sentinel appends) that is test-rig cost, not engine execution;
-    // Queries charges it to a per-row harness ledger and this loop
-    // subtracts each row's harness delta from its wall, so the reported
+    // Queries.timeRows interleaves them. Streaming replay rows do fixture
+    // I/O (JSON writes, file copies, sentinel appends) that is test-rig
+    // cost, not engine execution; Queries charges it to a per-row harness
+    // ledger that timeRows subtracts from each row's wall, so the reported
     // per-query numbers track the ENGINE round over round (r7: unsplit
     // harness was ~29% of the battery total and drowned the signal)
-    def harnessTotalNs: Long = {
+    val warmDir = "/root/testdata/sf0.001"
+    def ledger(m: java.util.concurrent.ConcurrentHashMap[String,
+        java.util.concurrent.atomic.LongAdder]): Map[String, Long] = {
       import scala.jdk.CollectionConverters._
-      Queries.harnessNs.values().asScala.map(_.sum()).sum
+      m.asScala.map { case (k, v) => k -> v.sum() }.toMap
     }
-    def harnessOf(name: String): Long =
-      Option(Queries.harnessNs.get(name)).map(_.sum()).getOrElse(0L)
 
     // per-pass ambient calibration: a fixed CPU-bound distributed probe
     // (hash-reduce over 2^27 rows) whose only round-over-round variable is
@@ -79,59 +69,36 @@ object Bench {
         rm(new java.io.File(dir))
       }
     }
-    calibrate(); ioCalibrate() // warm the probes' plans like every other query
 
-    // harness_s must describe the BATTERY's fixture I/O — snapshot the
-    // ledger here (total AND per key) so warm-up fixture builds at
+    // harness_s must describe the BATTERY's fixture I/O — the ledgers are
+    // snapshotted after the warm-up (per key) so warm-up fixture builds at
     // sf0.001 (never inside any timed wall) don't inflate the reported
     // number, and so the sidecar's per-key map sums to harness_s instead
-    // of mixing in warm-up totals (round-8 ADVICE)
-    val harnessAtStart = harnessTotalNs
-    val harnessAtStartByKey: Map[String, Long] = {
-      import scala.jdk.CollectionConverters._
-      Queries.harnessNs.asScala.map { case (k, v) => k -> v.sum() }.toMap
+    // of mixing in warm-up totals (round-8 ADVICE); the phase snapshot
+    // keeps the warm-up's phased rows out of the io-normalized headline
+    var harnessAtStartByKey = Map.empty[String, Long]
+    var phaseAtStartByKey = Map.empty[String, Long]
+    val calibs = collection.mutable.ArrayBuffer.empty[Double]
+    val ioCalibs = collection.mutable.ArrayBuffer.empty[Double]
+    val passes = Queries.timeRows(spark, names, warmDir, Seq(sfDir), 3) { pass =>
+      if (pass == 0) {
+        calibrate(); ioCalibrate() // warm the probes' plans like every other query
+        harnessAtStartByKey = ledger(Queries.harnessNs)
+        phaseAtStartByKey = ledger(Queries.phaseNs)
+      }
+      calibs += calibrate()
+      ioCalibs += ioCalibrate()
     }
-    // phase-ledger snapshot for the io-normalized headline below — the
-    // warm-up pass at sf0.001 also runs the phased rows, and its ledger
-    // time must not count against the timed battery
-    val phaseAtStartByKey: Map[String, Long] = {
-      import scala.jdk.CollectionConverters._
-      Queries.phaseNs.asScala.map { case (k, v) => k -> v.sum() }.toMap
-    }
-
     // A query that THROWS must not report its analysis-exception latency as
     // an engine time (r9: 39 broken rows read as a fake 30% speedup). Failed
     // runs record NaN; a query with no successful run reports -1 and is
     // excluded from total_s, and its name + first error land in "failed" /
     // the sidecar's "errors" so the breakage is loud in the artifact itself.
     val errors = collection.mutable.LinkedHashMap.empty[String, String]
-    val calibs = collection.mutable.ArrayBuffer.empty[Double]
-    val ioCalibs = collection.mutable.ArrayBuffer.empty[Double]
-    val passes = (0 until 3).map { _ =>
-      calibs += calibrate()
-      ioCalibs += ioCalibrate()
-      queries.map { case (name, fn) =>
-        val h0 = harnessOf(name)
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).count(); true }
-          catch { case e: Throwable =>
-            errors.getOrElseUpdate(
-              name, e.toString.replaceAll("\\s+", " ").take(300))
-            false
-          }
-        val wall = (System.nanoTime() - t0) / 1e9
-        val harness = (harnessOf(name) - h0) / 1e9
-        // operator caches are action-scoped (OperatorCache releases them
-        // when the materializing action completes) — this clearCache stays
-        // as a safety net against future regressions, OUTSIDE the timed
-        // window so teardown cost isn't part of the query
-        spark.catalog.clearCache()
-        name -> (if (ok) wall - harness else Double.NaN)
-      }.toMap
-    }
-    val results = queries.map { case (name, _) =>
-      val runs = passes.map(_(name))
+    for (pass <- passes; name <- names; e <- pass((name, sfDir)).failed)
+      errors.getOrElseUpdate(name, e.toString.replaceAll("\\s+", " ").take(300))
+    val results = names.map { name =>
+      val runs = passes.map(_((name, sfDir)).map(_.seconds).getOrElse(Double.NaN))
       val good = runs.filterNot(_.isNaN)
       val median = if (good.isEmpty) -1.0 else good.sorted.apply(good.size / 2)
       (name, median, runs)
@@ -150,22 +117,17 @@ object Bench {
     val rs = results.map { case (k, _, runs) =>
       "\"" + k + "\":" + runs.map(f).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val hs = {
-      import scala.jdk.CollectionConverters._
-      // battery-only deltas (warm-up snapshot subtracted): sums to harness_s
-      Queries.harnessNs.asScala.toSeq.sortBy(_._1).map { case (k, v) =>
-        val delta = v.sum() - harnessAtStartByKey.getOrElse(k, 0L)
-        "\"" + k + "\":" + f(delta / 1e9)
-      }.mkString("{", ",", "}")
+    // battery-only deltas (warm-up snapshot subtracted): sums to harness_s
+    val harnessDeltas = ledger(Queries.harnessNs).toSeq.sortBy(_._1).map { case (k, v) =>
+      k -> (v - harnessAtStartByKey.getOrElse(k, 0L))
     }
-    val ps = {
-      import scala.jdk.CollectionConverters._
-      // phase attribution INSIDE engine walls (e.g. store_roundtrip's
-      // ingest-write half) — reported, never subtracted
-      Queries.phaseNs.asScala.toSeq.sortBy(_._1).map { case (k, v) =>
-        "\"" + k + "\":" + f(v.sum() / 1e9)
-      }.mkString("{", ",", "}")
-    }
+    val hs = harnessDeltas.map { case (k, d) => "\"" + k + "\":" + f(d / 1e9) }
+      .mkString("{", ",", "}")
+    // phase attribution INSIDE engine walls (e.g. store_roundtrip's
+    // ingest-write half) — reported, never subtracted
+    val phases = ledger(Queries.phaseNs)
+    val ps = phases.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + f(v / 1e9) }
+      .mkString("{", ",", "}")
     val totalD = results.map(_._2).filter(_ >= 0).sum
     val total = f(totalD)
     val nGood = results.count(_._2 >= 0)
@@ -188,13 +150,10 @@ object Bench {
       "stream_session/pass_initial", "stream_session/pass_restart",
       "stream_wire_follow/follow", "stream_wire_follow/drain",
       "stream_dsv2/follow", "stream_dsv2/drain")
-    val ioPhasesS = {
-      import scala.jdk.CollectionConverters._
-      Queries.phaseNs.asScala.toSeq
-        .filter(kv => ioAntennaPhases.contains(kv._1))
-        .map { case (k, v) => (v.sum() - phaseAtStartByKey.getOrElse(k, 0L)) / 1e9 }
-        .sum / 3.0
-    }
+    val ioPhasesS = phases.toSeq
+      .filter(kv => ioAntennaPhases.contains(kv._1))
+      .map { case (k, v) => (v - phaseAtStartByKey.getOrElse(k, 0L)) / 1e9 }
+      .sum / 3.0
     val ioCalibMedD = ioCalibs.sorted.apply(ioCalibs.size / 2)
     val totalIoNormD =
       if (ioCalibMedD > 0) totalD - ioPhasesS + ioPhasesS * (IoCalibRefS / ioCalibMedD)
@@ -209,7 +168,7 @@ object Bench {
     val errJson = errors.map { case (k, v) =>
       "\"" + k + "\":\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     }.mkString("{", ",", "}")
-    val harnessTotal = f((harnessTotalNs - harnessAtStart) / 1e9)
+    val harnessTotal = f(harnessDeltas.map(_._2).sum / 1e9)
     val calibMed = f(calibs.sorted.apply(calibs.size / 2))
     val ioCalibMed = f(ioCalibs.sorted.apply(ioCalibs.size / 2))
     val calibArr = calibs.map(f).mkString("[", ",", "]")

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -71,8 +73,9 @@ object Queries {
     * sentinel appends — keyed by battery row. This is test-rig cost, not
     * engine execution: the round-7 battery spent ~29% of its wall inside
     * these writes, drowning the regression signal the bench exists to
-    * provide. [[graft.Bench]] subtracts each row's harness delta from its
-    * timed wall and reports the total separately (`harness_s`). */
+    * provide. [[timeRows]] subtracts each row's harness delta from its
+    * timed wall; [[graft.Bench]] reports the total separately
+    * (`harness_s`). */
   private[graft] val harnessNs =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder]
   private[graft] def harness[A](key: String)(body: => A): A = {
@@ -80,6 +83,50 @@ object Queries {
     try body finally harnessNs
       .computeIfAbsent(key, _ => new java.util.concurrent.atomic.LongAdder)
       .add(System.nanoTime() - t0)
+  }
+
+  /** One timed run of a battery row: `seconds` is engine time, `rows` the
+    * row count, and `startMs`..`endMs` the run's wall-clock window, so
+    * Spark listener events or stack samples can be matched to it. */
+  private[graft] final case class RowRun(seconds: Double, rows: Long, startMs: Long, endMs: Long)
+
+  /** The one rule for timing battery rows, used by [[graft.Bench]],
+    * `tools.ScaleSweep` and `tools.Profile`. Every row first runs once,
+    * untimed, on `warmDir` (JIT, codegen caches, footer reads; a failed
+    * warm-up is ignored). Then `passes` pass-major rounds time every row on
+    * each of `dirs` in turn: one noisy stretch of the window then inflates
+    * one sample of many rows instead of every sample of one row. A run's
+    * engine time is the wall of its `count()` minus the row's [[harnessNs]]
+    * delta. `clearCache()` follows each run, outside its window: operator
+    * caches are already action-scoped (`OperatorCache`), so it is only a
+    * safety net against a cache that outlives its action.
+    * `beforePass(i)` runs before pass `i`. Returns one map per pass from
+    * (row, dir) to the run or its failure. */
+  private[graft] def timeRows(spark: SparkSession, names: Seq[String], warmDir: String,
+      dirs: Seq[String], passes: Int)(
+      beforePass: Int => Unit = _ => ()): IndexedSeq[Map[(String, String), Try[RowRun]]] = {
+    val battery = SparkEntry.queries
+    // any Throwable: a row that overflows the stack fails alone
+    def count(name: String, dir: String): Try[Long] =
+      try Success(battery(name)(spark, dir).count())
+      catch { case e: Throwable => Failure(e) }
+    def harnessOf(name: String): Long =
+      Option(harnessNs.get(name)).map(_.sum()).getOrElse(0L)
+    names.foreach(count(_, warmDir))
+    (0 until passes).map { pass =>
+      beforePass(pass)
+      (for (n <- names; dir <- dirs) yield {
+        val h0 = harnessOf(n)
+        val startMs = System.currentTimeMillis()
+        val t0 = System.nanoTime()
+        val rows = count(n, dir)
+        val wall = (System.nanoTime() - t0) / 1e9
+        val run = rows.map(RowRun(wall - (harnessOf(n) - h0) / 1e9, _, startMs,
+          System.currentTimeMillis()))
+        spark.catalog.clearCache()
+        (n, dir) -> run
+      }).toMap
+    }
   }
 
   /** Phase ledger: nanoseconds per `row/phase` spent INSIDE a row's
@@ -127,8 +174,8 @@ object Queries {
     java.nio.file.Files.createTempDirectory(scratchRoot, prefix).toString
 
   /** One replay-fixture dir per (battery key, sf dir) per JVM: the fixture
-    * is a pure function of the input tables, so bench passes 2..N (and
-    * TimeSome repeats) reuse the pass-1 files instead of re-writing them
+    * is a pure function of the input tables, so timed passes 2..N
+    * reuse the pass-1 files instead of re-writing them
     * inside the timed window. The write itself is charged to the harness
     * ledger, so even pass 1's wall can be corrected to engine-only time. */
   private val fixtureDirs =

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.engine.{Catalog, Codec, FossilSchema, StoreFs}
-import graft.engine.FossilSchema.{SAmbiguous, SArray, SComposite, SType, SUnknown, Scalar}
+import graft.engine.FossilSchema.{SAmbiguous, SArray, SType, SUnknown, Scalar}
 import graft.sources.FossilDatabase
 
 /** `spark.read.format("fossil")` over a NATIVE fossil database directory
@@ -227,14 +227,7 @@ final class FossilNativeReader(
   private def decodeValue(tid: Int, bytes: Array[Byte]): Any = {
     val st = if (tid >= 0 && tid < sTypes.length) sTypes(tid)
       else FossilSchema.SBinary
-    widen(external(st, Codec.decode(st, bytes)), combined)
-  }
-
-  private def external(st: SType, v: Any): Any = st match {
-    case c: SComposite =>
-      val m = v.asInstanceOf[Map[String, Any]]
-      org.apache.spark.sql.Row(c.sorted.fields.map { case (k, _) => m(k) }: _*)
-    case _ => v
+    widen(Codec.toSpark(st, Codec.decode(st, bytes)), combined)
   }
 
   private def widen(v: Any, to: SType): Any = (v, to) match {

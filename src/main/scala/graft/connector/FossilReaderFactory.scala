@@ -8,12 +8,11 @@ import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
 import org.apache.spark.sql.types._
 
 import graft.engine.FossilSchema.{SAmbiguous, SType}
-import graft.engine.ParquetStore
+import graft.engine.{ParquetStore, StoreParquetFormat}
 
 /** One split of one data file of a [[FossilDataSource]] scan: a byte range
   * of a Parquet file under `root/data/sgroup=…/topic=…/`, read as schema
@@ -27,7 +26,7 @@ final case class FossilInputPartition(group: Int, file: PartitionedFile)
   extends InputPartition
 
 /** Reads [[FossilInputPartition]]s with Spark's own Parquet reader
-  * (`ParquetFileFormat.buildReaderWithPartitionValues`), one reader per
+  * ([[StoreParquetFormat]]`.buildReaderWithPartitionValues`), one reader per
   * schema group, so the connector scans store files the way
   * `ParquetStore.entries` does: the vectorized reader, row-group pruning
   * from the pushed time bounds (stats of INT64 timestamps in any unit;
@@ -71,11 +70,8 @@ private[connector] object FossilReaderFactory {
     * the pushed inclusive time bounds in µs. */
   def apply(spark: SparkSession, groups: Seq[SType], combined: SType,
       pruned: StructType, loUs: Option[Long], hiUs: Option[Long]): FossilReaderFactory = {
-    // the bounds reach the reader as inclusive filters, not as the pushed
-    // filters themselves: for a TIMESTAMP_MILLIS column Spark floors a
-    // bound to whole milliseconds, which turns `time < 1.5 ms` into
-    // `ms < 1` and prunes a row group holding 1.0 ms; a floored `<=` is
-    // exact and a floored `>=` only keeps more
+    // inclusive bounds, exact under Spark's millisecond flooring (see
+    // StoreParquetFormat)
     val timeFilters =
       loUs.map(us => GreaterThanOrEqual("time", DateTimeUtils.microsToInstant(us))).toSeq ++
         hiUs.map(us => LessThanOrEqual("time", DateTimeUtils.microsToInstant(us)))
@@ -88,7 +84,7 @@ private[connector] object FossilReaderFactory {
       f == "time" || (f == "value" && combined != SAmbiguous))
     val readers = groups.map { g =>
       val dataSchema = ParquetStore.fileSchema(g.sparkType)
-      new ParquetFileFormat().buildReaderWithPartitionValues(spark, dataSchema,
+      new StoreParquetFormat().buildReaderWithPartitionValues(spark, dataSchema,
         topicSchema, StructType(fileFields.map(dataSchema(_))), timeFilters,
         Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
         // a fresh conf per group: the reader writes its requested schema

@@ -3,6 +3,8 @@ package graft.engine
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 
+import org.apache.spark.sql.Row
+
 import FossilSchema._
 
 /** Fossil wire codec: little-endian fixed-width scalars, length-prefixed
@@ -82,6 +84,16 @@ object Codec {
         k -> v
       }.toMap
     case SUnknown | SAmbiguous => bytes
+  }
+
+  /** A [[decode]]d value as Spark's external type: a composite's Map becomes
+    * a [[Row]] in the struct's (key-sorted) field order; scalars and arrays
+    * pass through. */
+  def toSpark(schema: SType, value: Any): Any = (schema, value) match {
+    case (c: SComposite, m: Map[_, _]) =>
+      val fields = m.asInstanceOf[Map[String, Any]]
+      Row.fromSeq(c.sorted.fields.map { case (k, _) => fields(k) })
+    case _ => value
   }
 
   /** Validate that `bytes` conform to `schema` — the append-time gate

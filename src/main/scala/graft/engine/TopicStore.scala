@@ -4,7 +4,6 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -295,13 +294,13 @@ final class ParquetStore(spark: SparkSession, root: String) extends TopicStore {
     }
 
   /** One schema group's listed files as a relation `(time, value, topic)`,
-    * read by Spark's Parquet reader with the catalog's schema (every file
-    * of the group was written with it, so no footer inference is needed)
-    * through a [[StoreFileIndex]]. */
+    * read by Spark's Parquet reader ([[StoreParquetFormat]]) with the
+    * catalog's schema (every file of the group was written with it, so no
+    * footer inference is needed) through a [[StoreFileIndex]]. */
   private def scan(s: SType, topics: Seq[TopicFiles]): DataFrame = {
     val files = new StoreFileIndex(topics, index.prunedCount)
     spark.baseRelationToDataFrame(HadoopFsRelation(files, files.partitionSchema,
-      ParquetStore.fileSchema(s.sparkType), bucketSpec = None, new ParquetFileFormat,
+      ParquetStore.fileSchema(s.sparkType), bucketSpec = None, new StoreParquetFormat,
       options = Map.empty)(spark))
   }
 

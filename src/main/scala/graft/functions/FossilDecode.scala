@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -10,7 +9,7 @@ import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.types.{BinaryType, DataType}
 
 import graft.engine.{Codec, FossilSchema}
-import graft.engine.FossilSchema.{SComposite, SType}
+import graft.engine.FossilSchema.SType
 
 /** Decode a fossil wire-format binary datum into its typed Spark value.
   *
@@ -38,18 +37,8 @@ case class FossilDecode(ddl: String, child: Expression)
       s"fossil_decode expects binary input, got ${child.dataType}")
 
   override protected def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[Array[Byte]]
-    val decoded = Codec.decode(schema, bytes)
-    toCatalyst(massage(schema, decoded))
-  }
-
-  /** Codec yields Scala maps for composites; Catalyst structs want Rows in
-    * the (sorted-key) field order of the StructType. */
-  private def massage(s: SType, v: Any): Any = s match {
-    case c: SComposite =>
-      val m = v.asInstanceOf[Map[String, Any]]
-      Row.fromSeq(c.sorted.fields.map { case (k, _) => m(k) })
-    case _ => v
+    val decoded = Codec.decode(schema, input.asInstanceOf[Array[Byte]])
+    toCatalyst(Codec.toSpark(schema, decoded))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -108,18 +108,6 @@ object WireImport {
     DateTimeFormatter.ISO_INSTANT.format(Instant.ofEpochSecond(
       Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L))
 
-  /** Wire-decoded value → Spark external type: the schema codec yields
-    * composites as Maps, but a StructType row expects a [[Row]] with the
-    * composite's canonical (key-sorted) field order. Scalars and arrays
-    * pass through. */
-  private def external(schema: graft.engine.FossilSchema.SType, v: Any): Any =
-    (schema, v) match {
-      case (c: graft.engine.FossilSchema.SComposite, m: Map[_, _]) =>
-        val mm = m.asInstanceOf[Map[String, Any]]
-        Row(c.sorted.fields.map { case (k, _) => mm(k) }: _*)
-      case _ => v
-    }
-
   // ---- resume sidecar -----------------------------------------------------
 
   /** Per-topic progress: `done` = every source entry at or below this µs
@@ -336,7 +324,7 @@ object WireImport {
         val st = graft.engine.FossilSchema.parse(ddl)
         target.appendBatch(
           es.map(e => Row(Timestamp.from(e.time), e.topic,
-            external(st, e.decoded))), ddl)
+            graft.engine.Codec.toSpark(st, e.decoded))), ddl)
       }
 
     def markPending(topic: String, done: Long, lo: Long, hi: Long): Unit =

@@ -196,54 +196,31 @@ object ScaleSweep {
       ("q_asof_forward", "linear"))
       .filter { case (n, _) => subset.forall(_.contains(n)) }
 
-    // warm-up pass over the 1× base (JIT/codegen), the data then timed
-    ops.foreach { case (n, _) =>
-      try graft.SparkEntry.queries(n)(spark, base).count()
-      catch { case _: Throwable => () }
-    }
-
-    // harness-aware timing (same accounting as Bench/TimeSome): streaming
+    // harness-aware timing (Queries.timeRows, Bench's rule): streaming
     // fixture writes / sig-store builds are charged to Queries.harnessNs
     // and excluded — the sweep compares ENGINE scaling, and a 1× run that
     // pays a fixture write against a K× run that doesn't (or vice versa)
-    // would corrupt the ratio
-    def harnessOf(n: String): Long =
-      Option(graft.Queries.harnessNs.get(n)).map(_.sum()).getOrElse(0L)
-    def time(name: String, dir: String): (Double, Long) = {
-      val h0 = harnessOf(name)
-      val t0 = System.nanoTime()
-      val rows = graft.SparkEntry.queries(name)(spark, dir).count()
-      val dt = (System.nanoTime() - t0) / 1e9 - (harnessOf(name) - h0) / 1e9
-      spark.catalog.clearCache()
-      (dt, rows)
-    }
-
-    var failed = 0
-    // pass-major median-of-N (default 3): round 10 measured ±10× swings on
+    // would corrupt the ratio. Warm-up on the 1× base, the data then timed.
+    // Pass-major median-of-N (default 3): round 10 measured ±10× swings on
     // IDENTICAL code/corpus between two one-shot sweeps 20 minutes apart
     // (pipeline_curate 40.1 → 4.1 s, dedup_minhash 9.0 → 23.5 s) — the
-    // sandbox's minute-scale I/O weather dominates single samples. Each
-    // op's samples come from different end-to-end passes (the same
-    // decorrelation Bench uses), so one loud window inflates one pass of
-    // many ops slightly instead of all samples of one op. GRAFT_SWEEP_PASSES=1
-    // keeps deep sweeps (100×) affordable when walls are secondary to the
-    // plan/row checks.
+    // sandbox's minute-scale I/O weather dominates single samples, and
+    // pass-major samples spread one loud window over many ops.
+    // GRAFT_SWEEP_PASSES=1 keeps deep sweeps (100×) affordable when walls
+    // are secondary to the plan/row checks.
     val passCount = sys.env.getOrElse("GRAFT_SWEEP_PASSES", "3").toInt
-    val samples = (0 until passCount).map { _ =>
-      ops.map { case (name, _) =>
-        name -> (time(name, base), time(name, out))
-      }.toMap
-    }
+    val samples = graft.Queries.timeRows(spark, ops.map(_._1), base, Seq(base, out), passCount)()
+    var failed = 0
     def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
     val results = ops.map { case (name, kind) =>
-      val s = samples.map(_(name))
-      val t1 = med(s.map(_._1._1))
-      val tk = med(s.map(_._2._1))
-      val (r1, rk) = (s.head._1._2, s.head._2._2)
+      val (one, big) = (samples.map(_((name, base)).get), samples.map(_((name, out)).get))
+      val t1 = med(one.map(_.seconds))
+      val tk = med(big.map(_.seconds))
+      val (r1, rk) = (one.head.rows, big.head.rows)
       // cross-pass row counts must agree — a free determinism check at
       // BOTH scales (partition-order nondeterminism often shows up as a
       // changing row count in sampled/banded ops before anything else)
-      val rowsStable = s.forall(p => p._1._2 == r1 && p._2._2 == rk)
+      val rowsStable = one.forall(_.rows == r1) && big.forall(_.rows == rk)
       // linear ops: allow 2× headroom over proportional growth (fixed
       // per-query overhead dominates small runs; catches plan flips which
       // cost 10-100×, not 2×). quadratic baseline: bound by K²·2.

@@ -257,6 +257,8 @@ class FossilDataSourceSpec extends SparkSpec {
       ("< 1.5ms", col("time") < at(1500), _ < 1500),
       ("< 2ms", col("time") < at(2000), _ < 2000),
       ("< 2.5ms", col("time") < at(2500), _ < 2500),
+      ("> 1.5ms", col("time") > at(1500), _ > 1500),
+      ("> 2ms", col("time") > at(2000), _ > 2000),
       (">= 1.5ms and < 3ms", col("time") >= at(1500) && col("time") < at(3000),
         o => o >= 1500 && o < 3000))
     def rows(df: DataFrame): Seq[(Long, String, Long)] =
@@ -268,11 +270,7 @@ class FossilDataSourceSpec extends SparkSpec {
     cases.foreach { case (name, p, keep) =>
       val fossil = rows(readFossil(root).filter(p))
       assert(fossil == all.filter(r => keep(r._1 - base)), name)
-      // entries() hands the filter to Spark's file source as written, and
-      // Spark floors a `<` bound to whole milliseconds for the MILLIS
-      // file, pruning the row group that holds 1.0 ms (a defect of that
-      // path, recorded on ROADMAP); every other bound agrees
-      if (name != "< 1.5ms") assert(fossil == rows(lib.filter(p)), name)
+      assert(fossil == rows(lib.filter(p)), name)
     }
   }
 

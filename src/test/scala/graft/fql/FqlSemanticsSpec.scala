@@ -114,6 +114,45 @@ class FqlSemanticsSpec extends SparkSpec {
     assert(vals("all | reduce a, b -> a + b", eng(1, 2, 3, 4)) == Seq(10.0))
   }
 
+  /** Malformed-query and edge probes on the sf0.001 events, each pinned
+    * to its outcome there: `Right(rows)` or `Left(first line of the
+    * FqlException message)`. The parser-only failures (`foo`, trailing
+    * garbage, `all in /12`) are cases of ParserSpec. */
+  private val sf0001Cases: Seq[(String, Either[String, Long])] = Seq(
+    "all | filter x -> y > 1" -> Left("unresolved identifier 'y'"),
+    "all | filter x -> x == 'foo'" -> Left("'==' operands not comparable: double vs string"),
+    "all | reduce a -> a" -> Left("Syntax error found in query:"),
+    "all | map x -> frob(x)" -> Left("Unknown builtin function 'frob'"),
+    "all | map x -> 1, x | map a, b, c -> a" ->
+      Left("stage takes 3 args but input is a 2-tuple"),
+    "all | map x -> x[5]" -> Left("cannot index double"),
+    "all between ~(2024/01/03), ~(2024/01/02)" -> Right(0L), // inverted range
+    "all since ~now + @day" -> Right(0L), // future start
+    "sample(0)" -> Right(1000L), // a zero interval keeps every entry
+    "all in /nosuchtopic" -> Right(0L),
+    // numeric truthiness, unary ±, tuple and composite subscripts,
+    // multi-arg builtins and boolean equality (DifferentialSpec fuzzes
+    // the same surface on generated data)
+    "all in /events | map x -> x - 100 | filter v -> v" -> Right(1000L),
+    "all in /events | map x -> -x" -> Right(1000L),
+    "all in /events | map x -> +x" -> Right(1000L),
+    "all in /events | map x -> 1, x * 2 | map t -> t[1]" -> Right(1000L),
+    "all in /events | map x -> \"a\": x, \"b\": 2 | map c -> c[\"a\"] + c[\"b\"]" ->
+      Right(1000L),
+    "all in /events | map x -> max(x, 1, 2, 3)" -> Right(1000L),
+    "all in /events | filter v -> v > 100 == (v > 100)" -> Right(1000L))
+
+  test("malformed and edge queries on sf0.001 events: errors and row counts") {
+    val e = FossilEngine.over(graft.Tables.eventEntries(spark, "/root/testdata/sf0.001"),
+      graft.Tables.eventsCatalog, graft.Queries.fixedClock)
+    sf0001Cases.foreach { case (q, want) =>
+      val got = try Right(e.query(q).count()) catch {
+        case x: FqlException => Left(x.getMessage.linesIterator.next())
+      }
+      assert(got == want, q)
+    }
+  }
+
   test("sample greedy: first kept, next >= last + interval") {
     // entries at seconds 0..5; sample(@second * 2) keeps 0, 2, 4
     val kept = vals("sample(@second * 2)", eng(10, 11, 12, 13, 14, 15))
