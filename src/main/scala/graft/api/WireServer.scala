@@ -311,7 +311,7 @@ object WireServer {
   }
 
   /** The QUERY body for `df` — `[u32 count]`, then `[u32 len][entry line]`
-    * per row in partition order — from ONE Spark job, or None when it does
+    * per row in partition order — from ONE result job, or None when it does
     * not fit a `cap`-byte response. Each task encodes its own entry lines
     * and gives up before they pass the byte budget, so no task ships more
     * than one response could hold. Once the driver's running total passes
@@ -319,6 +319,12 @@ object WireServer {
     * after that point (the cancel, or Spark's `maxResultSize` abort) is
     * the same overflow. The job runs under its own SQL execution, so
     * `QueryExecutionListener`s see the query like a collect.
+    *
+    * The query's job tag is set before the plan is executed: for a plan
+    * with a shuffle (`sample`, a reduce) AQE runs the shuffle-stage jobs
+    * inside `execute()`, and they carry the same tag and SQL execution as
+    * the result job, so the overflow cancel reaches every job the QUERY
+    * runs.
     *
     * The job executes a rewritten copy of the physical plan
     * ([[graft.plans.ParamLiterals]]): the time windows and thresholds in
@@ -338,7 +344,8 @@ object WireServer {
     val qe = df.queryExecution
     val sc = df.sparkSession.sparkContext
     val tag = s"graft-wire-query-${java.util.UUID.randomUUID()}"
-    SQLExecution.withNewExecutionId(qe, Some("wireQuery")) {
+    sc.addJobTag(tag)
+    try SQLExecution.withNewExecutionId(qe, Some("wireQuery")) {
       val rdd = new SQLExecutionRDD(ParamLiterals(qe.executedPlan).execute(),
         qe.sparkSession.sessionState.conf)
       val parts = new Array[Array[Byte]](rdd.getNumPartitions)
@@ -354,11 +361,9 @@ object WireServer {
           parts.mapInPlace(_ => null)
           sc.cancelJobsWithTag(tag)
       }
-      sc.addJobTag(tag)
-      val job =
-        try sc.submitJob(rdd, (rows: Iterator[InternalRow]) => encodeEntries(rows, rowType, schema, budget),
-          parts.indices, land, ())
-        finally sc.removeJobTag(tag)
+      val job = sc.submitJob(rdd,
+        (rows: Iterator[InternalRow]) => encodeEntries(rows, rowType, schema, budget),
+        parts.indices, land, ())
       scala.concurrent.Await.ready(job, scala.concurrent.duration.Duration.Inf)
       if (overflow) None
       else {
@@ -367,7 +372,7 @@ object WireServer {
         parts.foreach(body.put)
         Some(body.array())
       }
-    }
+    } finally sc.removeJobTag(tag)
   }
 
   /** One partition's rows as `[u32 len][entry line]` bytes and their count,

@@ -1,6 +1,6 @@
 package graft.fql
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -503,13 +503,13 @@ object Compiler {
           "general-fold reduce is not supported on unbounded streams; " +
             "agg-shaped reduces (+/min/max) run as streaming aggregations, " +
             "or use a windowed aggregation")
-      // General associative fold: a LAZY distributed plan — per-partition
-      // fold with the FQL interpreter, then a single final fold. Same
+      // General associative fold, one LAZY plan: per-partition fold with
+      // the FQL interpreter, coalesce(1), then a single final fold. Same
       // contract as the reference (arrival-order fold, `reduce.go:47-79`):
       // only assoc+comm bodies are well-defined. No job runs at compile
-      // time, and an empty selection yields an empty frame instead of the
-      // empty-collection crash RDD.treeReduce throws.
-      val spark = df.sparkSession
+      // time for any input, and an empty selection yields no row. Partial
+      // results reach the final fold as serialized interpreter values, so
+      // only the final value is converted to the output type.
       val vDt = vt // reduce output type must equal input type (types.go:228-231)
       val schema = StructType(Seq(
         StructField(TimeCol, TimestampType), StructField(TopicCol, StringType),
@@ -517,13 +517,14 @@ object Compiler {
       def fold(it: Iterator[Any]): Iterator[Any] =
         if (it.isEmpty) Iterator.empty
         else Iterator.single(it.reduce((x, y) => Eval.evalOut(out, Map(a -> x, b -> y))))
-      val rows = df.select(col(ValueCol)).rdd
-        .map(r => Eval.fromRowValue(r.get(0))).filter(_ != null)
-        .mapPartitions(fold)
+      df.select(col(ValueCol))
+        .mapPartitions((rows: Iterator[Row]) =>
+          fold(rows.map(r => Eval.fromRowValue(r.get(0))).filter(_ != null)))(
+          Encoders.javaSerialization[Any])
         .coalesce(1)
-        .mapPartitions(fold)
-        .map(v => Row(null, "N/A", Eval.toRowValue(v, vDt)))
-      spark.createDataFrame(rows, schema)
+        .mapPartitions((partials: Iterator[Any]) =>
+          fold(partials).map(v => Row(null, "N/A", Eval.toRowValue(v, vDt))))(
+          Encoders.row(schema))
     }
   }
 }

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** `sample(d)` — fossil's greedy time downsample
   * (`pkg/query/plan/metadata.go:46-64`): keep the first entry, then the next
@@ -16,6 +15,11 @@ import org.apache.spark.sql.types.LongType
   * (`repartition(topic)` + secondary sort, no global ordering). The
   * fossil-exact single-global-stream variant ([[greedyGlobal]]) is provided
   * for parity and documented as the non-scalable one.
+  *
+  * Both greedy variants are one lazy Dataset plan: a `mapPartitions` with a
+  * row encoder over the arranged frame, with no RDD in between. Nothing
+  * runs until the caller's action, and AQE plans the shuffle as part of
+  * that action's query.
   *
   * [[bucketed]] is the fully-parallel approximation (tumbling buckets, keep
   * earliest per bucket) — the variant you'd reach for at extreme scale, and
@@ -35,19 +39,25 @@ object Sample {
   def greedyGlobal(df: DataFrame, intervalNs: Long): DataFrame =
     greedy(df, intervalNs, perTopic = false)
 
+  /** The greedy interval in whole µs, as batch and streaming `sample` both
+    * apply it. Timestamps have µs resolution, so a sub-µs positive interval
+    * means "drop same-µs entries, keep any later µs" ≡ 1 µs: floorDiv alone
+    * would give 0 and keep everything. Zero/negative intervals genuinely
+    * keep everything (t >= last + d always holds), like the reference. */
+  def intervalUs(intervalNs: Long): Long =
+    if (intervalNs <= 0) 0L else math.max(1L, Math.floorDiv(intervalNs, 1000L))
+
   private def greedy(df: DataFrame, intervalNs: Long, perTopic: Boolean): DataFrame = {
-    // timestamps have µs resolution, so a sub-µs positive interval means
-    // "drop same-µs entries, keep any later µs" ≡ 1 µs — floorDiv alone
-    // would give 0 and keep everything. Zero/negative intervals genuinely
-    // keep everything (t >= last + d always holds), like the reference.
-    val intervalUs =
-      if (intervalNs <= 0) 0L else math.max(1L, Math.floorDiv(intervalNs, 1000L))
-    val spark = df.sparkSession
+    val interval = intervalUs(intervalNs)
     val withT = df.withColumn(T, unix_micros(col("time")))
     val schema = withT.schema
     val tIdx = schema.fieldIndex(T)
     val topicIdx = schema.fieldIndex("topic")
 
+    // `value` is the last sort key, as in the streaming twin and [[bucketed]]:
+    // among same-µs entries of a stream the kept one must not depend on the
+    // order a shuffle delivers them.
+    //
     // The greedy carry is sequential, but the SORT never has to be: the
     // global variant range-sorts in parallel (sample → range shuffle →
     // per-partition sort) and the single carry task then just CONCATENATES
@@ -57,27 +67,25 @@ object Sample {
     // of the whole stream.
     val arranged =
       if (perTopic)
-        withT.repartition(col("topic")).sortWithinPartitions(col("topic"), col(T))
-          .rdd
-      else
-        withT.orderBy(col(T)).rdd.coalesce(1, shuffle = false)
+        withT.repartition(col("topic"))
+          .sortWithinPartitions(col("topic"), col(T), col("value"))
+      else withT.orderBy(col(T), col("value")).coalesce(1)
 
     // Sequential greedy scan; partitions are (topic-sorted, time-sorted) so a
     // single pass with a per-topic carry is exact.
-    val rows = arranged.mapPartitions { it =>
+    arranged.mapPartitions { (it: Iterator[Row]) =>
       var lastKept = Map.empty[String, Long]
-      it.flatMap { r =>
+      it.filter { r =>
         val key = if (perTopic) r.getString(topicIdx) else ""
         val t = r.getLong(tIdx)
         lastKept.get(key) match {
-          case Some(prev) if t - prev < intervalUs => None
+          case Some(prev) if t - prev < interval => false
           case _ =>
             lastKept = lastKept.updated(key, t)
-            Some(r)
+            true
         }
       }
-    }
-    spark.createDataFrame(rows, schema).drop(T)
+    }(Encoders.row(schema)).drop(T)
   }
 
   /** Tumbling-bucket approximation: keep the earliest entry per

@@ -34,11 +34,7 @@ object StreamingAdapter {
     import entries.sparkSession.implicits._
     import org.apache.spark.sql.types._
     val vt = entries.schema(Compiler.ValueCol).dataType
-    // same clamp as the batch path (Sample.greedy): a sub-µs positive
-    // interval means "drop same-µs entries" ≡ 1 µs — plain floorDiv would
-    // give 0 and keep every row, diverging from batch on the identical FQL
-    val intervalUs =
-      if (intervalNs <= 0) 0L else math.max(1L, Math.floorDiv(intervalNs, 1000L))
+    val intervalUs = graft.operators.Sample.intervalUs(intervalNs)
     val base = entries.select(
       unix_micros(col(Compiler.TimeCol)).as("t_us"),
       col(Compiler.TopicCol).as("topic"),

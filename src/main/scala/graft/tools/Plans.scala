@@ -491,6 +491,16 @@ object Plans {
         s"assignment: $ok (cid joins=$cidJoins, bnlj=${bnljs(df)}, " +
         s"assign generates=$gens, store scans=$storeScans)")
     }
+    // One lazy plan per FQL query: no battery FQL row may hand its rows
+    // through an RDD and back (`createDataFrame(rdd, …)` is a LogicalRDD
+    // Catalyst cannot see through, and its input plan runs separately).
+    graft.SparkEntry.queries.keys.filter(_.startsWith("fql_")).toSeq.sorted.foreach { name =>
+      val rdds = graft.SparkEntry.queries(name)(spark, sfDir).queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r
+      }.size
+      if (rdds > 0) failed += 1
+      println(s"[check] $name optimized plan lacks 'LogicalRDD': ${rdds == 0}")
+    }
     spark.stop()
     if (failed > 0) { System.err.println(s"$failed plan checks FAILED"); sys.exit(1) }
   }

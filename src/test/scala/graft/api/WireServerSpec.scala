@@ -561,11 +561,18 @@ class WireServerSpec extends SparkSpec {
   /** Spark jobs a wire call runs: the server is built inside the probe so
     * its connection threads carry the probe's marker. */
   private def wireJobs[T](root: String)(call: RemoteClient => T): (Int, T) = {
+    val (jobs, got) = wireJobProperties(root)(call)
+    (jobs.size, got)
+  }
+
+  /** The properties of each Spark job a wire call runs (see [[wireJobs]]). */
+  private def wireJobProperties[T](root: String)(
+      call: RemoteClient => T): (Seq[java.util.Properties], T) = {
     var server: WireServer = null
     var client: RemoteClient = null
     var got: Option[T] = None
     try {
-      val jobs = jobsDuring {
+      val jobs = jobPropertiesDuring {
         server = new WireServer(spark, Map("a" -> root), "a", fixedClock)
         client = new RemoteClient("127.0.0.1", server.port, db = "a", poolSize = 1)
         got = Some(call(client))
@@ -593,6 +600,24 @@ class WireServerSpec extends SparkSpec {
     val (reduce, Seq(sum)) = wireJobs(root)(_.query("all in /oj | reduce a, b -> a + b"))
     assert(sum.decoded == 36.0)
     assert(reduce <= 2, s"reduce ran $reduce jobs")
+  }
+
+  test("every job of a wire sample or general-fold QUERY runs under its tag and execution") {
+    val root = filledRoot("graft_wire_tags", "/tg", "float64", f64s(8))
+    // sample shuffles, so AQE runs a stage job before the result job; the
+    // general fold runs its per-partition and final folds in one plan.
+    // The eight entries land a minute apart: one hourly sample, and 8!
+    for ((fql, want) <- Seq("sample(@hour) in /tg" -> Seq(1.0),
+        "all in /tg | reduce a, b -> a * b" -> Seq(40320.0))) {
+      val (jobs, got) = wireJobProperties(root)(_.query(fql))
+      assert(got.map(_.decoded) == want, fql)
+      assert(jobs.nonEmpty, fql)
+      val tags = jobs.map(p => Option(p.getProperty("spark.job.tags")).toSeq
+        .flatMap(_.split(",")).filter(_.startsWith("graft-wire-query-")))
+      assert(tags.forall(_.size == 1) && tags.distinct.size == 1, s"$fql: $tags")
+      val executions = jobs.map(p => Option(p.getProperty("spark.sql.execution.id")))
+      assert(executions.forall(_.isDefined) && executions.distinct.size == 1, s"$fql: $executions")
+    }
   }
 
   test("STATS answers from store footers with no Spark job and orders topics on the driver") {

@@ -47,6 +47,15 @@ class OperatorsSpec extends SparkSpec {
     assert(streamKept.sorted == Seq(0L, 1L))
     assert(graft.streaming.StreamingAdapter.greedySample(df, 0L).count() == 3)
     assert(graft.streaming.StreamingAdapter.greedySample(df, -1000L).count() == 3)
+    // same-µs entries given in descending value order: `value` is the last
+    // sort key on both paths, so batch and streaming keep the same rows
+    val ties = entriesDf((0L, "A", 3), (0L, "A", 2), (0L, "A", 1), (1L, "A", 5), (1L, "A", 4))
+    def keptRows(d: org.apache.spark.sql.DataFrame) =
+      d.select(unix_micros($"time"), $"value".cast("double")).as[(Long, Double)].collect().toSeq.sorted
+    val streamTies = keptRows(graft.streaming.StreamingAdapter.greedySample(ties, 500L))
+    assert(streamTies == Seq((0L, 1.0), (1L, 4.0)))
+    assert(keptRows(Sample.greedyPerTopic(ties, 500L)) == streamTies)
+    assert(keptRows(Sample.greedyGlobal(ties, 500L)) == streamTies)
   }
 
   test("greedy global is one carry across all topics") {
