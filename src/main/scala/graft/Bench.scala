@@ -51,23 +51,18 @@ object Bench {
     // across rounds = the window's storage weather, independent of any
     // battery row.
     def ioCalibrate(): Double = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_iocalib").toString
+      val dir = java.nio.file.Files.createTempDirectory("graft_iocalib")
       try {
         val t0 = System.nanoTime()
         spark.range(1L << 21)
           .selectExpr("id", "xxhash64(id) AS h", "md5(CAST(id AS STRING)) AS s")
           .repartition(8)
-          .write.mode("overwrite").parquet(dir)
-        spark.read.parquet(dir)
+          .write.mode("overwrite").parquet(dir.toString)
+        spark.read.parquet(dir.toString)
           .groupBy(org.apache.spark.sql.functions.expr("h % 64"))
           .count().count()
         (System.nanoTime() - t0) / 1e9
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(dir))
-      }
+      } finally Queries.deleteTree(dir)
     }
 
     // harness_s must describe the BATTERY's fixture I/O — the ledgers are

@@ -116,24 +116,9 @@ final class FossilNativeScan(
 
   private lazy val partitions: Array[InputPartition] = {
     val db = table.db
-    def rows(seg: FossilDatabase.Segment): Iterator[(Long, Int, Array[Byte])] =
+    val driverRows = db.driverSegments.iterator.flatMap { seg =>
       seg.data.iterator.map(d => (seg.headTimeNs + d.deltaNs, d.topicId, d.data))
-    val driverRows = {
-      val inline = db.inlineSegments.iterator.flatMap(rows)
-      val walSeg = db.walSegments.iterator.flatMap(rows)
-      val tail =
-        if (db.walTail.isEmpty) Iterator.empty
-        else {
-          // the WAL tail continues the snapshot's current (last) segment —
-          // one driver-side segment decode, exactly like rawEntries
-          val headNs =
-            if (db.inlineSegments.nonEmpty) db.inlineSegments.last.headTimeNs
-            else FossilDatabase.decodeSegment(
-              StoreFs.readBytes(db.snapshotFiles.last)).headTimeNs
-          rows(FossilDatabase.Segment(headNs, db.walTail))
-        }
-      (inline ++ walSeg ++ tail).toArray
-    }
+    }.toArray
     val segParts: Array[InputPartition] =
       db.snapshotFiles.map(f => NativeSegmentPartition(f): InputPartition).toArray
     if (driverRows.isEmpty) segParts

@@ -60,6 +60,22 @@ object FossilDatabase {
     def topicOf(topicId: Int): String =
       if (topicId >= 0 && topicId < topics.length) topics(topicId)
       else s"/__unknown_topic_$topicId"
+
+    /** The segments whose datums the driver holds, in read order: v1's
+      * inline segments, the WAL-born segments, then the WAL tail. The
+      * tail's deltas continue the snapshot's current (last) segment, so
+      * for v2 that one file's HeadTime is decoded here, driver-side. */
+    def driverSegments: Vector[Segment] = {
+      val tail =
+        if (walTail.isEmpty) Vector.empty
+        else {
+          val headNs =
+            if (inlineSegments.nonEmpty) inlineSegments.last.headTimeNs
+            else decodeSegment(StoreFs.readBytes(snapshotFiles.last)).headTimeNs
+          Vector(Segment(headNs, walTail))
+        }
+      inlineSegments ++ walSegments ++ tail
+    }
   }
 
   /** `pkg/database/db.go:71-85`: "" → "/", prefix "/", strip trailing "/". */
@@ -295,24 +311,10 @@ object FossilDatabase {
   def rawEntries(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val db = open(dir)
-    def rows(seg: Segment): Iterator[(Long, String, String, Array[Byte])] =
-      seg.data.iterator.map { d =>
+    val driverRows = db.driverSegments.flatMap { seg =>
+      seg.data.map { d =>
         (seg.headTimeNs + d.deltaNs, db.topicOf(d.topicId), db.ddlOf(d.topicId), d.data)
       }
-
-    val driverRows = {
-      val inline = db.inlineSegments.iterator.flatMap(rows)
-      val walSeg = db.walSegments.iterator.flatMap(rows)
-      val tail =
-        if (db.walTail.isEmpty) Iterator.empty
-        else {
-          // the WAL tail continues the snapshot's current (last) segment
-          val headNs =
-            if (db.inlineSegments.nonEmpty) db.inlineSegments.last.headTimeNs
-            else decodeSegment(StoreFs.readBytes(db.snapshotFiles.last)).headTimeNs
-          rows(Segment(headNs, db.walTail))
-        }
-      (inline ++ walSeg ++ tail).toSeq
     }
 
     val snapshotDf =

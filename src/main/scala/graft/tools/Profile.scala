@@ -171,17 +171,12 @@ object Profile {
     // batch-shaped stored-reference fixtures, with the stream rows' params
     lazy val docs = graft.Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
     lazy val batch = docs.filter(col("doc_id") % 40 === 0)
-    def fixture(prefix: String)(build: String => Unit): String = {
-      val r = Files.createTempDirectory(prefix).toString
-      build(r)
-      r
-    }
     val windows = SubstringWindowStore.Params(k = 10)
-    lazy val winRoot = fixture("graft_plan_win")(
+    lazy val winRoot = Queries.fixtureDir("plan_win", sfDir)(
       SubstringWindowStore.build(docs, "doc_id", "text", _, "base", windows))
-    lazy val sigRoot = fixture("graft_plan_sig")(
+    lazy val sigRoot = Queries.fixtureDir("plan_sig", sfDir)(
       SignatureStore.build(docs, "doc_id", "text", _, "ref"))
-    lazy val lmRoot = fixture("graft_plan_lm")(
+    lazy val lmRoot = Queries.fixtureDir("plan_lm", sfDir)(
       LmStore.build(docs, "doc_id", "text", _, "train"))
     rows.foreach {
       case n @ "stream_drop_spans_inner" =>
