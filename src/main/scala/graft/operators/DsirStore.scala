@@ -1,10 +1,5 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
-
-import graft.engine.StoreFs
-
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,10 +17,11 @@ import org.apache.spark.sql.functions._
   *
   * Layout under `root/corpusId/`:
   *   - `weights.parquet`  (j, lr_e6) — exactly dim rows
-  *   - `_params`          `Tag dim=N`, written LAST as the commit marker
-  *                        (a crashed build leaves no marker and rebuilds;
-  *                        a tag bump invalidates old stores instead of
-  *                        silently mixing bucket schemes)
+  *   - `_params`          `Tag dim=N nonce=X`, committed through
+  *                        [[CommittedStore]]: a tag bump invalidates old
+  *                        stores instead of silently mixing bucket
+  *                        schemes, and the per-build nonce keys the
+  *                        broadcast cache below
   *
   * 100 TB story: build = the inline fit's one dim-keyed aggregate,
   * written once; score reads only the dim-row artifact (one driver
@@ -37,17 +33,6 @@ object DsirStore {
   /** Bumped when the bucket scheme (unigram+bigram, md5 16-bit) or the
     * smoothing changes. */
   val Tag = "dsir-uni+bi-md5x16.v1"
-
-  private def dir(root: String, corpusId: String): String = s"$root/$corpusId"
-  private def marker(root: String, corpusId: String): String =
-    s"${dir(root, corpusId)}/_params"
-
-  private def markerText(root: String, corpusId: String): Option[String] = {
-    val m = marker(root, corpusId)
-    if (StoreFs.exists(m))
-      Some(new String(StoreFs.readBytes(m), StandardCharsets.UTF_8))
-    else None
-  }
 
   /** Parse a commit marker into its declared dim. Accepts both the
     * nonce-stamped form `Tag dim=N nonce=X` and the pre-nonce `Tag dim=N`
@@ -61,7 +46,7 @@ object DsirStore {
 
   /** True iff a complete store exists under the current [[Tag]] and dim. */
   def isBuilt(root: String, corpusId: String, dim: Int): Boolean =
-    markerText(root, corpusId).exists(m => markerDim(m).contains(dim))
+    CommittedStore(root, corpusId).markerText.exists(m => markerDim(m).contains(dim))
 
   /** Fit and persist the weight table; idempotent per
     * (corpusId, [[Tag]], dim) — a matching store is left untouched,
@@ -69,19 +54,15 @@ object DsirStore {
   def build(docs: DataFrame, idCol: String, textCol: String,
       isTarget: Column, dim: Int, root: String, corpusId: String): Unit = {
     if (isBuilt(root, corpusId, dim)) return
-    val d = dir(root, corpusId)
-    StoreFs.deleteRecursive(d)
-    StoreFs.mkdirs(d)
-    Curation.dsirLogRatios(docs, idCol, textCol, isTarget, dim)
-      .write.mode("overwrite").parquet(s"$d/weights.parquet")
+    val s = CommittedStore(root, corpusId)
     // the nonce makes every build's marker TEXT unique, so the broadcast
     // cache below can never serve a previous build's weights — mtime alone
     // is not a freshness signal (same-millisecond rebuilds, coarse-mtime
     // filesystems; r16 ADVICE)
-    StoreFs.writeAtomic(marker(root, corpusId),
-      s"$Tag dim=$dim nonce=${java.util.UUID.randomUUID()}"
-        .getBytes(StandardCharsets.UTF_8))
-    ()
+    s.rebuild(s"$Tag dim=$dim nonce=${java.util.UUID.randomUUID()}") {
+      Curation.dsirLogRatios(docs, idCol, textCol, isTarget, dim)
+        .write.mode("overwrite").parquet(s.path("weights"))
+    }
   }
 
   /** Per-JVM broadcast cache: re-reading + re-broadcasting the weight
@@ -103,15 +84,15 @@ object DsirStore {
     * buckets and masquerade as a verdict). */
   def score(spark: SparkSession, root: String, corpusId: String,
       docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val m = markerText(root, corpusId).getOrElse(
+    val s = CommittedStore(root, corpusId)
+    val m = s.markerText.getOrElse(
       throw new IllegalStateException(
         s"no committed DSIR store under $root/$corpusId"))
     val dim = markerDim(m).getOrElse(throw new IllegalStateException(
       s"DSIR store $root/$corpusId was built under '$m', need '$Tag' — rebuild"))
-    val mtime = StoreFs.stamp(marker(root, corpusId)).map(_._1).getOrElse(0L)
+    val mtime = s.markerMtime.getOrElse(0L)
     val bc = bcCache.computeIfAbsent((root, corpusId, m, mtime), _ => {
-      val rows = spark.read
-        .parquet(s"${dir(root, corpusId)}/weights.parquet")
+      val rows = s.read(spark, "weights")
         .select(col("j").cast("int"), col("lr_e6").cast("long"))
         .collect()
       require(rows.length == dim,

@@ -1,10 +1,7 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-import graft.engine.StoreFs
 import org.apache.spark.sql.functions._
 
 /** Persisted IVF index for approximate-nearest-neighbor search — the ANN
@@ -22,11 +19,11 @@ import org.apache.spark.sql.functions._
   * same centroids (assignment is deterministic: cosine desc, cid asc).
   *
   * The reference engine has no vector surface (SURVEY §2.5 extension row);
-  * the layout follows [[SignatureStore]]'s conventions — immutable parquet
-  * plus a tiny `_params` commit marker written LAST (a crashed build leaves
-  * no marker and rebuilds; a tag change invalidates: an index probed with a
-  * different centroid recipe than it was built with would silently return
-  * wrong neighbors).
+  * the store follows the operator stores' one commit protocol
+  * ([[CommittedStore]]): immutable parquet plus a `_params` marker written
+  * last. A tag change invalidates: an index probed with a different
+  * centroid recipe than it was built with would silently return wrong
+  * neighbors.
   *
   * Layout under `root/corpusId/`:
   *   - `centroids.parquet` (cid, cv array&lt;double&gt;, cn)
@@ -50,16 +47,9 @@ import org.apache.spark.sql.functions._
   */
 object IvfStore {
 
-  private def dir(root: String, corpusId: String): String = s"$root/$corpusId"
-  private def marker(root: String, corpusId: String): String =
-    s"${dir(root, corpusId)}/_params"
-
   /** True iff a complete store exists for exactly this centroid-recipe tag. */
-  def isBuilt(root: String, corpusId: String, tag: String): Boolean = {
-    val m = marker(root, corpusId)
-    StoreFs.exists(m) &&
-      new String(StoreFs.readBytes(m), StandardCharsets.UTF_8) == tag
-  }
+  def isBuilt(root: String, corpusId: String, tag: String): Boolean =
+    CommittedStore(root, corpusId).isBuilt(tag)
 
   /** Assign `corpus` to its nearest centroid and persist the index;
     * idempotent per (corpusId, tag) — an existing store with a matching
@@ -77,49 +67,46 @@ object IvfStore {
   def build(corpus: DataFrame, centroids: DataFrame, idCol: String,
       vecCol: String, centroidIdCol: String, root: String, corpusId: String,
       tag: String, pqSub: Int = 8, pqCodes: Int = 256): Unit = {
-    if (isBuilt(root, corpusId, tag)) return
-    val d = dir(root, corpusId)
-    StoreFs.deleteRecursive(d)
-    StoreFs.mkdirs(d)
     val spark = corpus.sparkSession
-    val cent = Similarity.centFrame(centroids, centroidIdCol, vecCol)
-    cent.write.mode("overwrite").parquet(s"$d/centroids.parquet")
-    // PQ codebook from this corpus (the deterministic subset recipe),
-    // persisted FIRST so probes/appends encode against the exact table
-    if (pqSub > 0) {
-      try Similarity.pqCodebookFrame(
-        corpus.select(col(idCol).as("id"),
-          col(vecCol).cast("array<double>").as("v")), pqSub, pqCodes)
-        .write.mode("overwrite").parquet(s"$d/codebook.parquet")
-      catch { case e: IllegalArgumentException =>
-        throw new IllegalArgumentException(
-          s"IvfStore.build: PQ codebook training failed for corpusId=$corpusId " +
-            s"(pass pqSub = 0 to build a float/int8-only store): ${e.getMessage}", e)
+    val s = CommittedStore(root, corpusId)
+    s.build(tag) {
+      Similarity.centFrame(centroids, centroidIdCol, vecCol)
+        .write.mode("overwrite").parquet(s.path("centroids"))
+      // PQ codebook from this corpus (the deterministic subset recipe),
+      // persisted FIRST so probes/appends encode against the exact table
+      if (pqSub > 0) {
+        try Similarity.pqCodebookFrame(
+          corpus.select(col(idCol).as("id"),
+            col(vecCol).cast("array<double>").as("v")), pqSub, pqCodes)
+          .write.mode("overwrite").parquet(s.path("codebook"))
+        catch { case e: IllegalArgumentException =>
+          throw new IllegalArgumentException(
+            s"IvfStore.build: PQ codebook training failed for corpusId=$corpusId " +
+              s"(pass pqSub = 0 to build a float/int8-only store): ${e.getMessage}", e)
+        }
       }
+      // bucket from the JUST-PERSISTED artifacts so all three are
+      // guaranteed consistent; partitionBy(bucket) → probe-side pruning
+      writeBuckets(s, corpus, idCol, vecCol, readCodebookOpt(spark, s),
+        overwrite = true)
     }
-    // bucket from the JUST-PERSISTED artifacts so all three are
-    // guaranteed consistent; partitionBy(bucket) → probe-side pruning
-    val persistedCent = spark.read
-      .parquet(s"$d/centroids.parquet")
-    val cb = readCodebookOpt(spark, root, corpusId)
-    writeBuckets(
-      Similarity.assignBuckets(corpus, persistedCent, vecCol, idCol, "bucket", n = 1)
-        .select(col(idCol).cast("long").as("id"), col("__v").as("v"),
-          col("__n").as("n"), col("bucket").cast("long").as("bucket")),
-      cb, d, overwrite = true)
-    StoreFs.writeAtomic(marker(root, corpusId), tag.getBytes(StandardCharsets.UTF_8))
-    ()
   }
 
-  /** Encode (int8 + PQ codes) and land an assigned `(id, v, n, bucket)`
-    * frame into the bucket tree — ONE code path for build and append so
-    * encodings cannot drift. The PQ geometry is recovered from the
-    * codebook itself (w = |cw|, numSub = dim/w, numCodes = |cb|/numSub);
-    * a PQ-less store (built with pqSub = 0) lands empty code arrays. */
-  private def writeBuckets(assigned: DataFrame, cb: Option[Array[Array[Double]]],
-      d: String, overwrite: Boolean): Unit = {
-    val spark = assigned.sparkSession
+  /** Assign `vecs` against the store's PERSISTED centroids, encode
+    * (int8 + PQ codes, against the persisted codebook) and land the rows
+    * into the bucket tree — ONE code path for build and append so
+    * assignments and encodings cannot drift. The PQ geometry is recovered
+    * from the codebook itself (w = |cw|, numSub = dim/w, numCodes =
+    * |cb|/numSub); a PQ-less store (built with pqSub = 0) lands empty code
+    * arrays. */
+  private def writeBuckets(s: CommittedStore, vecs: DataFrame, idCol: String,
+      vecCol: String, cb: Option[Array[Array[Double]]], overwrite: Boolean): Unit = {
+    val spark = vecs.sparkSession
     import spark.implicits._
+    val assigned = Similarity
+      .assignBuckets(vecs, s.read(spark, "centroids"), vecCol, idCol, "bucket", n = 1)
+      .select(col(idCol).cast("long").as("id"), col("__v").as("v"),
+        col("__n").as("n"), col("bucket").cast("long").as("bucket"))
     val bcCb = spark.sparkContext.broadcast(cb.orNull)
     assigned
       .as[(Long, Seq[Double], Double, Long)]
@@ -143,29 +130,26 @@ object IvfStore {
       .withColumn("qv", Similarity.quantize(col("v"), col("scale")))
       .write.mode(if (overwrite) SaveMode.Overwrite else SaveMode.Append)
       .partitionBy("bucket")
-      .parquet(s"$d/buckets.parquet")
+      .parquet(s.path("buckets"))
   }
 
   /** The persisted PQ codebook, flattened `[mi·numCodes + j] → subvector`,
     * or None for a store built with pqSub = 0 (no marker gate: also read
     * mid-build/mid-append by the store's own write paths — external
     * probes go through [[codebook]]). */
-  private def readCodebookOpt(spark: SparkSession, root: String,
-      corpusId: String): Option[Array[Array[Double]]] = {
-    val p = s"${dir(root, corpusId)}/codebook.parquet"
-    if (!StoreFs.exists(p)) None
-    else Some(spark.read.parquet(p)
+  private def readCodebookOpt(spark: SparkSession,
+      s: CommittedStore): Option[Array[Array[Double]]] =
+    if (!s.exists("codebook")) None
+    else Some(s.read(spark, "codebook")
       .orderBy("ix").select("cw")
       .collect().map(_.getSeq[Double](0).toArray))
-  }
 
   /** Persisted PQ codebook for probes — marker-gated like the others.
     * Typed error for PQ-less stores, so a PQ probe cannot silently run
     * against absent codes. */
   def codebook(spark: SparkSession, root: String, corpusId: String,
       tag: String): Array[Array[Double]] = {
-    requireBuilt(root, corpusId, tag)
-    readCodebookOpt(spark, root, corpusId).getOrElse(
+    readCodebookOpt(spark, committed(root, corpusId, tag)).getOrElse(
       throw new IllegalStateException(
         s"IVF store corpusId=$corpusId was built without a PQ codebook " +
           "(pqSub = 0) — rebuild with pqSub > 0 for PQ probes"))
@@ -184,8 +168,9 @@ object IvfStore {
     * Crash safety mirrors the build: the `_params` marker is REMOVED
     * before any data lands and re-written only after the append commits,
     * so a crash mid-append leaves an unreadable store (next [[build]]
-    * wipes and rebuilds) rather than a silently partial index. */
-  /** @param assertDisjoint verify the batch's ids are absent from the
+    * wipes and rebuilds) rather than a silently partial index.
+    *
+    * @param assertDisjoint verify the batch's ids are absent from the
     *        store before landing anything (one id-column anti-join over
     *        the bucket scan — columnar, but still corpus-proportional):
     *        a duplicate id would land a SECOND row and silently corrupt
@@ -197,12 +182,10 @@ object IvfStore {
   def append(batch: DataFrame, idCol: String, vecCol: String,
       root: String, corpusId: String, tag: String,
       assertDisjoint: Boolean = true): Unit = {
-    requireBuilt(root, corpusId, tag)
-    val d = dir(root, corpusId)
+    val s = committed(root, corpusId, tag)
     val spark = batch.sparkSession
     if (assertDisjoint) {
-      val existing = spark.read
-        .parquet(s"$d/buckets.parquet").select("id")
+      val existing = s.read(spark, "buckets").select("id")
       val clash = existing
         .join(batch.select(col(idCol).cast("long").as("id")), Seq("id"), "left_semi")
         .limit(5).collect().map(_.getLong(0))
@@ -212,21 +195,11 @@ object IvfStore {
           "delete/rebuild for true upserts, or pass assertDisjoint = false " +
           "only when ids are guaranteed fresh")
     }
-    val persistedCent = spark.read
-      .parquet(s"$d/centroids.parquet")
     // encode against the PERSISTED codebook: the appended rows' codes must
     // be comparable to every existing row's, so the codebook is as frozen
     // as the centroids are
-    val cb = readCodebookOpt(spark, root, corpusId)
-    val m = marker(root, corpusId)
-    StoreFs.delete(m)
-    writeBuckets(
-      Similarity.assignBuckets(batch, persistedCent, vecCol, idCol, "bucket", n = 1)
-        .select(col(idCol).cast("long").as("id"), col("__v").as("v"),
-          col("__n").as("n"), col("bucket").cast("long").as("bucket")),
-      cb, d, overwrite = false)
-    StoreFs.writeAtomic(m, tag.getBytes(StandardCharsets.UTF_8))
-    ()
+    val cb = readCodebookOpt(spark, s)
+    s.mutate(tag) { writeBuckets(s, batch, idCol, vecCol, cb, overwrite = false) }
   }
 
   /** Probe-cost skew of the bucket tree: max bucket size over mean bucket
@@ -239,7 +212,6 @@ object IvfStore {
     * pruning keeps it to the `bucket` partition column). */
   def bucketSkew(spark: SparkSession, root: String, corpusId: String,
       tag: String): Double = {
-    requireBuilt(root, corpusId, tag)
     val sizes = buckets(spark, root, corpusId, tag)
       .groupBy("bucket").agg(count(lit(1)).as("n"))
       .agg(max("n").as("mx"), avg("n").as("mean"))
@@ -277,34 +249,32 @@ object IvfStore {
       tag: String, maxSkew: Double, iters: Int = 5): Option[String] = {
     require(maxSkew >= 1.0, s"maxSkew must be >= 1.0, got $maxSkew")
     if (bucketSkew(spark, root, corpusId, tag) <= maxSkew) return None
-    val d = dir(root, corpusId)
-    val snap = s"$root/${corpusId}__rebal_src.parquet"
-    StoreFs.deleteRecursive(snap) // a crashed rebalance's leftover
-    buckets(spark, root, corpusId, tag).select("id", "v")
-      .write.parquet(snap)
-    val corpus = spark.read.parquet(snap)
-    val n = corpus.count()
-    val k = math.ceil(math.sqrt(n.toDouble)).toInt
-    val cent = Similarity.kmeansCentroids(corpus, "id", "v", k, iters,
-        init = Some(rebalanceInit(corpus, k)))
-      .select(col("cid"), col("centroid").as("v"))
-    val (pqSub, pqCodes) = readCodebookOpt(spark, root, corpusId) match {
-      case None => (0, 256)
-      case Some(cb) =>
-        val dim = corpus.select(size(col("v"))).head().getInt(0)
-        val sub = dim / cb.head.length
-        (sub, cb.length / math.max(1, sub))
+    val s = CommittedStore(root, corpusId)
+    s.aside("rebal_src") { snap =>
+      buckets(spark, root, corpusId, tag).select("id", "v")
+        .write.parquet(snap)
+      val corpus = spark.read.parquet(snap)
+      val n = corpus.count()
+      val k = math.ceil(math.sqrt(n.toDouble)).toInt
+      val cent = Similarity.kmeansCentroids(corpus, "id", "v", k, iters,
+          init = Some(rebalanceInit(corpus, k)))
+        .select(col("cid"), col("centroid").as("v"))
+      val (pqSub, pqCodes) = readCodebookOpt(spark, s) match {
+        case None => (0, 256)
+        case Some(cb) =>
+          val dim = corpus.select(size(col("v"))).head().getInt(0)
+          val sub = dim / cb.head.length
+          (sub, cb.length / math.max(1, sub))
+      }
+      // strip only a previous rebalance suffix — user tags may carry their
+      // own ';'-separated recipe fields (e.g. "kmeans.v1;k=64;it=5")
+      val newTag = s"${tag.replaceAll(";rebal=k\\d+\\.i\\d+$", "")};rebal=k$k.i$iters"
+      // invalidate first: from here the old index is gone either way
+      s.invalidate()
+      build(corpus, cent, "id", "v", "cid", root, corpusId, newTag,
+        pqSub = pqSub, pqCodes = pqCodes)
+      Some(newTag)
     }
-    // strip only a previous rebalance suffix — user tags may carry their
-    // own ';'-separated recipe fields (e.g. "kmeans.v1;k=64;it=5")
-    val newTag = s"${tag.replaceAll(";rebal=k\\d+\\.i\\d+$", "")};rebal=k$k.i$iters"
-    // invalidate first: from here the old index is gone either way
-    StoreFs.delete(marker(root, corpusId))
-    StoreFs.deleteRecursive(d)
-    build(corpus, cent, "id", "v", "cid", root, corpusId, newTag,
-      pqSub = pqSub, pqCodes = pqCodes)
-    StoreFs.deleteRecursive(snap)
-    Some(newTag)
   }
 
   /** Deterministic hash-spread k-means init for [[rebalance]]: the k rows
@@ -323,21 +293,17 @@ object IvfStore {
 
   /** Persisted centroids `(cid, cv, cn)` — a bare parquet scan. */
   def centroids(spark: SparkSession, root: String, corpusId: String,
-      tag: String): DataFrame = {
-    requireBuilt(root, corpusId, tag)
-    spark.read.parquet(s"${dir(root, corpusId)}/centroids.parquet")
-  }
+      tag: String): DataFrame =
+    committed(root, corpusId, tag).read(spark, "centroids")
 
   /** Persisted bucketed corpus `(id, v, n, bucket, scale, qv)` — a bare
     * parquet scan; filters on `bucket` prune partitions. */
   def buckets(spark: SparkSession, root: String, corpusId: String,
-      tag: String): DataFrame = {
-    requireBuilt(root, corpusId, tag)
-    spark.read.parquet(s"${dir(root, corpusId)}/buckets.parquet")
-  }
+      tag: String): DataFrame =
+    committed(root, corpusId, tag).read(spark, "buckets")
 
-  private def requireBuilt(root: String, corpusId: String, tag: String): Unit =
-    require(isBuilt(root, corpusId, tag),
+  private def committed(root: String, corpusId: String, tag: String): CommittedStore =
+    CommittedStore(root, corpusId).requireBuilt(tag,
       s"IVF store $root/$corpusId is missing, incomplete, or was built with " +
         s"a different centroid recipe than '$tag' — run IvfStore.build")
 

@@ -1,10 +1,5 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
-
-import graft.engine.StoreFs
-
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,10 +20,9 @@ import org.apache.spark.sql.functions._
   * Layout under `root/corpusId/`:
   *   - `counts.parquet`  (t, c) — the vocab-sized (Zipf-bounded) table
   *   - `totals.parquet`  one row (n_total, vocab)
-  *   - `_params`         tag, written LAST as the commit marker (a crashed
-  *                       build leaves no marker and rebuilds; a version
-  *                       bump invalidates old stores instead of silently
-  *                       mixing smoothing schemes)
+  *   - `_params`         [[Tag]], committed through [[CommittedStore]]: a
+  *                       version bump invalidates old stores instead of
+  *                       silently mixing smoothing schemes
   *
   * 100 TB story: build is the same two hash aggs the inline operator
   * runs, written once; score reads only the vocab-sized artifacts (AQE
@@ -40,36 +34,26 @@ object LmStore {
   /** Bumped when tokenization or smoothing changes. */
   val Tag = "unigram-addone.v1"
 
-  private def dir(root: String, corpusId: String): String = s"$root/$corpusId"
-  private def marker(root: String, corpusId: String): String =
-    s"${dir(root, corpusId)}/_params"
-
   /** True iff a complete store exists under the current [[Tag]]. */
-  def isBuilt(root: String, corpusId: String): Boolean = {
-    val m = marker(root, corpusId)
-    StoreFs.exists(m) &&
-      new String(StoreFs.readBytes(m), StandardCharsets.UTF_8) == Tag
-  }
+  def isBuilt(root: String, corpusId: String): Boolean =
+    CommittedStore(root, corpusId).isBuilt(Tag)
 
   /** Train and persist the corpus LM; idempotent per (corpusId, [[Tag]]) —
     * a matching store is left untouched, anything else wiped and rebuilt. */
   def build(docs: DataFrame, idCol: String, textCol: String,
       root: String, corpusId: String): Unit = {
-    if (isBuilt(root, corpusId)) return
-    val d = dir(root, corpusId)
-    StoreFs.deleteRecursive(d)
-    StoreFs.mkdirs(d)
-    val counts = docs
-      .select(explode(TextOps.tokens(col(textCol))).as("t"))
-      .groupBy("t").agg(count(lit(1)).as("c"))
-    counts.write.mode("overwrite").parquet(s"$d/counts.parquet")
-    // totals derive from the JUST-PERSISTED counts, so the two artifacts
-    // are consistent even if the corpus changes under a concurrent build
-    docs.sparkSession.read.parquet(s"$d/counts.parquet")
-      .agg(sum(col("c")).as("n_total"), count(lit(1)).as("vocab"))
-      .write.mode("overwrite").parquet(s"$d/totals.parquet")
-    StoreFs.writeAtomic(marker(root, corpusId), Tag.getBytes(StandardCharsets.UTF_8))
-    ()
+    val s = CommittedStore(root, corpusId)
+    s.build(Tag) {
+      docs
+        .select(explode(TextOps.tokens(col(textCol))).as("t"))
+        .groupBy("t").agg(count(lit(1)).as("c"))
+        .write.mode("overwrite").parquet(s.path("counts"))
+      // totals derive from the JUST-PERSISTED counts, so the two artifacts
+      // are consistent even if the corpus changes under a concurrent build
+      s.read(docs.sparkSession, "counts")
+        .agg(sum(col("c")).as("n_total"), count(lit(1)).as("vocab"))
+        .write.mode("overwrite").parquet(s.path("totals"))
+    }
   }
 
   /** A loaded LM: the two reference frames plus the degenerate-model gate
@@ -88,14 +72,13 @@ object LmStore {
     * silently null and non-empty docs would score as (0, 0) — a
     * degenerate model must not masquerade as a typicality verdict). */
   def load(spark: SparkSession, root: String, corpusId: String): Model = {
-    require(isBuilt(root, corpusId),
+    val s = CommittedStore(root, corpusId).requireBuilt(Tag,
       s"LmStore at $root/$corpusId is missing or built under another tag")
-    val d = dir(root, corpusId)
-    val totals = spark.read.parquet(s"$d/totals.parquet")
+    val totals = s.read(spark, "totals")
     val vocab = totals.head().getAs[Long]("vocab") // 1-row artifact
     require(vocab > 0,
       s"LmStore at $root/$corpusId was trained on an empty corpus (vocab 0)")
-    Model(spark.read.parquet(s"$d/counts.parquet"), totals)
+    Model(s.read(spark, "counts"), totals)
   }
 
   /** Score `docs` under the stored LM — [[TextAnalysis.unigramNll]]'s

@@ -1,9 +1,5 @@
 package graft.operators
 
-import java.nio.charset.StandardCharsets
-
-import graft.engine.StoreFs
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Persisted minhash signatures for incremental cross-corpus dedup.
@@ -18,8 +14,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and feeds them to [[Dedup.minhashPairsAgainstStored]].
   *
   * The reference engine has no dedup surface (SURVEY §2.5 extension row);
-  * the store layout follows the repo's own ParquetStore conventions —
-  * immutable parquet + a tiny sidecar marker, no new machinery.
+  * the store follows the operator stores' one commit protocol
+  * ([[CommittedStore]]): immutable parquet + a `_params` marker written
+  * last.
   *
   * Layout under `root/corpusId/`:
   *   - `shingles.parquet`  (id, sh array&lt;string&gt;) — the audit / exact
@@ -33,13 +30,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                         exactly the per-batch cost this store exists
   *                         to retire)
   *   - `bands.parquet`     (id, band_ix, band_h)
-  *   - `_params`           the [[Params.tag]], written LAST as the commit
-  *                         marker: a crashed build leaves no marker and
-  *                         rebuilds on the next call; a parameter change
-  *                         flips the tag and invalidates the store
-  *                         (signatures built under different shingle/hash/
-  *                         band parameters are incomparable — comparing
-  *                         them would silently return garbage pairs).
+  *   - `_params`           the [[Params.tag]]: signatures built under
+  *                         different shingle/hash/band parameters are
+  *                         incomparable — comparing them would silently
+  *                         return garbage pairs.
   *
   * 100 TB story: the build is one pass over the corpus (the same
   * tokenize → shingle → universal-family direct-hash → band plan the
@@ -63,16 +57,9 @@ object SignatureStore {
     def tag: String = s"minhash.v3;w=$shingleWords;h=$numHashes;b=$numBands"
   }
 
-  private def dir(root: String, corpusId: String): String = s"$root/$corpusId"
-  private def marker(root: String, corpusId: String): String =
-    s"${dir(root, corpusId)}/_params"
-
   /** True iff a complete store exists for exactly these params. */
-  def isBuilt(root: String, corpusId: String, params: Params): Boolean = {
-    val m = marker(root, corpusId)
-    StoreFs.exists(m) &&
-      new String(StoreFs.readBytes(m), StandardCharsets.UTF_8) == params.tag
-  }
+  def isBuilt(root: String, corpusId: String, params: Params): Boolean =
+    CommittedStore(root, corpusId).isBuilt(params.tag)
 
   /** Compute and persist `docs`' signatures; idempotent per
     * (corpusId, params) — an existing store with a matching tag is left
@@ -80,45 +67,36 @@ object SignatureStore {
     * and rebuilt. */
   def build(docs: DataFrame, idCol: String, textCol: String,
       root: String, corpusId: String, params: Params = Params()): Unit = {
-    if (isBuilt(root, corpusId, params)) return
     val spark = docs.sparkSession
-    val d = dir(root, corpusId)
-    StoreFs.deleteRecursive(d)
-    StoreFs.mkdirs(d)
-    Dedup.shingleFrame(docs, idCol, textCol, params.shingleWords)
-      .write.mode("overwrite").parquet(s"$d/shingles.parquet")
-    // bands and verify arrays derive from the JUST-PERSISTED shingles:
-    // the tokenize/shingle pass runs once, and all artifacts are
-    // guaranteed byte-consistent
-    Dedup.bandFrame(
-        spark.read.parquet(s"$d/shingles.parquet"),
-        params.numHashes, params.numBands)
-      .write.mode("overwrite").parquet(s"$d/bands.parquet")
-    spark.read.parquet(s"$d/shingles.parquet")
-      .select(org.apache.spark.sql.functions.col("id"),
-        graft.functions.HashedSortedShingles(
-          org.apache.spark.sql.functions.col("sh")).as("shh"))
-      .write.mode("overwrite").parquet(s"$d/hashed.parquet")
-    StoreFs.writeAtomic(marker(root, corpusId), params.tag.getBytes(StandardCharsets.UTF_8))
-    ()
+    val s = CommittedStore(root, corpusId)
+    s.build(params.tag) {
+      Dedup.shingleFrame(docs, idCol, textCol, params.shingleWords)
+        .write.mode("overwrite").parquet(s.path("shingles"))
+      // bands and verify arrays derive from the JUST-PERSISTED shingles:
+      // the tokenize/shingle pass runs once, and all artifacts are
+      // guaranteed byte-consistent
+      Dedup.bandFrame(s.read(spark, "shingles"), params.numHashes, params.numBands)
+        .write.mode("overwrite").parquet(s.path("bands"))
+      s.read(spark, "shingles")
+        .select(org.apache.spark.sql.functions.col("id"),
+          graft.functions.HashedSortedShingles(
+            org.apache.spark.sql.functions.col("sh")).as("shh"))
+        .write.mode("overwrite").parquet(s.path("hashed"))
+    }
   }
 
   /** Banded signatures `(id, band_ix, band_h)` of a persisted corpus — a
     * bare parquet scan, NO tokenize/shingle/minhash stages in the plan
     * (gated in tools/Plans.scala). */
   def bands(spark: SparkSession, root: String, corpusId: String,
-      params: Params = Params()): DataFrame = {
-    requireBuilt(root, corpusId, params)
-    spark.read.parquet(s"${dir(root, corpusId)}/bands.parquet")
-  }
+      params: Params = Params()): DataFrame =
+    committed(root, corpusId, params).read(spark, "bands")
 
   /** Shingle sets `(id, sh)` of a persisted corpus — the audit / exact
     * string identity (the verify join-back reads [[shingleHashes]]). */
   def shingles(spark: SparkSession, root: String, corpusId: String,
-      params: Params = Params()): DataFrame = {
-    requireBuilt(root, corpusId, params)
-    spark.read.parquet(s"${dir(root, corpusId)}/shingles.parquet")
-  }
+      params: Params = Params()): DataFrame =
+    committed(root, corpusId, params).read(spark, "shingles")
 
   /** Sorted-xxhash64 verify arrays `(id, shh)` of a persisted corpus —
     * the exact-verify side [[Dedup.minhashPairsAgainstStored]] joins
@@ -126,18 +104,17 @@ object SignatureStore {
     * frozen corpus. */
   def shingleHashes(spark: SparkSession, root: String, corpusId: String,
       params: Params = Params()): DataFrame = {
-    requireBuilt(root, corpusId, params)
     // Parquet reads arrays back element-NULLABLE; re-assert the
     // hashed_shingles contract (validating scan + containsNull=false) so
     // the verify kernel's strict type check accepts the stored path
-    spark.read.parquet(s"${dir(root, corpusId)}/hashed.parquet")
+    committed(root, corpusId, params).read(spark, "hashed")
       .select(org.apache.spark.sql.functions.col("id"),
         graft.functions.AssertHashArrayNotNull(
           org.apache.spark.sql.functions.col("shh")).as("shh"))
   }
 
-  private def requireBuilt(root: String, corpusId: String, params: Params): Unit =
-    require(isBuilt(root, corpusId, params),
+  private def committed(root: String, corpusId: String, params: Params): CommittedStore =
+    CommittedStore(root, corpusId).requireBuilt(params.tag,
       s"signature store $root/$corpusId is missing, incomplete, or was built " +
         s"with different parameters than ${params.tag} — run SignatureStore.build")
 
@@ -172,22 +149,15 @@ object SubstringWindowStore {
     def tag: String = s"substring.v4;k=$k;cap=$maxDocsPerWindow"
   }
 
-  private def dir(root: String, corpusId: String): String = s"$root/$corpusId"
-  private def marker(root: String, corpusId: String): String =
-    s"${dir(root, corpusId)}/_params"
-
-  def isBuilt(root: String, corpusId: String, params: Params): Boolean = {
-    val m = marker(root, corpusId)
-    StoreFs.exists(m) &&
-      new String(StoreFs.readBytes(m), StandardCharsets.UTF_8) == params.tag
-  }
+  def isBuilt(root: String, corpusId: String, params: Params): Boolean =
+    CommittedStore(root, corpusId).isBuilt(params.tag)
 
   /** Persist `docs`' distinct `(id, h)` windows; idempotent per
-    * (corpusId, params), wiped and rebuilt on any mismatch — the same
-    * commit-marker protocol as the other stores. Under-cap windows land
-    * in `windows.parquet` (the join side), over-cap hashes with their
-    * document counts in `hot.parquet` (the audit side) — both always
-    * written so readers never probe for existence.
+    * (corpusId, params), wiped and rebuilt on any mismatch
+    * ([[CommittedStore]]). Under-cap windows land in `windows.parquet`
+    * (the join side), over-cap hashes with their document counts in
+    * `hot.parquet` (the audit side) — both always written so readers
+    * never probe for existence.
     *
     * Memory bound: the join side groups through the SAME size-capped
     * aggregation the inline operators use ([[Dedup.groupedWindows]] via
@@ -202,36 +172,31 @@ object SubstringWindowStore {
     * window pass runs once and both artifacts stay byte-consistent. */
   def build(docs: DataFrame, idCol: String, textCol: String,
       root: String, corpusId: String, params: Params = Params()): Unit = {
-    if (isBuilt(root, corpusId, params)) return
-    val d = dir(root, corpusId)
-    StoreFs.deleteRecursive(d)
-    StoreFs.mkdirs(d)
     import org.apache.spark.sql.functions.{col, count, lit}
-    val w = Dedup.windowFrame128(docs, idCol, textCol, params.k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val hot =
-        if (params.maxDocsPerWindow > 0)
-          w.groupBy("h1", "h2").agg(count(lit(1)).as("n_docs"))
-            .filter(col("n_docs") > params.maxDocsPerWindow)
-        else
-          w.filter(lit(false)).groupBy("h1", "h2").agg(count(lit(1)).as("n_docs"))
-      hot.write.mode("overwrite").parquet(s"$d/hot.parquet")
-      Dedup.groupedWindows(w, params.maxDocsPerWindow)
-        .write.mode("overwrite").parquet(s"$d/windows.parquet")
-    } finally { w.unpersist(); () }
-    StoreFs.writeAtomic(marker(root, corpusId), params.tag.getBytes(StandardCharsets.UTF_8))
-    ()
+    val s = CommittedStore(root, corpusId)
+    s.build(params.tag) {
+      val w = Dedup.windowFrame128(docs, idCol, textCol, params.k)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val hot =
+          if (params.maxDocsPerWindow > 0)
+            w.groupBy("h1", "h2").agg(count(lit(1)).as("n_docs"))
+              .filter(col("n_docs") > params.maxDocsPerWindow)
+          else
+            w.filter(lit(false)).groupBy("h1", "h2").agg(count(lit(1)).as("n_docs"))
+        hot.write.mode("overwrite").parquet(s.path("hot"))
+        Dedup.groupedWindows(w, params.maxDocsPerWindow)
+          .write.mode("overwrite").parquet(s.path("windows"))
+      } finally { w.unpersist(); () }
+    }
   }
 
   /** GROUPED under-cap windows `(h1, h2, __ids sorted asc)` of a persisted
     * corpus — a bare scan; the build-time hot-window guard already
     * applied; exactly the frame the pair stage consumes. */
   def windows(spark: org.apache.spark.sql.SparkSession, root: String,
-      corpusId: String, params: Params = Params()): DataFrame = {
-    requireBuilt(root, corpusId, params)
-    spark.read.parquet(s"${dir(root, corpusId)}/windows.parquet")
-  }
+      corpusId: String, params: Params = Params()): DataFrame =
+    committed(root, corpusId, params).read(spark, "windows")
 
   /** Surfaced over-cap windows `(h1, h2, n_docs)` — what the build
     * dropped from the join side. Keys are the internal 128-bit form (a
@@ -240,13 +205,11 @@ object SubstringWindowStore {
     * the inline [[Dedup.hotWindows]] keeps the md5 hex surface its
     * oracle row pins. */
   def hotWindows(spark: org.apache.spark.sql.SparkSession, root: String,
-      corpusId: String, params: Params = Params()): DataFrame = {
-    requireBuilt(root, corpusId, params)
-    spark.read.parquet(s"${dir(root, corpusId)}/hot.parquet")
-  }
+      corpusId: String, params: Params = Params()): DataFrame =
+    committed(root, corpusId, params).read(spark, "hot")
 
-  private def requireBuilt(root: String, corpusId: String, params: Params): Unit =
-    require(isBuilt(root, corpusId, params),
+  private def committed(root: String, corpusId: String, params: Params): CommittedStore =
+    CommittedStore(root, corpusId).requireBuilt(params.tag,
       s"substring window store $root/$corpusId is missing, incomplete, or " +
         s"was built with different parameters than ${params.tag} — run " +
         "SubstringWindowStore.build")

@@ -526,16 +526,6 @@ object Similarity {
     topKPerGroup(rescored, "q", k)
   }
 
-  /** IVF (inverted-file) approximate top-k.
-    *
-    * `centroids` plays the role of the trained coarse quantizer (for tests a
-    * deterministic subset of the corpus; in production the output of k-means
-    * — the operator is agnostic). Corpus rows are assigned to their nearest
-    * centroid; a query probes its `nprobe` nearest centroids' buckets (the
-    * recall/cost knob every IVF deployment turns first: recall rises with
-    * nprobe, probe cost scales linearly with it; SimilaritySpec measures
-    * recall@k against [[bruteForceTopK]]).
-    * Output: (q, rank, id, sim_e6). */
   /** Prep centroids: (cid, cv, cn) with double vectors and norms. */
   private[operators] def centFrame(centroids: DataFrame, centroidIdCol: String, vecCol: String): DataFrame =
     centroids
@@ -645,6 +635,16 @@ object Similarity {
         (col("__cs") < minCosineE6).as("is_outlier"))
   }
 
+  /** IVF (inverted-file) approximate top-k.
+    *
+    * `centroids` plays the role of the trained coarse quantizer (for tests a
+    * deterministic subset of the corpus; in production the output of k-means
+    * — the operator is agnostic). Corpus rows are assigned to their nearest
+    * centroid; a query probes its `nprobe` nearest centroids' buckets (the
+    * recall/cost knob every IVF deployment turns first: recall rises with
+    * nprobe, probe cost scales linearly with it; SimilaritySpec measures
+    * recall@k against [[bruteForceTopK]]).
+    * Output: (q, rank, id, sim_e6). */
   def ivfTopK(
       corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, centroidIdCol: String, k: Int,
@@ -782,32 +782,6 @@ object Similarity {
     ivfProbeInt8(bucketed, probed, k, refine)
   }
 
-  /** Product-quantization (PQ) top-k with asymmetric-distance scoring and
-    * exact re-rank — the memory-bandwidth endgame for vector scan at
-    * corpus scale (Jégou et al. 2011, "Product Quantization for Nearest
-    * Neighbor Search" — public paper, re-derived here):
-    *
-    *  1. the vector space splits into `numSub` subspaces; each gets a
-    *     `numCodes`-entry codebook. The codebook recipe is deterministic
-    *     subset selection (subvectors of the `numCodes` lowest-id corpus
-    *     rows — same spirit as the IVF "subset-sqrtn" coarse quantizer;
-    *     swap in trained codebooks without touching the plan);
-    *  2. ENCODE (one narrow pass, no shuffle): each corpus vector becomes
-    *     `numSub` small ints — the argmin-L2 codeword per subspace, ties
-    *     to the smallest code. A 64-float vector at 8×256 PQ is 8 byte-
-    *     sized ints — Parquet-packed, the scan reads ~1/32nd the bytes of
-    *     the floats (recall measured ≥0.93 at refine=8 on the fixtures);
-    *  3. SCORE via ADC: each query precomputes its `numSub·numCodes`
-    *     partial-dot lookup table ONCE; a (query, vector) pair then costs
-    *     `numSub` array lookups instead of a full-dimension dot product;
-    *  4. the top `k·refine` candidates (integer e6 score desc, id asc —
-    *     the deterministic-cut contract) re-rank EXACTLY through the
-    *     full-precision vectors, same `sim_e6` output as [[ivfTopK]].
-    *
-    * All arithmetic is ordered double folds, so the oracle reproduces
-    * every distance bit-for-bit; SimilaritySpec measures recall@k against
-    * [[bruteForceTopK]]. Compose with IVF bucketing to prune the scan
-    * when n·q itself is the bottleneck. Output: (q, rank, id, sim_e6). */
   /** Deterministic subset codebooks (numCodes lowest-id corpus rows,
     * driver-collected — vocabulary-sized, not corpus-sized): flattened
     * `[mi·numCodes + j] → subvector`, plus the subspace width. */
@@ -1007,6 +981,32 @@ object Similarity {
     if (n == 0) 0.0 else tot / n
   }
 
+  /** Product-quantization (PQ) top-k with asymmetric-distance scoring and
+    * exact re-rank — the memory-bandwidth endgame for vector scan at
+    * corpus scale (Jégou et al. 2011, "Product Quantization for Nearest
+    * Neighbor Search" — public paper, re-derived here):
+    *
+    *  1. the vector space splits into `numSub` subspaces; each gets a
+    *     `numCodes`-entry codebook. The codebook recipe is deterministic
+    *     subset selection (subvectors of the `numCodes` lowest-id corpus
+    *     rows — same spirit as the IVF "subset-sqrtn" coarse quantizer;
+    *     swap in trained codebooks without touching the plan);
+    *  2. ENCODE (one narrow pass, no shuffle): each corpus vector becomes
+    *     `numSub` small ints — the argmin-L2 codeword per subspace, ties
+    *     to the smallest code. A 64-float vector at 8×256 PQ is 8 byte-
+    *     sized ints — Parquet-packed, the scan reads ~1/32nd the bytes of
+    *     the floats (recall measured ≥0.93 at refine=8 on the fixtures);
+    *  3. SCORE via ADC: each query precomputes its `numSub·numCodes`
+    *     partial-dot lookup table ONCE; a (query, vector) pair then costs
+    *     `numSub` array lookups instead of a full-dimension dot product;
+    *  4. the top `k·refine` candidates (integer e6 score desc, id asc —
+    *     the deterministic-cut contract) re-rank EXACTLY through the
+    *     full-precision vectors, same `sim_e6` output as [[ivfTopK]].
+    *
+    * All arithmetic is ordered double folds, so the oracle reproduces
+    * every distance bit-for-bit; SimilaritySpec measures recall@k against
+    * [[bruteForceTopK]]. Compose with IVF bucketing to prune the scan
+    * when n·q itself is the bottleneck. Output: (q, rank, id, sim_e6). */
   def pqTopK(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String,

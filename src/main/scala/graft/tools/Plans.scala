@@ -1,5 +1,9 @@
 package graft.tools
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+
 import graft.GraftSession
 
 /** Prints formatted physical plans for headline queries and greps them for
@@ -293,27 +297,16 @@ object Plans {
         println(s"[check] $name $label '$frag': $ok")
       }
     }
-    // Programmatic check: every join keyed on band columns must output NO
-    // array columns — the slim-candidate-join contract (ids + scalar keys
-    // only through the candidate shuffle; payload arrays join back by id
-    // after pair dedup). Text grep can't tell the band join's exchange from
-    // the join-back's, so this walks the physical plan instead.
+    // Programmatic check: the slim-candidate-join contract (bandJoins).
     // (emb_neardup_srp's hyperplane broadcast is an intentional BNLJ over
     // k·b rows, so it takes only this narrow-band gate, not a no-BNLJ one)
     val narrowBandJoins = Seq("dedup_minhash", "dedup_ngram", "dedup_against_ref",
       "dedup_against_ref_stored", "emb_neardup_lsh", "emb_neardup_srp")
     narrowBandJoins.foreach { name =>
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      val joins = df.queryExecution.sparkPlan.collect {
-        case j: org.apache.spark.sql.execution.joins.BaseJoinExec
-            if j.leftKeys.exists(_.references.exists(_.name.startsWith("band_"))) => j
-      }
-      val wide = joins.filter(_.output.exists(a =>
-        a.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]))
-      val ok = joins.nonEmpty && wide.isEmpty
-      if (!ok) failed += 1
-      println(s"[check] $name band joins narrow (no array cols): $ok " +
-        s"(${joins.size} band join(s), ${wide.size} wide)")
+      val w = bandJoins(graft.SparkEntry.queries(name)(spark, sfDir))
+      if (!w.ok) failed += 1
+      println(s"[check] $name band joins narrow (no array cols): ${w.ok} " +
+        s"(${w.joins} band join(s), ${w.wide} wide)")
     }
     // mm_ann's assembly contract: exploded features reach the IVF as ONE
     // media_id-grouped aggregate with partial/final modes (map-side
@@ -396,26 +389,12 @@ object Plans {
       println(s"[check] dedup_substring_ref_stored ref side is scan-only: $sOk " +
         s"(store scan: $sHasStore, generates inline=$sgInline stored=$sgStored)")
     }
-    // ann_ivf_int8's probe contract: joins keyed on the IVF bucket must
-    // carry only the int8-quantized arrays — a full-precision double array
-    // in a bucket join's output means the probe lost its bandwidth win.
-    // (The exact vectors are allowed to appear in the id-keyed rescore
-    // join-back, which is not bucket-keyed.)
+    // ann_ivf_int8's probe contract (bucketJoins)
     locally {
-      val df = graft.SparkEntry.queries("ann_ivf_int8")(spark, sfDir)
-      val bucketJoins = df.queryExecution.sparkPlan.collect {
-        case j: org.apache.spark.sql.execution.joins.BaseJoinExec
-            if j.leftKeys.exists(_.references.exists(_.name == "bucket")) => j
-      }
-      val wide = bucketJoins.filter(_.output.exists(a => a.dataType match {
-        case org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType, _) => true
-        case _ => false
-      }))
-      val ok = bucketJoins.nonEmpty && wide.isEmpty
-      if (!ok) failed += 1
-      println(s"[check] ann_ivf_int8 bucket joins int8-only (no double arrays): $ok " +
-        s"(${bucketJoins.size} bucket join(s), ${wide.size} wide)")
+      val w = bucketJoins(graft.SparkEntry.queries("ann_ivf_int8")(spark, sfDir))
+      if (!w.ok) failed += 1
+      println(s"[check] ann_ivf_int8 bucket joins int8-only (no double arrays): ${w.ok} " +
+        s"(${w.joins} bucket join(s), ${w.wide} wide)")
     }
     // Centroid-assignment contract (the r12 verdict's top item): every
     // assignment is the row-local codegen argmax — a Generate over
@@ -504,4 +483,36 @@ object Plans {
     spark.stop()
     if (failed > 0) { System.err.println(s"$failed plan checks FAILED"); sys.exit(1) }
   }
+
+  /** How many joins a walk found, and how many of them output a column it
+    * forbids; the invariant holds when there is a join and none is wide. */
+  final case class JoinWidth(joins: Int, wide: Int) {
+    def ok: Boolean = joins > 0 && wide == 0
+  }
+
+  private def joinWidth(df: DataFrame, key: String => Boolean,
+      forbidden: DataType => Boolean): JoinWidth = {
+    val joins = df.queryExecution.sparkPlan.collect {
+      case j: BaseJoinExec if j.leftKeys.exists(_.references.exists(a => key(a.name))) => j
+    }
+    JoinWidth(joins.size, joins.count(_.output.exists(a => forbidden(a.dataType))))
+  }
+
+  /** The slim-candidate-join contract: every join keyed on band columns
+    * outputs NO array column (ids + scalar keys only through the candidate
+    * shuffle; payload arrays join back by id after pair dedup). Text grep
+    * cannot tell the band join's exchange from the join-back's, so this
+    * walks the physical plan. */
+  def bandJoins(df: DataFrame): JoinWidth =
+    joinWidth(df, _.startsWith("band_"), _.isInstanceOf[ArrayType])
+
+  /** The int8 probe contract: joins keyed on the IVF bucket carry only the
+    * int8-quantized arrays — a full-precision double array in a bucket
+    * join's output means the probe lost its bandwidth win (the exact
+    * vectors may appear in the id-keyed rescore join-back). */
+  def bucketJoins(df: DataFrame): JoinWidth =
+    joinWidth(df, _ == "bucket", {
+      case ArrayType(DoubleType, _) => true
+      case _ => false
+    })
 }

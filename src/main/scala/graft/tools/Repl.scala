@@ -245,6 +245,13 @@ object Repl {
     client.close()
   }
 
+  /** The local loop's `append`: parse `data` per the topic's effective
+    * (possibly inherited) schema — the catalog rule the store applies when
+    * it types the row, so numeric parsing never meets a string topic and
+    * an inheriting child never gets a string datum. */
+  private[tools] def localAppend(client: LocalClient, topic: String, data: String): Unit =
+    client.append(topic, parseDatum(client.engine.catalog.effective(topic).ddl, data))
+
   /** Embedded-store loop (serverless `file://` / bare-path shape). */
   private def localLoop(root: String): Unit = {
     val spark = GraftSession.local(4)
@@ -266,11 +273,7 @@ object Repl {
           case "append" :: rest :: Nil =>
             rest.split("\\s+", 2) match {
               case Array(topic, data) =>
-                // parse per the topic's (possibly inherited) schema — numeric
-                // parsing on a string topic would build an ill-typed row
-                val ddl = client.engine.catalog.schemaOf(topic)
-                  .map(_.ddl).getOrElse("string")
-                client.append(topic, parseDatum(ddl, data))
+                localAppend(client, topic, data)
                 println("ok")
               case _ =>
                 println(commandError(t, "append needs <topic> <data>",

@@ -651,9 +651,9 @@ object ScaleSweep {
     * on the scaled corpus (plan shape can flip with data-size stats). */
   private def planChecks(spark: SparkSession, dir: String): Int = {
     var failed = 0
-    def plan(name: String) = graft.SparkEntry.queries(name)(spark, dir).queryExecution
+    def query(name: String) = graft.SparkEntry.queries(name)(spark, dir)
     Seq("emb_neardup", "emb_neardup_lsh").foreach { name =>
-      val s = plan(name).explainString(org.apache.spark.sql.execution.FormattedMode)
+      val s = query(name).queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
       val ok = !s.contains("BroadcastNestedLoopJoin") && !s.contains("CartesianProduct")
       if (!ok) failed += 1
       println(s"[scale-plan] $name no-BNLJ/no-cartesian: $ok")
@@ -664,29 +664,14 @@ object ScaleSweep {
     // no-BNLJ one
     Seq("dedup_minhash", "dedup_ngram", "dedup_against_ref",
         "emb_neardup_lsh", "emb_neardup_srp").foreach { name =>
-      val joins = plan(name).sparkPlan.collect {
-        case j: org.apache.spark.sql.execution.joins.BaseJoinExec
-            if j.leftKeys.exists(_.references.exists(_.name.startsWith("band_"))) => j
-      }
-      val wide = joins.filter(_.output.exists(
-        _.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]))
-      val ok = joins.nonEmpty && wide.isEmpty
-      if (!ok) failed += 1
-      println(s"[scale-plan] $name band joins narrow: $ok (${joins.size} joins)")
+      val w = Plans.bandJoins(query(name))
+      if (!w.ok) failed += 1
+      println(s"[scale-plan] $name band joins narrow: ${w.ok} (${w.joins} joins)")
     }
     locally {
-      val joins = plan("ann_ivf_int8").sparkPlan.collect {
-        case j: org.apache.spark.sql.execution.joins.BaseJoinExec
-            if j.leftKeys.exists(_.references.exists(_.name == "bucket")) => j
-      }
-      val wide = joins.filter(_.output.exists(a => a.dataType match {
-        case org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType, _) => true
-        case _ => false
-      }))
-      val ok = joins.nonEmpty && wide.isEmpty
-      if (!ok) failed += 1
-      println(s"[scale-plan] ann_ivf_int8 bucket joins int8-only: $ok (${joins.size} joins)")
+      val w = Plans.bucketJoins(query("ann_ivf_int8"))
+      if (!w.ok) failed += 1
+      println(s"[scale-plan] ann_ivf_int8 bucket joins int8-only: ${w.ok} (${w.joins} joins)")
     }
     failed
   }

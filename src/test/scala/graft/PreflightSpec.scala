@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** The preflight exists to turn silent fixture drift into one named line
@@ -18,7 +16,7 @@ class PreflightSpec extends SparkSpec {
 
   test("a retyped column and a missing column are named") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_preflight").toString
+    val dir = Queries.scratchDir("graft_preflight")
     // region with r_name retyped to long and r_regionkey missing
     Seq((1L, 2L)).toDF("r_name", "other")
       .write.mode("overwrite").parquet(s"$dir/region.parquet")
@@ -31,7 +29,7 @@ class PreflightSpec extends SparkSpec {
 
   test("an absorbed ts encoding is not flagged") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_preflight_ts").toString
+    val dir = Queries.scratchDir("graft_preflight_ts")
     // raw int64 nanos — the legacy encoding Tables.events absorbs
     Seq((1L, 1705276800123456789L, 7L, "click", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")

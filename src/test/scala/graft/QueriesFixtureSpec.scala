@@ -77,19 +77,23 @@ class QueriesFixtureSpec extends AnyFunSuite {
     // split so this file does not match
     val tempDir = "createTemp" + "Directory"
     val hook = "addShutdown" + "Hook"
-    val files: Seq[Path] = {
-      val stream = Files.walk(Paths.get("src/main/scala"))
+    def sources(dir: String): Seq[Path] = {
+      val stream = Files.walk(Paths.get(dir))
       try stream.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally stream.close()
     }
-    def uses(needle: String): Map[String, Int] = files.flatMap { f =>
+    def uses(dir: String, needle: String): Map[String, Int] = sources(dir).flatMap { f =>
       val n = java.util.regex.Pattern.quote(needle).r
         .findAllIn(new String(Files.readAllBytes(f), StandardCharsets.UTF_8)).size
       if (n > 0) Some(f.getFileName.toString -> n) else None
     }.toMap
     // Queries.scratchDir and Bench.ioCalibrate (the disk probe)
-    assert(uses(tempDir) == Map("Queries.scala" -> 1, "Bench.scala" -> 1))
+    assert(uses("src/main/scala", tempDir) == Map("Queries.scala" -> 1, "Bench.scala" -> 1))
     // the one hook that deletes Queries.scratchDirs
-    assert(uses(hook) == Map("Queries.scala" -> 1))
+    assert(uses("src/main/scala", hook) == Map("Queries.scala" -> 1))
+    // specs take their dirs from Queries.scratchDir, so nothing they make
+    // outlives the test JVM; the one exception is deleteTree's own test
+    assert(uses("src/test/scala", tempDir) == Map("QueriesFixtureSpec.scala" -> 1))
+    assert(uses("src/test/scala", hook).isEmpty)
   }
 }

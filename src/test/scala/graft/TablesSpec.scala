@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -19,7 +17,7 @@ class TablesSpec extends SparkSpec {
   private val micros = Seq(1705276800123456L, 1705363200987654L, -500L, 0L)
 
   private def writeFixture(encode: String): String = {
-    val dir = Files.createTempDirectory(s"graft_tablesspec_$encode").toString
+    val dir = Queries.scratchDir(s"graft_tablesspec_$encode")
     import spark.implicits._
     val rows = micros.zipWithIndex.map { case (us, i) =>
       (i.toLong, us, i.toLong + 100, s"type$i", i * 1.5, "{}")
@@ -67,7 +65,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("a table rewritten in place is re-read, an unchanged one is served from the memo") {
-    val dir = Files.createTempDirectory("graft_tablesspec_memo").toString
+    val dir = Queries.scratchDir("graft_tablesspec_memo")
     import spark.implicits._
     def write(ids: Seq[Long]): Unit =
       ids.toDF("id").coalesce(1).write.mode("overwrite").parquet(s"$dir/t.parquet")

@@ -1,9 +1,9 @@
 package graft.api
 
-import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.Queries
 import graft.SparkSpec
 import graft.engine.{Codec, FossilSchema}
 import graft.fql.Compiler
@@ -42,8 +42,8 @@ class RemoteClientSpec extends SparkSpec {
   private val fixedClock: Compiler.Clock = () => 1735689600L * 1000000000L
 
   test("client round-trip: VERSION, CREATE, APPEND, QUERY, LIST, STATS, USE") {
-    val rootA = Files.createTempDirectory("graft_rc_a").toString
-    val rootB = Files.createTempDirectory("graft_rc_b").toString
+    val rootA = Queries.scratchDir("graft_rc_a")
+    val rootB = Queries.scratchDir("graft_rc_b")
     val server = new WireServer(spark, Map("a" -> rootA, "b" -> rootB), "a", fixedClock)
     val client = new RemoteClient("127.0.0.1", server.port, db = "a", poolSize = 2)
     try {
@@ -81,7 +81,7 @@ class RemoteClientSpec extends SparkSpec {
   }
 
   test("array values decode through the client codec path") {
-    val root = Files.createTempDirectory("graft_rc_arr").toString
+    val root = Queries.scratchDir("graft_rc_arr")
     val server = new WireServer(spark, Map("a" -> root), "a", fixedClock)
     val client = new RemoteClient("127.0.0.1", server.port, db = "a", poolSize = 1)
     try {
@@ -95,7 +95,7 @@ class RemoteClientSpec extends SparkSpec {
   }
 
   test("client reconnects with backoff and resends after a server restart") {
-    val root = Files.createTempDirectory("graft_rc_rec").toString
+    val root = Queries.scratchDir("graft_rc_rec")
     val server1 = new WireServer(spark, Map("a" -> root), "a", fixedClock)
     val port = server1.port
     val client = new RemoteClient("127.0.0.1", port, db = "a",
@@ -137,7 +137,7 @@ class RemoteClientSpec extends SparkSpec {
     // default (far above this data) and a client receive cap of 4 KiB: the
     // client must surface the typed 507 (so WireImport's window-split
     // engages), NOT an IOException retried into the same oversized reply
-    val root = Files.createTempDirectory("graft_rc_cap").toString
+    val root = Queries.scratchDir("graft_rc_cap")
     val server = new WireServer(spark, Map("c" -> root), "c", fixedClock)
     val client = new RemoteClient("127.0.0.1", server.port, db = "c",
       poolSize = 1, maxReconnects = 3, backoffBaseMs = 1, maxFrameBytes = 4096)
@@ -156,7 +156,7 @@ class RemoteClientSpec extends SparkSpec {
   }
 
   test("connecting to a dead port fails, and a failed USE leaves the session intact") {
-    val root = Files.createTempDirectory("graft_rc_dead").toString
+    val root = Queries.scratchDir("graft_rc_dead")
     val server = new WireServer(spark, Map("a" -> root), "a", fixedClock)
     val deadPort = server.port
     val client = new RemoteClient("127.0.0.1", deadPort, db = "a", poolSize = 1)

@@ -3,6 +3,7 @@ package graft.api
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import graft.Queries
 import graft.SparkSpec
 import graft.fql.Compiler
 import graft.sources.WireImport
@@ -26,8 +27,8 @@ class WireImportSpec extends SparkSpec {
 
   test("wire import round-trip: paged QUERY windows land every entry, " +
       "typed, across mixed schemas; empty topics keep their schema") {
-    val srcRoot = Files.createTempDirectory("graft_wi_src").toString
-    val dstRoot = Files.createTempDirectory("graft_wi_dst").toString
+    val srcRoot = Queries.scratchDir("graft_wi_src")
+    val dstRoot = Queries.scratchDir("graft_wi_dst")
     val src = new LocalClient(spark, srcRoot, fixedClock)
     // two schemas + a composite + an empty topic; 23 entries so a
     // pageSize of 5 forces multi-window paging with uneven remainders
@@ -67,8 +68,8 @@ class WireImportSpec extends SparkSpec {
     // span ~54 years of ns (~1.7e18); with 8 pages the naive span*i
     // bound arithmetic exceeds 2^63 and silently corrupts the windows —
     // every entry must still land exactly once
-    val srcRoot = Files.createTempDirectory("graft_wi_wide").toString
-    val dstRoot = Files.createTempDirectory("graft_wi_wide_dst").toString
+    val srcRoot = Queries.scratchDir("graft_wi_wide")
+    val dstRoot = Queries.scratchDir("graft_wi_wide_dst")
     val src = new LocalClient(spark, srcRoot, fixedClock)
     src.createTopic("/wide", "int64")
     val years = Seq(1970, 1980, 1990, 2000, 2005, 2010, 2015, 2024)
@@ -94,8 +95,8 @@ class WireImportSpec extends SparkSpec {
     // computed NANOSECOND bounds stepped by 1 ns, and any non-µs-aligned
     // bound made window i's hi and window i+1's lo truncate to the SAME
     // microsecond — an entry at that µs landed twice
-    val srcRoot = Files.createTempDirectory("graft_wi_us").toString
-    val dstRoot = Files.createTempDirectory("graft_wi_us_dst").toString
+    val srcRoot = Queries.scratchDir("graft_wi_us")
+    val dstRoot = Queries.scratchDir("graft_wi_us_dst")
     val src = new LocalClient(spark, srcRoot, fixedClock)
     src.createTopic("/dense", "int64")
     val sec = 1735600000L
@@ -119,8 +120,8 @@ class WireImportSpec extends SparkSpec {
     // `all in /a` selects /a AND /a/b (FQL prefix semantics) while STATS
     // lists both separately — without the exact-topic clamp, /a/b's
     // entries land once via /a's pages and again via their own
-    val srcRoot = Files.createTempDirectory("graft_wi_nest").toString
-    val dstRoot = Files.createTempDirectory("graft_wi_nest_dst").toString
+    val srcRoot = Queries.scratchDir("graft_wi_nest")
+    val dstRoot = Queries.scratchDir("graft_wi_nest_dst")
     val src = new LocalClient(spark, srcRoot, fixedClock)
     src.createTopic("/a", "int64")
     src.createTopic("/a/b", "int64") // inherits-compatible child WITH data
@@ -144,8 +145,8 @@ class WireImportSpec extends SparkSpec {
     // time windows put nearly everything in one page, whose response
     // overflows a (deliberately tiny) frame cap with wire error 507; the
     // import must recursively split that window until pages fit
-    val srcRoot = Files.createTempDirectory("graft_wi_burst").toString
-    val dstRoot = Files.createTempDirectory("graft_wi_burst_dst").toString
+    val srcRoot = Queries.scratchDir("graft_wi_burst")
+    val dstRoot = Queries.scratchDir("graft_wi_burst_dst")
     val src = new LocalClient(spark, srcRoot, fixedClock)
     src.createTopic("/burst", "int64")
     val sec = 1735600000L
@@ -177,8 +178,8 @@ class WireImportSpec extends SparkSpec {
     // the server's send cap stays at the 100 MiB default and only the
     // client's 4 KiB receive cap trips — the import must still split the
     // burst window, now off the client-detected 507
-    val srcRoot = Files.createTempDirectory("graft_wi_upburst").toString
-    val dstRoot = Files.createTempDirectory("graft_wi_upburst_dst").toString
+    val srcRoot = Queries.scratchDir("graft_wi_upburst")
+    val dstRoot = Queries.scratchDir("graft_wi_upburst_dst")
     val src = new LocalClient(spark, srcRoot, fixedClock)
     src.createTopic("/burst", "int64")
     val sec = 1735600000L
@@ -207,8 +208,8 @@ class WireImportSpec extends SparkSpec {
       "the named source-gained-entries diagnosis, not a raw wire error") {
     // the window fit one frame when its intent was written; overflow on
     // re-fetch implies the source grew in-window between crash and resume
-    val srcRoot = Files.createTempDirectory("graft_wi_grow").toString
-    val dstRoot = Files.createTempDirectory("graft_wi_grow_dst").toString
+    val srcRoot = Queries.scratchDir("graft_wi_grow")
+    val dstRoot = Queries.scratchDir("graft_wi_grow_dst")
     val src = new LocalClient(spark, srcRoot, fixedClock)
     src.createTopic("/g", "int64")
     val sec = 1735600000L
@@ -236,8 +237,8 @@ class WireImportSpec extends SparkSpec {
 
   test("a single microsecond that alone overflows the frame cap fails " +
       "with a named error, not an infinite split") {
-    val srcRoot = Files.createTempDirectory("graft_wi_hotus").toString
-    val dstRoot = Files.createTempDirectory("graft_wi_hotus_dst").toString
+    val srcRoot = Queries.scratchDir("graft_wi_hotus")
+    val dstRoot = Queries.scratchDir("graft_wi_hotus_dst")
     val src = new LocalClient(spark, srcRoot, fixedClock)
     src.createTopic("/hot", "int64")
     val at = new Timestamp(1735600000L * 1000L)
@@ -257,8 +258,8 @@ class WireImportSpec extends SparkSpec {
 
   test("resume after a mid-topic crash lands the remaining entries " +
       "without duplicates or gaps") {
-    val srcRoot = Files.createTempDirectory("graft_wi_res").toString
-    val dstRoot = Files.createTempDirectory("graft_wi_res_dst").toString
+    val srcRoot = Queries.scratchDir("graft_wi_res")
+    val dstRoot = Queries.scratchDir("graft_wi_res_dst")
     val src = new LocalClient(spark, srcRoot, fixedClock)
     src.createTopic("/r", "int64")
     val t0 = 1735600000L * 1000L
@@ -290,8 +291,8 @@ class WireImportSpec extends SparkSpec {
     // the other recovery boundary: intent written, crash BEFORE the page's
     // write job committed — the target has zero in-window entries and the
     // whole page must land on resume
-    val srcRoot = Files.createTempDirectory("graft_wi_res0").toString
-    val dstRoot = Files.createTempDirectory("graft_wi_res0_dst").toString
+    val srcRoot = Queries.scratchDir("graft_wi_res0")
+    val dstRoot = Queries.scratchDir("graft_wi_res0_dst")
     val src = new LocalClient(spark, srcRoot, fixedClock)
     src.createTopic("/r0", "int64")
     val sec = 1735600000L
@@ -318,8 +319,8 @@ class WireImportSpec extends SparkSpec {
 
   test("concurrent topic paging lands every entry exactly once across " +
       "mixed schemas (3 workers over a 3-connection pool)") {
-    val srcRoot = Files.createTempDirectory("graft_wi_conc").toString
-    val dstRoot = Files.createTempDirectory("graft_wi_conc_dst").toString
+    val srcRoot = Queries.scratchDir("graft_wi_conc")
+    val dstRoot = Queries.scratchDir("graft_wi_conc_dst")
     val src = new LocalClient(spark, srcRoot, fixedClock)
     src.createTopic("/c/f", "float64")
     src.createTopic("/c/s", "string")
@@ -346,8 +347,8 @@ class WireImportSpec extends SparkSpec {
 
   test("crash under concurrency keeps per-topic sidecar marks; concurrent " +
       "resume completes without duplicates or gaps") {
-    val srcRoot = Files.createTempDirectory("graft_wi_cres").toString
-    val dstRoot = Files.createTempDirectory("graft_wi_cres_dst").toString
+    val srcRoot = Queries.scratchDir("graft_wi_cres")
+    val dstRoot = Queries.scratchDir("graft_wi_cres_dst")
     val src = new LocalClient(spark, srcRoot, fixedClock)
     val t0 = 1735600000L * 1000L
     Seq("/k/a", "/k/b", "/k/c").foreach { t =>
@@ -380,7 +381,7 @@ class WireImportSpec extends SparkSpec {
   }
 
   test("resume sidecar state round-trips through its JSON encoding") {
-    val root = Files.createTempDirectory("graft_wi_state").toString
+    val root = Queries.scratchDir("graft_wi_state")
     val st = Map(
       "/plain" -> WireImport.TopicState(123456789L, None),
       "/counted" -> WireImport.TopicState(7L, None, 4200L),
@@ -396,8 +397,8 @@ class WireImportSpec extends SparkSpec {
 
   test("follow cycles page the TAIL, not the corpus: a poll over an " +
       "already-imported topic costs O(new entries / pageSize) queries") {
-    val srcRoot = Files.createTempDirectory("graft_wft_src").toString
-    val dstRoot = Files.createTempDirectory("graft_wft_dst").toString
+    val srcRoot = Queries.scratchDir("graft_wft_src")
+    val dstRoot = Queries.scratchDir("graft_wft_dst")
     val src = new LocalClient(spark, srcRoot, fixedClock)
     src.createTopic("/big", "int64")
     val t0 = 1735600000L * 1000L
@@ -427,8 +428,8 @@ class WireImportSpec extends SparkSpec {
 
   test("follow: live source keeps appending between poll cycles; final " +
       "store == source entry-for-entry, no window double-lands") {
-    val srcRoot = Files.createTempDirectory("graft_wf_src").toString
-    val dstRoot = Files.createTempDirectory("graft_wf_dst").toString
+    val srcRoot = Queries.scratchDir("graft_wf_src")
+    val dstRoot = Queries.scratchDir("graft_wf_dst")
     val src = new LocalClient(spark, srcRoot, fixedClock)
     src.createTopic("/live/a", "int64")
     src.createTopic("/live/b", "string")
@@ -487,8 +488,8 @@ class WireImportSpec extends SparkSpec {
   }
 
   test("follow loop: polls until quiesced, then one close cycle drains") {
-    val srcRoot = Files.createTempDirectory("graft_wfl_src").toString
-    val dstRoot = Files.createTempDirectory("graft_wfl_dst").toString
+    val srcRoot = Queries.scratchDir("graft_wfl_src")
+    val dstRoot = Queries.scratchDir("graft_wfl_dst")
     val src = new LocalClient(spark, srcRoot, fixedClock)
     src.createTopic("/t", "int64")
     val t0 = 1735600000L * 1000L
@@ -514,8 +515,8 @@ class WireImportSpec extends SparkSpec {
   }
 
   test("single-entry topics and identical timestamps page safely") {
-    val srcRoot = Files.createTempDirectory("graft_wi_one").toString
-    val dstRoot = Files.createTempDirectory("graft_wi_one_dst").toString
+    val srcRoot = Queries.scratchDir("graft_wi_one")
+    val dstRoot = Queries.scratchDir("graft_wi_one_dst")
     val src = new LocalClient(spark, srcRoot, fixedClock)
     val at = new Timestamp(1735600000L * 1000L)
     src.createTopic("/one", "int64")

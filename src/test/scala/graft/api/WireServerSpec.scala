@@ -4,7 +4,6 @@ import java.io.{DataInputStream, DataOutputStream}
 import java.net.Socket
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 import java.sql.Timestamp
 import java.util.Base64
 
@@ -16,6 +15,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
+import graft.Queries
 import graft.SparkSpec
 import graft.engine.{Codec, FossilSchema}
 import graft.fql.Compiler
@@ -43,8 +43,8 @@ class WireServerSpec extends SparkSpec {
   }
 
   test("wire round-trip: VERSION, CREATE, APPEND, QUERY, LIST, USE") {
-    val rootA = Files.createTempDirectory("graft_wire_a").toString
-    val rootB = Files.createTempDirectory("graft_wire_b").toString
+    val rootA = Queries.scratchDir("graft_wire_a")
+    val rootB = Queries.scratchDir("graft_wire_b")
     val server = new WireServer(spark, Map("a" -> rootA, "b" -> rootB), "a", fixedClock)
     try {
       val sock = new Socket("127.0.0.1", server.port)
@@ -130,7 +130,7 @@ class WireServerSpec extends SparkSpec {
   }
 
   test("fire-and-forget mode: appends succeed, reads rejected, per-connection") {
-    val root = Files.createTempDirectory("graft_wire_ff").toString
+    val root = Queries.scratchDir("graft_wire_ff")
     val server = new WireServer(spark, Map("a" -> root), "a", fixedClock)
     try {
       val sock = new Socket("127.0.0.1", server.port)
@@ -181,7 +181,7 @@ class WireServerSpec extends SparkSpec {
   }
 
   test("array values round-trip over the wire with per-row resolved length") {
-    val root = Files.createTempDirectory("graft_wire_arr").toString
+    val root = Queries.scratchDir("graft_wire_arr")
     val server = new WireServer(spark, Map("a" -> root), "a", fixedClock)
     try {
       val sock = new Socket("127.0.0.1", server.port)
@@ -207,7 +207,7 @@ class WireServerSpec extends SparkSpec {
   }
 
   test("oversized query responses fail with a typed cap error, not an OOM") {
-    val root = Files.createTempDirectory("graft_wire_cap").toString
+    val root = Queries.scratchDir("graft_wire_cap")
     // 64-byte cap: even two entries overflow it
     val server = new WireServer(spark, Map("a" -> root), "a", fixedClock,
       maxResponseBytes = 64)
@@ -232,7 +232,7 @@ class WireServerSpec extends SparkSpec {
   }
 
   test("connections share one catalog per store (no lost updates)") {
-    val root = Files.createTempDirectory("graft_wire_shared").toString
+    val root = Queries.scratchDir("graft_wire_shared")
     val server = new WireServer(spark, Map("a" -> root), "a", fixedClock)
     try {
       // conn2 connects FIRST — with per-connection stores its stale
@@ -259,7 +259,7 @@ class WireServerSpec extends SparkSpec {
 
   test("metrics: counters and histogram advance across a command sequence; " +
       "METRICS wire command and /metrics HTTP endpoint render them") {
-    val root = Files.createTempDirectory("graft_wire_metrics").toString
+    val root = Queries.scratchDir("graft_wire_metrics")
     val server = new WireServer(spark, Map("a" -> root), "a", fixedClock,
       metricsPort = 0)
     try {
@@ -364,8 +364,8 @@ class WireServerSpec extends SparkSpec {
 
   test("per-database shape gauges track CREATE/APPEND across two stores; " +
       "JVM runtime section renders in METRICS and /metrics") {
-    val rootA = Files.createTempDirectory("graft_wire_shape_a").toString
-    val rootB = Files.createTempDirectory("graft_wire_shape_b").toString
+    val rootA = Queries.scratchDir("graft_wire_shape_a")
+    val rootB = Queries.scratchDir("graft_wire_shape_b")
     val server = new WireServer(spark, Map("a" -> rootA, "b" -> rootB), "a",
       fixedClock, metricsPort = 0)
     try {
@@ -442,7 +442,7 @@ class WireServerSpec extends SparkSpec {
   }
 
   test("QUERY of a reduce pipeline: one N/A entry at Go's zero time carrying the result") {
-    val root = Files.createTempDirectory("graft_wire_reduce").toString
+    val root = Queries.scratchDir("graft_wire_reduce")
     val server = new WireServer(spark, Map("a" -> root), "a", fixedClock)
     val client = new RemoteClient("127.0.0.1", server.port, db = "a", poolSize = 1)
     try {
@@ -460,7 +460,7 @@ class WireServerSpec extends SparkSpec {
   }
 
   test("wire APPENDs land without a Spark job") {
-    val root = Files.createTempDirectory("graft_wire_nojob").toString
+    val root = Queries.scratchDir("graft_wire_nojob")
     val (jobs, _) = wireJobs(root) { client =>
       client.create("/nj", "float64")
       (1 to 3).foreach(i => client.append(s"/nj/t$i", Codec.encode(FossilSchema.SFloat64, i.toDouble)))
@@ -497,7 +497,7 @@ class WireServerSpec extends SparkSpec {
   }
 
   test("both ends of a live wire connection disable Nagle (TCP_NODELAY)") {
-    val root = Files.createTempDirectory("graft_wire_nodelay").toString
+    val root = Queries.scratchDir("graft_wire_nodelay")
     val server = new WireServer(spark, Map("a" -> root), "a", fixedClock)
     val client = new RemoteClient("127.0.0.1", server.port, db = "a", poolSize = 1)
     try {
@@ -518,7 +518,7 @@ class WireServerSpec extends SparkSpec {
     * per wire APPEND, each at its own minute. */
   private def filledRoot(prefix: String, topic: String, ddl: String,
       values: Seq[Array[Byte]]): String = {
-    val root = Files.createTempDirectory(prefix).toString
+    val root = Queries.scratchDir(prefix)
     fill(root, Seq((topic, ddl, values)))
     root
   }
@@ -621,7 +621,7 @@ class WireServerSpec extends SparkSpec {
   }
 
   test("STATS answers from store footers with no Spark job and orders topics on the driver") {
-    val root = Files.createTempDirectory("graft_wire_stats").toString
+    val root = Queries.scratchDir("graft_wire_stats")
     fill(root, Seq(("/st/b", "float64", f64s(2)), ("/st/a", "float64", f64s(3)),
       ("/st/c", "float64", f64s(1))))
     val (jobs, lines) = wireJobs(root)(_.stats())
@@ -635,7 +635,7 @@ class WireServerSpec extends SparkSpec {
   test("STATS aggregates in one shuffle and orders topics on the driver") {
     // files landed as INT96 carry no usable time range in their footers:
     // STATS falls back to one Spark aggregate over them
-    val root = Files.createTempDirectory("graft_wire_stats96").toString
+    val root = Queries.scratchDir("graft_wire_stats96")
     val key = "spark.sql.parquet.outputTimestampType"
     val old = spark.conf.getAll.get(key)
     spark.conf.set(key, "INT96")
@@ -679,7 +679,7 @@ class WireServerSpec extends SparkSpec {
   }
 
   test("QUERY bodies are the entry lines of the frame's rows, in partition order") {
-    val root = Files.createTempDirectory("graft_wire_bytes").toString
+    val root = Queries.scratchDir("graft_wire_bytes")
     val composite = FossilSchema.parse("{n:int64,s:string}")
     fill(root, Seq(
       ("/b/f64", "float64", f64s(6)),
@@ -751,7 +751,7 @@ class WireServerSpec extends SparkSpec {
   }
 
   test("QUERY tasks ship at most one response's worth of large entries") {
-    val root = Files.createTempDirectory("graft_wire_large").toString
+    val root = Queries.scratchDir("graft_wire_large")
     val local = new LocalClient(spark, root, fixedClock)
     val rnd = new scala.util.Random(7)
     var minute = 0L
@@ -873,7 +873,7 @@ class WireServerSpec extends SparkSpec {
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   test("QUERYs of one shape that differ only in a constant compile no new classes") {
-    val root = Files.createTempDirectory("graft_wire_params").toString
+    val root = Queries.scratchDir("graft_wire_params")
     val local = new LocalClient(spark, root, fixedClock)
     // two days of entries up to the server clock's now, which bounds `since`
     val t0 = java.time.Instant.parse("2024-12-30T00:00:00Z")

@@ -1,10 +1,10 @@
 package graft.connector
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Row
 
+import graft.Queries
 import graft.SparkSpec
 import graft.api.LocalClient
 
@@ -20,7 +20,7 @@ class FossilCatalogSpec extends SparkSpec {
     Timestamp.from(java.time.Instant.parse(s))
 
   private lazy val root: String = {
-    val r = Files.createTempDirectory("graft_cat").toString
+    val r = Queries.scratchDir("graft_cat")
     val c = new LocalClient(spark, r, fixedClock)
     c.createTopic("/events", "float64")
     (0 until 6).foreach { i =>

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Row}
 
+import graft.Queries
 import graft.SparkSpec
 import graft.api.LocalClient
 
@@ -22,7 +23,7 @@ class FossilDataSourceSpec extends SparkSpec {
     () => java.time.Instant.parse("2025-01-01T00:00:00Z").toEpochMilli * 1000L
 
   private def newRoot(tag: String): String =
-    Files.createTempDirectory(s"graft_dsv2_$tag").toString
+    Queries.scratchDir(s"graft_dsv2_$tag")
 
   private def ts(s: String): Timestamp = Timestamp.from(java.time.Instant.parse(s))
 

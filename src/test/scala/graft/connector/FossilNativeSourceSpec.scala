@@ -1,6 +1,5 @@
 package graft.connector
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
@@ -8,6 +7,7 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Queries
 import graft.SparkSpec
 import graft.engine.{Codec, FossilSchema}
 import graft.sources.{FossilDatabase, FossilWriter}
@@ -28,7 +28,7 @@ class FossilNativeSourceSpec extends SparkSpec {
   /** v2 dir: / (string), /n/f (float64), /n/i (int32), /s (string);
     * 5 snapshot datums + 1 WAL-tail datum. */
   private def fixture(): String = {
-    val dir = Files.createTempDirectory("graft_native_dsv2").toString
+    val dir = Queries.scratchDir("graft_native_dsv2")
     FossilWriter.writeV2(dir,
       topics = Seq("/", "/n/f", "/n/i", "/s"),
       schemas = Seq("string", "float64", "int32", "string"),
@@ -121,7 +121,7 @@ class FossilNativeSourceSpec extends SparkSpec {
   }
 
   test("unknown directory layout refuses loudly") {
-    val dir = Files.createTempDirectory("graft_not_a_store").toString
+    val dir = Queries.scratchDir("graft_not_a_store")
     val e = intercept[IllegalArgumentException] {
       read(dir).schema
     }

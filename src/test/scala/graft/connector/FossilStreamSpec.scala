@@ -1,11 +1,11 @@
 package graft.connector
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.Queries
 import graft.SparkSpec
 import graft.api.LocalClient
 
@@ -21,9 +21,9 @@ class FossilStreamSpec extends SparkSpec {
   private def ts(s: String): Timestamp = Timestamp.from(java.time.Instant.parse(s))
 
   test("checkpointed drains read each landed file exactly once; final == batch") {
-    val root = Files.createTempDirectory("graft_mbs").toString
-    val sink = Files.createTempDirectory("graft_mbs_sink").toString
-    val ckpt = Files.createTempDirectory("graft_mbs_ckpt").toString
+    val root = Queries.scratchDir("graft_mbs")
+    val sink = Queries.scratchDir("graft_mbs_sink")
+    val ckpt = Queries.scratchDir("graft_mbs_ckpt")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/live", "float64")
 
@@ -69,9 +69,9 @@ class FossilStreamSpec extends SparkSpec {
   }
 
   test("one stream spans mixed-width schema groups at the combined type") {
-    val root = Files.createTempDirectory("graft_mbs_mix").toString
-    val sink = Files.createTempDirectory("graft_mbs_mix_sink").toString
-    val ckpt = Files.createTempDirectory("graft_mbs_mix_ckpt").toString
+    val root = Queries.scratchDir("graft_mbs_mix")
+    val sink = Queries.scratchDir("graft_mbs_mix_sink")
+    val ckpt = Queries.scratchDir("graft_mbs_mix_ckpt")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/w/i32", "int32")
     c.createTopic("/w/i64", "int64")
@@ -92,9 +92,9 @@ class FossilStreamSpec extends SparkSpec {
   }
 
   test("prefix and topic pushdown narrow the stream") {
-    val root = Files.createTempDirectory("graft_mbs_pref").toString
-    val sink = Files.createTempDirectory("graft_mbs_pref_sink").toString
-    val ckpt = Files.createTempDirectory("graft_mbs_pref_ckpt").toString
+    val root = Queries.scratchDir("graft_mbs_pref")
+    val sink = Queries.scratchDir("graft_mbs_pref_sink")
+    val ckpt = Queries.scratchDir("graft_mbs_pref_ckpt")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/e", "float64")
     (0 until 8).foreach { i =>

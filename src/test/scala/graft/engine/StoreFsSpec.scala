@@ -1,11 +1,11 @@
 package graft.engine
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
+import graft.Queries
 import graft.SparkSpec
 import graft.api.LocalClient
 
@@ -30,7 +30,7 @@ class StoreFsSpec extends SparkSpec {
   /** A store root as a Hadoop `file:` URI (the local filesystem driven
     * through the same FileSystem API an object store would be). */
   private def uriRoot(tag: String): String =
-    "file:" + Files.createTempDirectory(s"graft_hfs_$tag").toString
+    "file:" + Queries.scratchDir(s"graft_hfs_$tag")
 
   test("full lifecycle on a file: URI root — create, append, query, reopen") {
     val root = uriRoot("life")

@@ -13,6 +13,7 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, TimestampType}
 
+import graft.Queries
 import graft.SparkSpec
 import graft.api.LocalClient
 import graft.fql.Compiler
@@ -79,7 +80,7 @@ class StoreIndexSpec extends SparkSpec {
   }
 
   test("new store files land time as INT64 TIMESTAMP(MICROS) on every write path") {
-    val root = Files.createTempDirectory("graft_idx_micros").toString
+    val root = Queries.scratchDir("graft_idx_micros")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/m", "float64")
     c.appendBatch(Seq(Row(ts(T0), "/m/a", 1.0)), "float64") // driver landing
@@ -100,7 +101,7 @@ class StoreIndexSpec extends SparkSpec {
 
   test("a mixed INT96/MILLIS/MICROS store reads identically and STATS equals the aggregate, " +
       "through appends, compaction and a foreign file") {
-    val root = Files.createTempDirectory("graft_idx_mixed").toString
+    val root = Queries.scratchDir("graft_idx_mixed")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/x", "float64")
     val expected = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Double)]
@@ -146,7 +147,7 @@ class StoreIndexSpec extends SparkSpec {
   }
 
   test("a between window's scan opens only the files it overlaps") {
-    val root = Files.createTempDirectory("graft_idx_prune").toString
+    val root = Queries.scratchDir("graft_idx_prune")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/p", "float64")
     // four files of /p/a, one day each; one of /p/b
@@ -173,7 +174,7 @@ class StoreIndexSpec extends SparkSpec {
   }
 
   test("STATS on an all-MICROS store starts no Spark job") {
-    val root = Files.createTempDirectory("graft_idx_stats").toString
+    val root = Queries.scratchDir("graft_idx_stats")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/s", "float64")
     c.appendBatch(Seq(Row(ts(T0 + 5), "/s/b", 1.0), Row(ts(T0 + 9), "/s/b", 2.0),
@@ -193,7 +194,7 @@ class StoreIndexSpec extends SparkSpec {
   }
 
   test("repeated queries over unchanged files reuse one relation; a new file rebuilds it") {
-    val root = Files.createTempDirectory("graft_idx_memo").toString
+    val root = Queries.scratchDir("graft_idx_memo")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/r", "float64")
     c.appendBatch(Seq(Row(ts(T0), "/r/a", 1.0)), "float64")
@@ -207,7 +208,7 @@ class StoreIndexSpec extends SparkSpec {
   }
 
   test("writes, reads and STATS leave the caller's SQL and Hadoop conf untouched") {
-    val root = Files.createTempDirectory("graft_idx_conf").toString
+    val root = Queries.scratchDir("graft_idx_conf")
     def sqlConf() = spark.conf.getAll
     def hadoopConf() = {
       val it = spark.sparkContext.hadoopConfiguration.iterator()

@@ -10,6 +10,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 
+import graft.Queries
 import graft.SparkSpec
 import graft.api.LocalClient
 import graft.fql.Compiler
@@ -20,7 +21,7 @@ class StoreSpec extends SparkSpec {
   private val fixedClock: Compiler.Clock = () => 1735689600L * 1000000000L // 2025-01-01
 
   test("create, append, query, reopen round-trip") {
-    val root = Files.createTempDirectory("graft_store").toString
+    val root = Queries.scratchDir("graft_store")
     val c = new LocalClient(spark, root, fixedClock)
 
     c.createTopic("/sensors/temp", "float64")
@@ -50,7 +51,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("prefix scan prunes topic partitions at the file index") {
-    val root = Files.createTempDirectory("graft_store_pp").toString
+    val root = Queries.scratchDir("graft_store_pp")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/a", "int64")
     c.createTopic("/b", "int64")
@@ -67,7 +68,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("conflicting append schema is rejected") {
-    val root = Files.createTempDirectory("graft_store2").toString
+    val root = Queries.scratchDir("graft_store2")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/typed", "int64")
     assertThrows[IllegalArgumentException] {
@@ -77,7 +78,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("compatible-width append lands under the topic's schema group (visible to queries)") {
-    val root = Files.createTempDirectory("graft_store4").toString
+    val root = Queries.scratchDir("graft_store4")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/w", "int64")
     // int32 rows into an int64 topic: combine(int64,int32)=int64 → legal,
@@ -89,7 +90,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("wider append into a narrower topic is rejected (no silent wrap)") {
-    val root = Files.createTempDirectory("graft_store7").toString
+    val root = Queries.scratchDir("graft_store7")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/narrow", "int32")
     assertThrows[IllegalArgumentException] {
@@ -99,7 +100,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("entries honors the prefix even when topics share a schema group") {
-    val root = Files.createTempDirectory("graft_store8").toString
+    val root = Queries.scratchDir("graft_store8")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/g1", "int64")
     c.createTopic("/g2", "int64") // same schema group directory
@@ -110,7 +111,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("catalog reload preserves creation-order-legal schemas verbatim") {
-    val root = Files.createTempDirectory("graft_store5").toString
+    val root = Queries.scratchDir("graft_store5")
     val c = new LocalClient(spark, root, fixedClock)
     // legal at runtime: child created before parent acquires a schema
     c.createTopic("/p/child", "int64")
@@ -123,7 +124,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("reduce over an empty selection yields an empty frame, lazily") {
-    val root = Files.createTempDirectory("graft_store6").toString
+    val root = Queries.scratchDir("graft_store6")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/r", "float64")
     c.append("/r", 5.0, Timestamp.valueOf("2024-01-01 00:00:00"))
@@ -135,7 +136,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("mixed-schema prefix scan widens numerics like schema.Combine") {
-    val root = Files.createTempDirectory("graft_store3").toString
+    val root = Queries.scratchDir("graft_store3")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/m/a", "int32")
     c.createTopic("/m/b", "int64")
@@ -149,7 +150,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("appendRaw: non-conforming bytes rejected with a typed error") {
-    val root = Files.createTempDirectory("graft_store_raw1").toString
+    val root = Queries.scratchDir("graft_store_raw1")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/raw/f", "float64")
     // 3 bytes into an 8-byte float64 → schema-on-append gate fires
@@ -167,7 +168,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("appendRaw: good bytes round-trip byte-exact through the codec") {
-    val root = Files.createTempDirectory("graft_store_raw2").toString
+    val root = Queries.scratchDir("graft_store_raw2")
     val c = new LocalClient(spark, root, fixedClock)
     val at = Timestamp.valueOf("2024-06-01 10:00:00")
 
@@ -193,7 +194,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("append caps the distinct-topic collect (data-keyed topic fails loudly)") {
-    val root = Files.createTempDirectory("graft_store_cap").toString
+    val root = Queries.scratchDir("graft_store_cap")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/cap", "int64") // children inherit int64
     sys.props("graft.store.maxTopicsPerAppend") = "2"
@@ -209,7 +210,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("concurrent appends through one shared store all land (serialized persist)") {
-    val root = Files.createTempDirectory("graft_store_conc").toString
+    val root = Queries.scratchDir("graft_store_conc")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/conc", "float64")
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -231,7 +232,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("compact: many small append files become one sorted file per topic, results identical") {
-    val root = Files.createTempDirectory("graft_compact").toString
+    val root = Queries.scratchDir("graft_compact")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/cmp/a", "float64")
     c.createTopic("/cmp/b", "float64")
@@ -262,7 +263,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("rejected append leaves no phantom auto-created topics behind") {
-    val root = Files.createTempDirectory("graft_phantom").toString
+    val root = Queries.scratchDir("graft_phantom")
     val c = new LocalClient(spark, root, fixedClock)
     // /ph/x does not exist; the append declares float64 rows into what
     // would auto-create as a string topic → rejected, and /ph/x must NOT
@@ -279,7 +280,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("append fit is lossless: same-width sign flips and lossy casts rejected") {
-    val root = Files.createTempDirectory("graft_fits").toString
+    val root = Queries.scratchDir("graft_fits")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/f/i8", "int8")
     c.createTopic("/f/u8", "uint8")
@@ -301,8 +302,8 @@ class StoreSpec extends SparkSpec {
   }
 
   test("session: USE switches between named stores") {
-    val rootA = Files.createTempDirectory("graft_sess_a").toString
-    val rootB = Files.createTempDirectory("graft_sess_b").toString
+    val rootA = Queries.scratchDir("graft_sess_a")
+    val rootB = Queries.scratchDir("graft_sess_b")
     val sess = new graft.api.Session(spark, fixedClock)
     sess.attach("a", s"file://$rootA") // file:// connection-string shape
     sess.attach("b", rootB)            // bare-path shape
@@ -327,7 +328,7 @@ class StoreSpec extends SparkSpec {
 
   test("segmentCount gauge degrades to the last successful count on a " +
       "mid-walk I/O failure, not a false drop to 0") {
-    val root = Files.createTempDirectory("graft_segcount").toString
+    val root = Queries.scratchDir("graft_segcount")
     val store = new ParquetStore(spark, root)
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/g/t", "int64")
@@ -352,7 +353,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("opening a pre-versioning (v1) store auto-upgrades and round-trips") {
-    val root = Files.createTempDirectory("graft_store_v1").toString
+    val root = Queries.scratchDir("graft_store_v1")
     // build a store with current code, then strip the version key to
     // synthesize the legacy sidecar a pre-versioning build wrote
     val c = new LocalClient(spark, root, fixedClock)
@@ -373,7 +374,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("a multi-step migration chain runs every step in order, once") {
-    val root = Files.createTempDirectory("graft_store_chain").toString
+    val root = Queries.scratchDir("graft_store_chain")
     val ran = scala.collection.mutable.ArrayBuffer.empty[Int]
     var persisted = 0
     val chain: Map[Int, (String, Catalog) => Unit] = Map(
@@ -396,7 +397,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("a NEWER store format refuses with both versions named") {
-    val root = Files.createTempDirectory("graft_store_vnew").toString
+    val root = Queries.scratchDir("graft_store_vnew")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/x", "int64")
     val sidecar = java.nio.file.Paths.get(root, "catalog.json")
@@ -461,8 +462,8 @@ class StoreSpec extends SparkSpec {
         Seq(Row(7, "hi"), Row(-1, ""))),
       ("/ty/widen", "int64", "int32", Seq(41, -41)),
       ("/ty/widenarr", "[2]float64", "[2]float32", Seq(Seq(0.5f, 1.5f), Seq(2f, 3f))))
-    val rootA = Files.createTempDirectory("graft_land_driver").toString
-    val rootB = Files.createTempDirectory("graft_land_spark").toString
+    val rootA = Queries.scratchDir("graft_land_driver")
+    val rootB = Queries.scratchDir("graft_land_spark")
     val a = new LocalClient(spark, rootA, fixedClock)
     val b = new LocalClient(spark, rootB, fixedClock)
     cases.foreach { case (topic, topicDdl, ddl, vs) =>
@@ -497,7 +498,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("append, appendBatch and appendRaw submit no Spark job") {
-    val root = Files.createTempDirectory("graft_land_nojob").toString
+    val root = Queries.scratchDir("graft_land_nojob")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/nj", "float64")
     val at = Timestamp.valueOf("2024-01-01 00:00:00")
@@ -513,7 +514,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("a failed driver landing leaves no visible file and no phantom topic") {
-    val root = Files.createTempDirectory("graft_land_fail").toString
+    val root = Queries.scratchDir("graft_land_fail")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/lf", "int64")
     val at = Timestamp.valueOf("2024-01-01 00:00:00")
@@ -546,7 +547,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("an append to existing topics leaves catalog.json untouched") {
-    val root = Files.createTempDirectory("graft_land_sidecar").toString
+    val root = Queries.scratchDir("graft_land_sidecar")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/sc", "float64")
     val at = Timestamp.valueOf("2024-01-01 00:00:00")
@@ -569,7 +570,7 @@ class StoreSpec extends SparkSpec {
   }
 
   test("schema groups read with the catalog schema: no inference job, same rows and types") {
-    val root = Files.createTempDirectory("graft_read_schema").toString
+    val root = Queries.scratchDir("graft_read_schema")
     val c = new LocalClient(spark, root, fixedClock)
     val at = Timestamp.valueOf("2024-01-01 00:00:00")
     val cases: Seq[(String, String, Any)] = Seq(

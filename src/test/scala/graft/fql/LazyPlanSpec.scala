@@ -1,10 +1,10 @@
 package graft.fql
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Row}
 
+import graft.Queries
 import graft.SparkSpec
 import graft.api.LocalClient
 import graft.engine.ParquetStore
@@ -19,7 +19,7 @@ class LazyPlanSpec extends SparkSpec {
   /** Two float64 topics over four files each: an entry every 10 minutes
     * from 2024-12-31, /lp/a cycling 1, 2, 3 and /lp/b always 2. */
   private lazy val client: LocalClient = {
-    val root = Files.createTempDirectory("graft_lazy_plan").toString
+    val root = Queries.scratchDir("graft_lazy_plan")
     val c = new LocalClient(spark, root, clock)
     c.createTopic("/lp", "float64")
     def at(i: Int) = new Timestamp(1735603200000L + i * 600000L)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Queries
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -630,7 +631,7 @@ class CurationSpec extends SparkSpec {
       (i, if (i % 3 == 0) "apple pie apple crumble" else "noise words over here",
         i % 3 == 0))
       .toDF("doc_id", "text", "tgt")
-    val root = java.nio.file.Files.createTempDirectory("dsirstore_spec").toString
+    val root = Queries.scratchDir("dsirstore_spec")
     graft.operators.DsirStore.build(docs, "doc_id", "text", col("tgt"), 64,
       root, "c1")
     assert(graft.operators.DsirStore.isBuilt(root, "c1", 64))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
+import graft.Queries
 import graft.SparkSpec
 
 /** Dedup operators on a tiny corpus with one planted near-dup pair. */
@@ -60,7 +61,7 @@ class DedupSpec extends SparkSpec {
 
   test("SignatureStore: stored-variant pairs identical to inline; params tag " +
       "invalidates; reads are scan-only") {
-    val root = java.nio.file.Files.createTempDirectory("graft_sigstore_spec").toString
+    val root = Queries.scratchDir("graft_sigstore_spec")
     val newDocs = docs.filter(col("doc_id").isin(2L, 3L))
     val refDocs = docs.filter(col("doc_id").isin(1L, 4L))
     val params = SignatureStore.Params()
@@ -315,7 +316,7 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().toSet
     assert(inline.map(t => (t._1, t._2)) == Set((101L, 1L)))
 
-    val root = java.nio.file.Files.createTempDirectory("graft_winstore_spec").toString
+    val root = Queries.scratchDir("graft_winstore_spec")
     SubstringWindowStore.build(ref, "doc_id", "text", root, "ref",
       SubstringWindowStore.Params(k = 8))
     // k comes FROM the store's params — a free k argument could silently
@@ -359,7 +360,7 @@ class DedupSpec extends SparkSpec {
       (102L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
       (103L, "alpha beta gamma delta epsilon zeta eta theta iota kappa")
     ).toDF("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("graft_spanstore_spec").toString
+    val root = Queries.scratchDir("graft_spanstore_spec")
     SubstringWindowStore.build(ref, "doc_id", "text", root, "ref",
       SubstringWindowStore.Params(k = 10))
     val out = Dedup.dropSharedSpansAgainstStored(fresh, "doc_id", "text",
@@ -429,7 +430,7 @@ class DedupSpec extends SparkSpec {
 
     // the store splits clean/hot at build time: windows() excludes the
     // hot hash, hotWindows() surfaces it, stored ≡ inline at the same cap
-    val root = java.nio.file.Files.createTempDirectory("graft_hotstore_spec").toString
+    val root = Queries.scratchDir("graft_hotstore_spec")
     SubstringWindowStore.build(boiler, "doc_id", "text", root, "boiler",
       SubstringWindowStore.Params(k = 10))
     // the store's persisted keys are the internal two-long form, so the

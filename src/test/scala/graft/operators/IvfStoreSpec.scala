@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{Queries, SparkSpec, Tables}
 
 /** The persisted IVF index must be a pure cache: stored probes return
   * byte-identical results to the inline operators on the same centroids,
@@ -19,7 +19,7 @@ class IvfStoreSpec extends SparkSpec {
   private def corpus = Tables.embeddings(spark, dir)
 
   private def buildStore(): String = {
-    val root = Files.createTempDirectory("graft_ivfspec").toString
+    val root = Queries.scratchDir("graft_ivfspec")
     val e = corpus
     val mod = math.ceil(math.sqrt(e.count().toDouble)).toLong
     IvfStore.build(e, e.filter(col("vec_id") % mod === 0),
@@ -88,7 +88,7 @@ class IvfStoreSpec extends SparkSpec {
     val mod = math.ceil(math.sqrt(e.count().toDouble)).toLong
     val cents = e.filter(col("vec_id") % mod === 0)
     // 90% built + 10% appended
-    val root = Files.createTempDirectory("graft_ivfspec_up").toString
+    val root = Queries.scratchDir("graft_ivfspec_up")
     IvfStore.build(e.filter(col("vec_id") % 10 =!= 0), cents,
       "vec_id", "embedding", "vec_id", root, "emb", tag)
     IvfStore.append(e.filter(col("vec_id") % 10 === 0),
@@ -110,7 +110,7 @@ class IvfStoreSpec extends SparkSpec {
     val e = corpus
     val mod = math.ceil(math.sqrt(e.count().toDouble)).toLong
     val cents = e.filter(col("vec_id") % mod === 0)
-    val root = Files.createTempDirectory("graft_ivfspec_crash").toString
+    val root = Queries.scratchDir("graft_ivfspec_crash")
     IvfStore.build(e.filter(col("vec_id") % 10 =!= 0), cents,
       "vec_id", "embedding", "vec_id", root, "emb", tag)
     // simulate the crash window: marker dropped, data half-landed
@@ -142,7 +142,7 @@ class IvfStoreSpec extends SparkSpec {
 
     // appended rows must carry codes from the persisted codebook, not a
     // re-derived one (the batch corpus would give a different subset)
-    val up = Files.createTempDirectory("graft_ivfspec_pqup").toString
+    val up = Queries.scratchDir("graft_ivfspec_pqup")
     IvfStore.build(e.filter(col("vec_id") % 10 =!= 0), cents,
       "vec_id", "embedding", "vec_id", up, "emb", tag)
     IvfStore.append(e.filter(col("vec_id") % 10 === 0),
@@ -171,7 +171,7 @@ class IvfStoreSpec extends SparkSpec {
 
   test("pqSub=0 builds a PQ-less store: float/int8 probes serve, PQ " +
       "probes fail typed; an impossible codebook carries build context") {
-    val root = Files.createTempDirectory("graft_ivfspec_nopq").toString
+    val root = Queries.scratchDir("graft_ivfspec_nopq")
     val e = corpus
     val mod = math.ceil(math.sqrt(e.count().toDouble)).toLong
     IvfStore.build(e, e.filter(col("vec_id") % mod === 0),
@@ -190,7 +190,7 @@ class IvfStoreSpec extends SparkSpec {
     val tiny = e.limit(8)
     val bad = intercept[IllegalArgumentException] {
       IvfStore.build(tiny, tiny.limit(2), "vec_id", "embedding", "vec_id",
-        Files.createTempDirectory("graft_ivfspec_tiny").toString,
+        Queries.scratchDir("graft_ivfspec_tiny"),
         "emb", tag, pqSub = 8, pqCodes = 256)
     }
     assert(bad.getMessage.contains("pqSub = 0"))

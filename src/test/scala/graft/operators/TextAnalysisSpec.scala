@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Queries
 import graft.SparkSpec
 
 class TextAnalysisSpec extends SparkSpec {
@@ -62,7 +63,7 @@ class TextAnalysisSpec extends SparkSpec {
   test("LmStore: stored scoring ≡ inline on the train corpus; unseen floor") {
     val train = Seq((1L, "a a a"), (2L, "a a a b b"), (3L, "z"))
       .toDF("doc_id", "text")
-    val root = java.nio.file.Files.createTempDirectory("lmstore_spec").toString
+    val root = Queries.scratchDir("lmstore_spec")
     LmStore.build(train, "doc_id", "text", root, "c1")
     assert(LmStore.isBuilt(root, "c1"))
     // self-scoring through the store ≡ the inline operator bit-for-bit

@@ -1,6 +1,5 @@
 package graft.plans
 
-import java.nio.file.Files
 import java.time.{Instant, LocalDate}
 
 import org.apache.spark.metrics.source.CodegenMetrics
@@ -11,6 +10,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.Queries
 import graft.SparkSpec
 
 /** Filter constants reach generated code as references: plans that differ
@@ -24,7 +24,7 @@ class ParamLiteralsSpec extends SparkSpec {
 
   // one file, one partition: row order is the file's
   private lazy val table: DataFrame = {
-    val dir = Files.createTempDirectory("graft_param_literals").resolve("t").toString
+    val dir = s"${Queries.scratchDir("graft_param_literals")}/t"
     Seq[(Option[Instant], Option[Long], Double, Option[Int], Option[LocalDate])](
       (Some(ts("1969-12-31T23:59:59.500Z")), Some(-3L), -0.0, Some(-3), Some(day("1969-12-31"))),
       (Some(ts("1970-01-01T00:00:00Z")), Some(0L), 0.0, Some(0), Some(day("1970-01-01"))),

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.Row
 
+import graft.Queries
 import graft.SparkSpec
 import graft.engine.ParquetStore
 
@@ -81,7 +82,7 @@ class FossilImportSpec extends SparkSpec {
   }
 
   test("v2 fixture: import into a ParquetStore reads back typed per prefix") {
-    val root = Files.createTempDirectory("graft_fossil_import_v2").toString
+    val root = Queries.scratchDir("graft_fossil_import_v2")
     val store = new ParquetStore(spark, root)
     val (nTopics, nEntries, nSkipped) =
       FossilDatabase.importInto(spark, s"$fixtures/v2", store)
@@ -107,7 +108,7 @@ class FossilImportSpec extends SparkSpec {
     assert(db.inlineSegments.length == 1)
     assert(decodedRows("v1") == expected("v1"))
     // all-string schemas → the root prefix reads back typed end-to-end
-    val root = Files.createTempDirectory("graft_fossil_import_v1").toString
+    val root = Queries.scratchDir("graft_fossil_import_v1")
     val store = new ParquetStore(spark, root)
     FossilDatabase.importInto(spark, s"$fixtures/v1", store)
     assert(storeRows(store, "/") == usTruncate(expected("v1")))
@@ -119,7 +120,7 @@ class FossilImportSpec extends SparkSpec {
     assert(db.topics == Vector("/", "/fresh"))
     assert(db.schemas == Vector("string", "float64"))
     assert(decodedRows("walonly") == expected("walonly"))
-    val root = Files.createTempDirectory("graft_fossil_import_w0").toString
+    val root = Queries.scratchDir("graft_fossil_import_w0")
     val store = new ParquetStore(spark, root)
     FossilDatabase.importInto(spark, s"$fixtures/walonly", store)
     assert(storeRows(store, "/fresh") == usTruncate(expected("walonly")))
@@ -127,7 +128,7 @@ class FossilImportSpec extends SparkSpec {
 
   test("round-trip: FossilWriter v2 output re-imports identically") {
     import FossilDatabase.{Datum, Segment}
-    val dir = Files.createTempDirectory("graft_fossil_rt").toString
+    val dir = Queries.scratchDir("graft_fossil_rt")
     val h = 1700000000000000000L
     FossilWriter.writeV2(dir,
       topics = Seq("/", "/m"),
@@ -159,10 +160,10 @@ class FossilImportSpec extends SparkSpec {
     // it back out as a fossil directory, and re-open THAT: every row must
     // survive both directions (times at the store's µs precision; export
     // re-sorts globally and re-segments, so compare as ordered sets)
-    val root = Files.createTempDirectory("graft_fossil_exp_store").toString
+    val root = Queries.scratchDir("graft_fossil_exp_store")
     val store = new ParquetStore(spark, root)
     FossilDatabase.importInto(spark, s"$fixtures/v2", store)
-    val out = Files.createTempDirectory("graft_fossil_exp_dir").toString
+    val out = Queries.scratchDir("graft_fossil_exp_dir")
     val (nTopics, nEntries) = FossilExport.export(spark, store, out)
     assert(nTopics == 6 && nEntries == 17L)
 
@@ -183,7 +184,7 @@ class FossilImportSpec extends SparkSpec {
 
   test("corrupt WAL: events before any segment are skipped, not fatal") {
     import FossilDatabase.Datum
-    val dir = Files.createTempDirectory("graft_fossil_corrupt").toString
+    val dir = Queries.scratchDir("graft_fossil_corrupt")
     FossilWriter.appendWal(dir, Seq(
       FossilWriter.walAddEvent(Datum(1L, 0, "orphan".getBytes)), // no segment yet
       FossilWriter.walAddSegment(1700000000000000000L),
@@ -196,7 +197,7 @@ class FossilImportSpec extends SparkSpec {
 
   test("unknown topic ids degrade to a marked topic instead of crashing") {
     import FossilDatabase.{Datum, Segment}
-    val dir = Files.createTempDirectory("graft_fossil_unk").toString
+    val dir = Queries.scratchDir("graft_fossil_unk")
     FossilWriter.writeV2(dir, Seq("/"), Seq("string"),
       Seq(Segment(1700000000000000000L,
         Vector(Datum(1L, 9, "stray".getBytes)))),
@@ -207,7 +208,7 @@ class FossilImportSpec extends SparkSpec {
 
     // ...and importInto LANDS them (under the synthesized binary topic)
     // instead of silently excluding rows whose ddl no catalog topic has
-    val storeRoot = Files.createTempDirectory("graft_fossil_unk_store").toString
+    val storeRoot = Queries.scratchDir("graft_fossil_unk_store")
     val (_, entries, _) = FossilDatabase.importInto(spark, dir,
       new graft.engine.ParquetStore(spark, storeRoot))
     assert(entries == 1L)
@@ -222,7 +223,7 @@ class FossilImportSpec extends SparkSpec {
   test("WAL action parsing matches strconv.Atoi: padded ' 1;...' lines " +
       "are corrupt and skip, not salvage") {
     import FossilDatabase.Datum
-    val dir = Files.createTempDirectory("graft_fossil_pad").toString
+    val dir = Queries.scratchDir("graft_fossil_pad")
     FossilWriter.appendWal(dir, Seq(
       FossilWriter.walAddSegment(1700000000000000000L),
       FossilWriter.walAddEvent(Datum(2L, 0, "kept".getBytes))))

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.Queries
 import graft.SparkSpec
 
 /** WARC parsing against hand-spelled record bytes (an independent
@@ -77,7 +78,7 @@ class WarcSpec extends SparkSpec {
   }
 
   test("distributed read over a mixed plain/gz directory") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc_spec").toString
+    val dir = Queries.scratchDir("graft_warc_spec")
     val recs = (1L to 6L).map(i =>
       Warc.Record(Map("WARC-Type" -> "response",
         "WARC-Target-URI" -> s"http://x/$i",

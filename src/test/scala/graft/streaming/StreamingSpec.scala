@@ -1,10 +1,10 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.Queries
 import graft.SparkSpec
 import StreamingIngest._
 
@@ -13,7 +13,7 @@ class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    Queries.scratchDir(prefix)
 
   test("greedySample carries last-kept state across micro-batches per topic") {
     implicit val ctx = spark.sqlContext

@@ -1,11 +1,11 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.Queries
 import graft.SparkSpec
 import graft.api.{LocalClient, RemoteClient, WireServer}
 import graft.fql.Compiler
@@ -24,10 +24,10 @@ class WireFollowStreamSpec extends SparkSpec {
 
   test("follow cycles feed a checkpointed streaming FQL query: per-cycle " +
       "counts == landed entries, exactly once, final == batch FQL") {
-    val srcRoot = Files.createTempDirectory("graft_wfs_src").toString
-    val dstRoot = Files.createTempDirectory("graft_wfs_dst").toString
-    val sink = Files.createTempDirectory("graft_wfs_sink").toString
-    val ckpt = Files.createTempDirectory("graft_wfs_ckpt").toString
+    val srcRoot = Queries.scratchDir("graft_wfs_src")
+    val dstRoot = Queries.scratchDir("graft_wfs_dst")
+    val sink = Queries.scratchDir("graft_wfs_sink")
+    val ckpt = Queries.scratchDir("graft_wfs_ckpt")
     val src = new LocalClient(spark, srcRoot, fixedClock)
     src.createTopic("/live", "float64")
     val t0 = 1735600000L * 1000L // ms

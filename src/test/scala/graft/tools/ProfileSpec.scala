@@ -6,6 +6,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import graft.Queries
 import graft.SparkSpec
 
 /** `tools.Profile` driven in-process on sf0.001, one cheap row per mode,
@@ -37,7 +38,7 @@ class ProfileSpec extends SparkSpec {
   }
 
   test("--plan writes the row's plan and a stream row's inner plan") {
-    val out = Files.createTempDirectory("graft_profile_plan")
+    val out = Paths.get(Queries.scratchDir("graft_profile_plan"))
     profile(sf, "fql_avg", "stream_nll_stored_inner", "--plan", out.toString)
     Seq("fql_avg.txt", "stream_nll_stored_inner.txt").foreach { f =>
       val txt = new String(Files.readAllBytes(out.resolve(f)), StandardCharsets.UTF_8)

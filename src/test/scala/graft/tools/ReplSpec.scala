@@ -1,8 +1,8 @@
 package graft.tools
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
+import graft.Queries
 import graft.SparkSpec
 import graft.api.LocalClient
 import graft.fql.Compiler
@@ -13,7 +13,7 @@ class ReplSpec extends SparkSpec {
   private val fixedClock: Compiler.Clock = () => 1735689600L * 1000000000L
 
   test("csv and json writers render query results line-per-row") {
-    val root = Files.createTempDirectory("graft_repl").toString
+    val root = Queries.scratchDir("graft_repl")
     val c = new LocalClient(spark, root, fixedClock)
     c.createTopic("/t", "float64")
     c.append("/t", 1.5, Timestamp.valueOf("2024-01-01 00:00:00"))
@@ -118,6 +118,15 @@ class ReplSpec extends SparkSpec {
       == Map("a" -> """C:\temp"""))
     assert(Repl.parseDatum("""{"a": string}""", """"a": "x\\y"""")
       == Map("a" -> """x\y"""))
+  }
+
+  test("local append parses the datum by the inherited schema") {
+    val c = new LocalClient(spark, Queries.scratchDir("graft_repl_inherit"), fixedClock)
+    c.createTopic("/a", "float64")
+    Repl.localAppend(c, "/a/b", "1.5")
+    val df = c.query("all in /a/b")
+    assert(df.schema("value").dataType == org.apache.spark.sql.types.DoubleType)
+    assert(df.collect().map(_.getAs[Double]("value")).toSeq == Seq(1.5))
   }
 
   test("effectiveDdl mirrors the server's inheritance walk") {

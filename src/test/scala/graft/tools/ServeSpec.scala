@@ -2,6 +2,7 @@ package graft.tools
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.Queries
 import graft.api.ServeConfig
 
 /** CLI argument parsing + config-file loading for the standalone server
@@ -70,7 +71,7 @@ class ServeSpec extends AnyFunSuite {
     import java.io.{DataInputStream, DataOutputStream}
     import java.net.Socket
     val spark = graft.TestSpark.spark
-    val base = java.nio.file.Files.createTempDirectory("graft_serve_cfg")
+    val base = java.nio.file.Paths.get(Queries.scratchDir("graft_serve_cfg"))
     val toml = s"[database]\ndirectory = \"$base\"\n[database.test]\n"
     val cfgPath = base.resolve("fossil.toml")
     java.nio.file.Files.write(cfgPath, toml.getBytes("UTF-8"))
