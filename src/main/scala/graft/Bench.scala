@@ -1,5 +1,7 @@
 package graft
 
+import graft.engine.Json
+
 /** Driver-run benchmark: times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR and prints ONE clean JSON line on stdout
   * (build.sbt routes forked stdout around sbt's logger).
@@ -160,9 +162,8 @@ object Bench {
       s""""io_calib_ref_s":${f(IoCalibRefS)},"total_io_norm_s":${f(totalIoNormD)},""" +
       s""""per_row_io_norm_s":$perRowIoNorm"""
     val failedArr = errors.keys.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val errJson = errors.map { case (k, v) =>
-      "\"" + k + "\":\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    }.mkString("{", ",", "}")
+    val errJson = errors.map { case (k, v) => s"${Json.quote(k)}:${Json.quote(v)}" }
+      .mkString("{", ",", "}")
     val harnessTotal = f(harnessDeltas.map(_._2).sum / 1e9)
     val calibMed = f(calibs.sorted.apply(calibs.size / 2))
     val ioCalibMed = f(ioCalibs.sorted.apply(ioCalibs.size / 2))

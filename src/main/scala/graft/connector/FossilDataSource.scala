@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.engine.{Catalog, FossilSchema, ParquetStore, StoreFs, StoreIndex, StoreMigration, TopicFiles}
+import graft.engine.{Catalog, FossilSchema, Json, ParquetStore, StoreFs, StoreIndex, StoreMigration, TopicFiles}
 import graft.engine.FossilSchema.{SType, SUnknown}
 
 /** `spark.read.format("fossil")` — the engine's front door for plain Spark
@@ -111,11 +111,9 @@ private[connector] object FossilDataSource {
     * (a fossil table IS one store; union two stores in the query). */
   private def singlePathOf(pathsJson: Option[String]): Option[String] =
     pathsJson.map { js =>
-      val items = """"((?:[^"\\]|\\.)*)"""".r
-        .findAllMatchIn(js).map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-        .toList
+      val items = Json.stringArray(js, "fossil source paths option")
       items match {
-        case one :: Nil => one
+        case Vector(one) => one
         case _ => throw new IllegalArgumentException(
           s"fossil source reads exactly one store root, got ${items.length} paths")
       }

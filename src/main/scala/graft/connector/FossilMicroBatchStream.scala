@@ -5,6 +5,8 @@ import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFacto
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types.StructType
 
+import graft.engine.Json
+
 /** `spark.readStream.format("fossil")` — the DSv2 micro-batch half of the
   * store connector (r17 verdict item 2). The store's append-only file
   * tree IS a replayable log: every append/streaming-ingest micro-batch
@@ -85,20 +87,13 @@ private[connector] object FossilMicroBatchStream {
   final case class FossilStreamOffset(files: Seq[FossilScan.DataFile]) extends Offset {
     override def json(): String =
       files.sortBy(_.path).map { f =>
-        s"""{"p":${quote(f.path)},"l":${f.length},"t":${quote(f.topic)}}"""
+        s"""{"p":${Json.quote(f.path)},"l":${f.length},"t":${Json.quote(f.topic)}}"""
       }.mkString("[", ",", "]")
   }
 
-  private def quote(s: String): String =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
-  /** Minimal parser for the exact array-of-flat-objects shape [[json]]
-    * writes (same convention as the store's catalog sidecar parser). */
-  def parseFiles(json: String): Seq[FossilScan.DataFile] = {
-    val obj = """\{"p":"((?:[^"\\]|\\.)*)","l":(\d+),"t":"((?:[^"\\]|\\.)*)"\}""".r
-    def un(s: String) = s.replace("\\\"", "\"").replace("\\\\", "\\")
-    obj.findAllMatchIn(json).map { m =>
-      FossilScan.DataFile(un(m.group(1)), m.group(2).toLong, un(m.group(3)))
-    }.toSeq
-  }
+  /** The file set of an offset [[FossilStreamOffset.json]] wrote. */
+  def parseFiles(json: String): Seq[FossilScan.DataFile] =
+    Json.objectArray(json, "fossil stream offset").map { f =>
+      FossilScan.DataFile(f.string("p"), f.long("l"), f.string("t"))
+    }
 }

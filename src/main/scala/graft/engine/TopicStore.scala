@@ -461,10 +461,10 @@ object ParquetStore {
 
   def saveCatalog(root: String, catalog: Catalog): Unit = {
     StoreFs.mkdirs(root)
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
+    def line(k: String, v: String) = s"  ${Json.quote(k)}: ${Json.quote(v)}"
     val json =
-      (s"""  "${StoreMigration.VersionKey}": "${StoreMigration.CurrentVersion}"""" +:
-        catalog.list.map { case (t, s) => s"""  "${esc(t)}": "${esc(s.ddl)}"""" })
+      (line(StoreMigration.VersionKey, StoreMigration.CurrentVersion.toString) +:
+        catalog.list.map { case (t, s) => line(t, s.ddl) })
         .mkString("{\n", ",\n", "\n}")
     // temp write + atomic overwrite-rename, scheme-agnostic (StoreFs doc)
     StoreFs.writeAtomic(s"$root/catalog.json", json.getBytes(StandardCharsets.UTF_8))
@@ -478,17 +478,13 @@ object ParquetStore {
     val p = s"$root/catalog.json"
     if (StoreFs.exists(p)) {
       val json = new String(StoreFs.readBytes(p), StandardCharsets.UTF_8)
-      // minimal parser for the flat {"topic": "ddl", ...} shape we write
-      val entry = """"((?:[^"\\]|\\.)*)"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-      entry.findAllMatchIn(json).foreach { m =>
-        def un(s: String) = s.replace("\\\"", "\"").replace("\\\\", "\\")
-        if (un(m.group(1)) == StoreMigration.VersionKey)
-          version = un(m.group(2)).trim.toInt
+      Json.stringMap(json, p).foreach { case (k, v) =>
+        if (k == StoreMigration.VersionKey) version = v.trim.toInt
         else
           // restore verbatim — replaying create() would re-run inheritance/
           // conflict logic in sorted order, which can reject or silently
           // rewrite schemas that were legal in their original creation order
-          c.restore(un(m.group(1)), FossilSchema.parse(un(m.group(2))))
+          c.restore(k, FossilSchema.parse(v))
       }
     }
     (c, version)

@@ -65,17 +65,16 @@ object DsirStore {
     }
   }
 
-  /** Per-JVM broadcast cache: re-reading + re-broadcasting the weight
-    * table on EVERY score call leaked one (small, dim-sized) broadcast
-    * per invocation — unbounded over a long scoring session. Keyed by
-    * (root, corpusId, marker text, marker mtime): the marker is written
-    * LAST by [[build]] and carries a per-build nonce, so a rebuild under
-    * the same root always changes the marker TEXT and can never serve
-    * stale weights from here (mtime stays in the key only for pre-nonce
-    * stores, where it is the best-effort freshness signal). */
-  private val bcCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String, Long),
-    org.apache.spark.broadcast.Broadcast[Array[Long]]]
+  /** One broadcast weight table per store, replaced when its commit
+    * marker changes (re-broadcasting per score call leaked one broadcast
+    * per call). [[build]] writes a per-build nonce into the marker, so a
+    * rebuild always changes its text; mtime covers pre-nonce markers. A
+    * replaced broadcast is not destroyed — a frame from an earlier score
+    * may still run on it; Spark's ContextCleaner reclaims it. */
+  private[operators] final case class Weights(
+      marker: String, mtime: Long, bc: org.apache.spark.broadcast.Broadcast[Array[Long]])
+  private[operators] val bcCache =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Weights]
 
   /** Score `docs` under the stored weights — [[Curation.dsirScore]]'s
     * output shape `(id, n_grams, score_e6)`. The dim comes from the
@@ -91,17 +90,19 @@ object DsirStore {
     val dim = markerDim(m).getOrElse(throw new IllegalStateException(
       s"DSIR store $root/$corpusId was built under '$m', need '$Tag' — rebuild"))
     val mtime = s.markerMtime.getOrElse(0L)
-    val bc = bcCache.computeIfAbsent((root, corpusId, m, mtime), _ => {
-      val rows = s.read(spark, "weights")
-        .select(col("j").cast("int"), col("lr_e6").cast("long"))
-        .collect()
-      require(rows.length == dim,
-        s"DSIR store $root/$corpusId holds ${rows.length} buckets, marker says $dim")
-      val lrArr = new Array[Long](dim)
-      rows.foreach(r => lrArr(r.getInt(0)) = r.getLong(1))
-      spark.sparkContext.broadcast(lrArr)
-    })
-    Curation.dsirScore(docs, idCol, textCol, bc, dim)
+    val w = bcCache.compute((root, corpusId), (_, old) =>
+      if (old != null && old.marker == m && old.mtime == mtime) old
+      else {
+        val rows = s.read(spark, "weights")
+          .select(col("j").cast("int"), col("lr_e6").cast("long"))
+          .collect()
+        require(rows.length == dim,
+          s"DSIR store $root/$corpusId holds ${rows.length} buckets, marker says $dim")
+        val lrArr = new Array[Long](dim)
+        rows.foreach(r => lrArr(r.getInt(0)) = r.getLong(1))
+        Weights(m, mtime, spark.sparkContext.broadcast(lrArr))
+      })
+    Curation.dsirScore(docs, idCol, textCol, w.bc, dim)
   }
 
 }

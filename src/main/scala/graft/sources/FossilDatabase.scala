@@ -8,7 +8,7 @@ import scala.util.Try
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.{FossilSchema, ParquetStore, StoreFs}
+import graft.engine.{FossilSchema, Json, ParquetStore, StoreFs}
 import graft.functions.FossilDecode
 
 /** Reader for fossil's on-disk database layout — the migration path OFF a
@@ -124,9 +124,16 @@ object FossilDatabase {
     // rest of the file = RFC3339 STime; informational only
 
     val files = (0 until segmentCount).map(i => s"$dir/segments/$i").toVector
-    val topics = jsonStringArray(inflate(StoreFs.readBytes(s"$dir/topics")))
-      .map(normalizeTopicName)
-    val schemas = jsonStringArray(inflate(StoreFs.readBytes(s"$dir/schemas")))
+    // zlib over `json.Marshal` of a `[]string` (`\uXXXX` escapes for `<`, `>`, `&`)
+    def strings(name: String) = {
+      val p = s"$dir/$name"
+      val in = new java.util.zip.InflaterInputStream(
+        new java.io.ByteArrayInputStream(StoreFs.readBytes(p)))
+      try Json.stringArray(new String(in.readAllBytes(), StandardCharsets.UTF_8), p)
+      finally in.close()
+    }
+    val topics = strings("topics").map(normalizeTopicName)
+    val schemas = strings("schemas")
     Db(version, topics, schemas, files, Vector.empty, Vector.empty, Vector.empty, 0)
   }
 
@@ -235,68 +242,6 @@ object FossilDatabase {
     }
     snapshot.copy(topics = topics, schemas = schemas, walSegments = walSegments,
       walTail = walTail, walSkipped = snapshot.walSkipped + skipped)
-  }
-
-  // ------------------------------------------------------- zlib + mini-JSON
-
-  private def inflate(bytes: Array[Byte]): String = {
-    val in = new java.util.zip.InflaterInputStream(
-      new java.io.ByteArrayInputStream(bytes))
-    try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-    finally in.close()
-  }
-
-  /** Parse a JSON array of strings (what `json.Marshal` emits for
-    * `[]string` — including its `\uXXXX` escapes for `<`, `>`, `&`). */
-  private[sources] def jsonStringArray(json: String): Vector[String] = {
-    val out = Vector.newBuilder[String]
-    var i = 0
-    def skipWs(): Unit = while (i < json.length && json(i).isWhitespace) i += 1
-    skipWs()
-    if (i >= json.length || json(i) != '[')
-      throw new IllegalArgumentException("expected JSON array")
-    i += 1
-    skipWs()
-    if (i < json.length && json(i) == ']') return out.result()
-    while (i < json.length) {
-      skipWs()
-      if (i >= json.length || json(i) != '"')
-        throw new IllegalArgumentException(s"expected string at $i")
-      i += 1
-      val sb = new StringBuilder
-      while (i < json.length && json(i) != '"') {
-        if (json(i) == '\\') {
-          i += 1
-          if (i >= json.length)
-            throw new IllegalArgumentException("unterminated JSON array")
-          json(i) match {
-            case '"' => sb += '"'; case '\\' => sb += '\\'; case '/' => sb += '/'
-            case 'b' => sb += '\b'; case 'f' => sb += '\f'; case 'n' => sb += '\n'
-            case 'r' => sb += '\r'; case 't' => sb += '\t'
-            case 'u' =>
-              if (i + 5 > json.length)
-                throw new IllegalArgumentException("unterminated JSON array")
-              sb += Integer.parseInt(json.substring(i + 1, i + 5), 16).toChar
-              i += 4
-            case c => throw new IllegalArgumentException(s"bad escape \\$c")
-          }
-        } else sb += json(i)
-        i += 1
-      }
-      if (i >= json.length)
-        throw new IllegalArgumentException("unterminated JSON array")
-      i += 1 // closing quote
-      out += sb.result()
-      skipWs()
-      if (i >= json.length)
-        throw new IllegalArgumentException("unterminated JSON array")
-      json(i) match {
-        case ',' => i += 1
-        case ']' => return out.result()
-        case c => throw new IllegalArgumentException(s"expected , or ] got $c")
-      }
-    }
-    throw new IllegalArgumentException("unterminated JSON array")
   }
 
   // ------------------------------------------------------------ DataFrames

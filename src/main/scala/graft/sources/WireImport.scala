@@ -10,6 +10,7 @@ import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.api.{LocalClient, RemoteClient, WireEntry, WireException}
+import graft.engine.Json
 
 /** Bulk import from a LIVE fossil server into a [[graft.engine.ParquetStore]]
   * — the wire-access migration path (the offline twin is
@@ -131,13 +132,11 @@ object WireImport {
     val p = stateFile(root)
     if (!Files.exists(p)) return Map.empty
     val json = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-    val entry = """"((?:[^"\\]|\\.)*)"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-    def un(s: String) = s.replace("\\\"", "\"").replace("\\\\", "\\")
     val Done = """done=(-?\d+)(?: imported=(\d+))?""".r
     val DonePending = """done=(-?\d+)(?: imported=(\d+))? pending=(-?\d+):(-?\d+)""".r
     def imp(s: String): Long = Option(s).map(_.toLong).getOrElse(0L)
-    entry.findAllMatchIn(json).map { m =>
-      un(m.group(1)) -> (un(m.group(2)) match {
+    Json.stringMap(json, p.toString).map { case (topic, value) =>
+      topic -> (value match {
         case DonePending(d, i, lo, hi) =>
           TopicState(d.toLong, Some((lo.toLong, hi.toLong)), imp(i))
         case Done(d, i) => TopicState(d.toLong, None, imp(i))
@@ -148,13 +147,12 @@ object WireImport {
   }
 
   private[graft] def saveState(root: String, st: Map[String, TopicState]): Unit = {
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
     val json = st.toSeq.sortBy(_._1).map { case (t, s) =>
       val v = s.pending match {
         case Some((lo, hi)) => s"done=${s.done} imported=${s.imported} pending=$lo:$hi"
         case None => s"done=${s.done} imported=${s.imported}"
       }
-      s"""  "${esc(t)}": "$v""""
+      s"  ${Json.quote(t)}: ${Json.quote(v)}"
     }.mkString("{\n", ",\n", "\n}")
     val tmp = Paths.get(root, "._wire_import.json.tmp")
     Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))

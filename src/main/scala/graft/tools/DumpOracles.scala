@@ -1,24 +1,11 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
 /** Dump SparkEntry.oracleSql to a JSON file without starting Spark —
   * lets scripts/check.py validate oracle SQL in DuckDB quickly. */
 object DumpOracles {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "/tmp/oracle_sql.json"
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(out), json)
+    graft.Verify.writeOracleSql(out)
     println(s"wrote $out")
   }
 }

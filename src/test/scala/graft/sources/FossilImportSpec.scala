@@ -242,7 +242,7 @@ class FossilImportSpec extends SparkSpec {
     for (bad <- Seq("[\"a", "[\"a\"", "[\"a\\", "[\"a\\u00",
         "[\"a\" ", "[\"a\",")) {
       val e = intercept[IllegalArgumentException](
-        FossilDatabase.jsonStringArray(bad))
+        graft.engine.Json.stringArray(bad, "topics"))
       assert(e.getMessage.contains("unterminated JSON array"), s"'$bad' -> $e")
     }
   }

@@ -316,9 +316,12 @@ class StreamingSpec extends SparkSpec {
     val back = spark.read.parquet(out)
     assert(back.count() == 2)
     assert(back.select("topic_root").as[String].collect().toSet == Set("events", "logs"))
-    // restart from the same checkpoint with no new data → no duplicates
-    val in2 = MemoryStream[Entry]
-    // (fresh source; checkpoint prevents re-emitting committed files)
-    assert(spark.read.parquet(out).count() == 2)
+    // restart on the same source from the same checkpoint: the committed
+    // batch does not re-emit, the new entry lands once
+    in.addData(Entry(3, "/events/view", 3.0))
+    writeEntries(in.toDF(), out, ckpt, Trigger.AvailableNow()).awaitTermination(60000)
+    val again = spark.read.parquet(out)
+    assert(again.count() == 3)
+    assert(again.select("t_us").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
   }
 }
